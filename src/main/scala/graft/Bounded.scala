@@ -13,6 +13,9 @@ import org.apache.spark.sql.Dataset
   *    and THROWS if the frame exceeds the declared cap — it asserts
   *    boundedness rather than silently truncating, because a truncation
   *    would corrupt results where a crash surfaces the plan bug.
+  *  - [[Bounded.upTo]] is the same single `take` without the assertion:
+  *    an over-cap frame answers `None`, for callers that fall back to a
+  *    distributed path instead of failing.
   *  - [[Bounded.one]] is the single-row contract (global aggregates,
   *    argmax probes): exactly one row, or it throws.
   *
@@ -23,14 +26,22 @@ import org.apache.spark.sql.Dataset
   */
 object Bounded {
 
-  /** All rows of `ds`, asserting there are at most `cap` of them. */
-  def collect[T](ds: Dataset[T], cap: Int, what: String): Array[T] = {
+  /** All rows of `ds` if there are at most `cap` of them, else `None` —
+    * for callers with a distributed fallback for the over-cap case (the
+    * connected-components driver finish). Fetches at most `cap + 1` rows,
+    * so probing an unbounded frame costs one bounded `take`, never the
+    * frame. `what` names the fetch, as in every Bounded call site.
+    */
+  def upTo[T](ds: Dataset[T], cap: Int, what: String): Option[Array[T]] = {
     val rows = ds.take(cap + 1)
-    require(rows.length <= cap,
-      s"Bounded.collect('$what'): frame exceeded its declared driver-side " +
-        s"cap of $cap rows — the plan is fetching unbounded data")
-    rows
+    if (rows.length <= cap) Some(rows) else None
   }
+
+  /** All rows of `ds`, asserting there are at most `cap` of them. */
+  def collect[T](ds: Dataset[T], cap: Int, what: String): Array[T] =
+    upTo(ds, cap, what).getOrElse(throw new IllegalArgumentException(
+      s"Bounded.collect('$what'): frame exceeded its declared driver-side " +
+        s"cap of $cap rows — the plan is fetching unbounded data"))
 
   /** RDD variant (the rankSelect sort-fallback's zipWithIndex path). */
   def collectRdd[T: scala.reflect.ClassTag](

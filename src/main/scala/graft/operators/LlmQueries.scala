@@ -1283,14 +1283,18 @@ object LlmQueries {
     // bucket graph by min-label propagation to a fixed point — the full
     // answer to "keep exactly one doc per duplicate CLUSTER", where q83's
     // 1-hop canonical-min splits chains (A~B~C with A,C sharing no bucket
-    // resolves to two canonicals there; here to one). Each round is ONE
-    // shuffle join (edges ⋈ labels on dst) + a groupBy-min — the identical
-    // shape at 100 TB — and label propagation over a bucket graph converges
-    // in O(diameter) ≤ O(log n) rounds for dup clusters (diameter is tiny:
-    // chains of re-crawls/templates, not arbitrary graphs). The driver-side
-    // loop only compares two scalar aggregates per round; all data stays
-    // distributed. The oracle is DuckDB's recursive transitive closure over
-    // the same edge set.
+    // resolves to two canonicals there; here to one). Size dispatch on
+    // the edge count (see [[labelPropagation]]): an edge list of at most
+    // DriverRows (2M) rows is fetched ONCE and finished by union-find on
+    // the driver — one capped fetch instead of at least one Spark job
+    // (a checkpoint barrier and its driver round trip) per propagation
+    // round, and at small inputs those round trips are the cost. A
+    // larger list runs the distributed loop: each round is ONE join
+    // (edges ⋈ frontier labels on dst) + a groupBy-min — the
+    // identical shape at 100 TB — converging in O(log diameter) rounds by
+    // pointer halving, with only two scalar aggregates per round on the
+    // driver. Both paths give the same min-id labels. The oracle is
+    // DuckDB's recursive transitive closure over the same edge set.
     Q("q87_dedup_cc", Some(s"""
       WITH RECURSIVE bands AS (${bandTableSql(chainCorpusSql)}),
       capped AS (${cappedSql("bands")}),
@@ -4156,11 +4160,22 @@ object LlmQueries {
         (col("offset") + row_number().over(w)).as("shuffle_rank"))
   }
 
-  /** Min-label propagation to a fixed point over the LSH bucket graph of
+  /** Connected components (min-id labels) over the LSH bucket graph of
     * `corpus` (doc_id, text) — the q87 kernel, public so specs can run it
-    * on controlled corpora. Output: (doc_id, canonical, kept).
+    * on controlled corpora. Output: (doc_id, canonical, kept). The star
+    * edge list goes to [[labelPropagation]], which finishes it on the
+    * driver in one fetch when it has at most [[DriverRows]] edges (one
+    * Spark job instead of one or more per propagation round) and runs
+    * the distributed round loop otherwise.
     */
-  def connectedComponents(corpus: DataFrame): DataFrame = {
+  def connectedComponents(corpus: DataFrame): DataFrame =
+    labelPropagation(corpus.select("doc_id"), starEdges(corpus))._1
+
+  /** The symmetric (src, dst) star edge list [[connectedComponents]] runs
+    * on — its own method so DedupSpec can feed the same edges to both CC
+    * paths.
+    */
+  private[graft] def starEdges(corpus: DataFrame): DataFrame = {
     // STAR edges per CAPPED bucket (r10; r9 joined all pairs within each
     // bucket): every member ↔ the bucket's min doc_id. Connectivity — and
     // hence components and their min labels — is identical to the
@@ -4181,7 +4196,7 @@ object LlmQueries {
     // map-side explode of the two orientations (a union of the star rows
     // with their own swap would evaluate the minhash tree twice).
     val w = Window.partitionBy(col("bk64"))
-    val edges = bandTable(corpus)
+    bandTable(corpus)
       .filter(col("band_key").isNotNull)
       .select(col("doc_id"), xxhash64(col("band"), col("band_key")).as("bk64"))
       .withColumn("bucket_n", count(lit(1)).over(w))
@@ -4191,31 +4206,143 @@ object LlmQueries {
         struct(col("doc_id").as("src"), col("bmin").as("dst")),
         struct(col("bmin").as("src"), col("doc_id").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
-    labelPropagation(corpus.select("doc_id"), edges)._1
   }
 
-  /** The q87 loop itself over an EXPLICIT symmetric edge list (src, dst) —
-    * split out so DedupSpec can inject an exact chain graph of known
-    * diameter d and pin the pointer-halving claim as a measured round
-    * count (≤ ceil(log2(d)) + 2), the way PlanAuditSpec pins plans.
-    * Returns (labels, rounds); rounds counts every executed propagation
-    * round including the final no-change confirmation round (the round
-    * whose empty change-set ends the loop).
-    *
-    * Contract: `docs.doc_id` must be LongType. `edgesIn` must be
-    * symmetric; self-edges are NOT required — each doc's own current label
-    * always participates in the min, so labels are monotone non-increasing
-    * regardless of edge shape (without that, a self-edge-free symmetric
-    * chain can swap labels forever while an empty per-round change-set
-    * reports a false fixed point).
+  /** Rows the driver takes in one piece: a frame under it may broadcast
+    * (Spark builds every broadcast on the driver), and a CC edge list of
+    * at most this many rows is fetched and finished by union-find on the
+    * driver ([[labelPropagation]]). One figure for both decisions.
     */
-  def labelPropagation(docs: DataFrame, edgesIn: DataFrame,
-      broadcastChaseBelow: Long = 2000000L,
-      checkpointDir: Option[String] = None,
+  val DriverRows = 2000000
+
+  /** Connected components by min label over an EXPLICIT symmetric edge
+    * list (src, dst): every doc's `canonical` is the smallest id of its
+    * component, `kept` marks the canonical doc itself. Returns
+    * (labels, rounds) — labels as (doc_id, canonical, kept), rounds the
+    * distributed propagation rounds that ran (0 on the driver finish).
+    *
+    * A size dispatch over two paths with identical labels (a min-id label
+    * is a property of the component, not of the algorithm that finds it;
+    * DedupSpec pins the two paths equal):
+    *  - DRIVER FINISH, when one orientation (src < dst) of the deduplicated
+    *    edge list has at most [[DriverRows]] rows: ONE capped fetch
+    *    ([[graft.Bounded.upTo]]), union-find with min-root unions on the
+    *    driver, and the sparse labels (canonical < doc_id) expanded over
+    *    `docs` through a broadcast variable. The loop pays at least one
+    *    Spark job per round — a checkpoint barrier plus its driver round
+    *    trip — for ~log2(diameter) + 2 rounds, and at small inputs those
+    *    round trips ARE the cost; one capped fetch replaces all of them.
+    *  - DISTRIBUTED LOOP ([[labelPropagationLoop]]) otherwise. The probe
+    *    stops after cap + 1 rows of the same src-partitioned edge cache
+    *    the loop reads, so falling back rebuilds nothing from the input.
+    *
+    * The cap is a property of the input (its edge count), not a setting.
+    * Contract: `docs.doc_id` must be LongType; `edgesIn` must be
+    * symmetric, self-edges NOT required.
+    */
+  def labelPropagation(docs: DataFrame, edgesIn: DataFrame): (DataFrame, Int) =
+    withEdgeCache(edgesIn) { edges =>
+      val s = docs.sparkSession
+      import s.implicits._
+      val oneWay = edges.filter(col("src") < col("dst"))
+        .select("src", "dst").as[(Long, Long)]
+      graft.Bounded.upTo(oneWay, DriverRows, "CC edge list, one orientation") match {
+        case Some(e) =>
+          // expand through a broadcast VARIABLE, not a join: Spark collects
+          // a broadcast join's build side with a job even when it is a
+          // local frame, and here the labels are already on the driver
+          val labels = s.sparkContext.broadcast(unionFind(e))
+          val canonical = udf((id: Long) => labels.value.getOrElse(id, id))
+          val out = docs.select(col("doc_id"), canonical(col("doc_id")).as("canonical"))
+            .withColumn("kept", col("canonical") === col("doc_id"))
+            .localCheckpoint(true)
+          // a local checkpoint never recomputes its input, so the labels
+          // are dead once it has materialized
+          labels.destroy()
+          (out, 0)
+        case None =>
+          labelPropagationLoop(docs, edges, DriverRows, None, (_, _, _) => ())
+      }
+    }
+
+  /** Runs `f` over the CC edge cache — `edgesIn` partitioned on src,
+    * deduplicated and persisted — and drops the cache when `f` returns
+    * (both CC paths return an eagerly checkpointed result, so nothing
+    * still reads it). Partitioning and dedup serve the loop; the driver
+    * finish only needs the dedup.
+    *
+    * Partitioned on SRC, once, for the loop: every round aggregates
+    * min-per-src — round 1 directly (groupBy(src) over the cache), later
+    * rounds after a broadcast join that PRESERVES the streamed side's
+    * partitioning — so a src-partitioned cache makes every round's
+    * aggregate exchange-free: after the build, no round moves the edge
+    * list at all while the frontier broadcasts. (A frontier too big to
+    * broadcast re-shuffles edges dst-wards for that round's sort-merge
+    * join; that regime is the first round or two of a giant corpus,
+    * where a shuffle per round is the floor anyway.) ONE shuffle for
+    * build+dedup, not two: repartition FIRST, then dropDuplicates —
+    * hash(src) is a subset of the (src, dst) grouping keys, so the
+    * dedup aggregate satisfies its clustered distribution in place and
+    * EnsureRequirements inserts no second exchange.
+    * LAZY persist: an eager `edges.count()` would add one driver-job
+    * barrier per CC consumer purely to materialize the cache; instead
+    * its first reader, [[labelPropagation]]'s capped probe, fills it
+    * (adaptive execution builds a whole cache as one query stage), and
+    * on the fallback the loop's rounds read it as they did before.
+    */
+  private[graft] def withEdgeCache[T](edgesIn: DataFrame)(f: DataFrame => T): T = {
+    val edges = edgesIn.repartition(col("src"))
+      .dropDuplicates("src", "dst").persist()
+    try f(edges) finally edges.unpersist()
+  }
+
+  /** Union-find with min-root unions over an undirected edge list: a
+    * union always hangs the larger root under the smaller, so every root
+    * is the smallest id of its set and find(x) IS x's min label. Returns
+    * the sparse labels the loop also converges to: id -> canonical for
+    * every id with canonical < id; ids absent from it label themselves.
+    * Only non-roots ever enter `parent`, and the last pass points each
+    * straight at its root.
+    */
+  private def unionFind(edges: Array[(Long, Long)]): scala.collection.mutable.LongMap[Long] = {
+    val parent = new scala.collection.mutable.LongMap[Long](edges.length)
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.contains(r)) r = parent(r)
+      var c = x // path compression
+      while (c != r) { val next = parent(c); parent(c) = r; c = next }
+      r
+    }
+    for ((a, b) <- edges) {
+      val (ra, rb) = (find(a), find(b))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    parent.keys.toArray.foreach(find)
+    parent
+  }
+
+  /** The distributed loop behind [[labelPropagation]], for edge lists
+    * over [[DriverRows]] — split out so DedupSpec can inject an exact
+    * chain graph of known diameter d and pin the pointer-halving claim as
+    * a measured round count (≤ ceil(log2(d)) + 2), the way PlanAuditSpec
+    * pins plans. Its round-per-job structure is logarithmic-round label
+    * propagation in the style of Kiveris et al. (SoCC 2014). `edges` is
+    * the src-partitioned, deduplicated cache [[withEdgeCache]] builds; the
+    * caller owns it. Returns (labels, rounds); rounds counts every
+    * executed propagation round including the final no-change
+    * confirmation round (the round whose empty change-set ends the loop).
+    *
+    * Each doc's own current label always participates in the min, so
+    * labels are monotone non-increasing regardless of edge shape (without
+    * that, a self-edge-free symmetric chain can swap labels forever while
+    * an empty per-round change-set reports a false fixed point).
+    */
+  private[graft] def labelPropagationLoop(docs: DataFrame, edges: DataFrame,
+      broadcastChaseBelow: Long, checkpointDir: Option[String],
       // per-round observability hook: (round, frontierN, deltaN) as the
       // loop saw them — lets specs pin the observed sizes against
       // recomputed counts in BOTH truncate modes (ADVICE r13)
-      roundStats: (Int, Long, Long) => Unit = (_, _, _) => ()): (DataFrame, Int) = {
+      roundStats: (Int, Long, Long) => Unit): (DataFrame, Int) = {
     val session = docs.sparkSession
     // lineage hygiene: each round references the merged delta from both
     // sides of the pointer join, so the logical plan grows geometrically
@@ -4239,27 +4366,19 @@ object LlmQueries {
     checkpointDir.foreach(session.sparkContext.setCheckpointDir)
     def truncate(df: DataFrame): DataFrame =
       if (checkpointDir.isDefined) df.checkpoint() else df.localCheckpoint()
-    def ptime[T](name: String)(f: => T): T = { val t0=System.nanoTime; val r=f; if (sys.env.contains("GRAFT_CC_PROFILE")) println(f"CCPROF $name: ${(System.nanoTime-t0)/1e9}%.2f s"); r }
-    // Pre-partition the edges on SRC, once. Every round aggregates
-    // min-per-src — round 1 directly (groupBy(src) over the cache), later
-    // rounds after a broadcast join that PRESERVES the streamed side's
-    // partitioning — so a src-partitioned cache makes every round's
-    // aggregate exchange-free: after the build, no round moves the edge
-    // list at all while the frontier broadcasts. (A frontier too big to
-    // broadcast re-shuffles edges dst-wards for that round's sort-merge
-    // join; that regime is the first round or two of a giant corpus,
-    // where a shuffle per round is the floor anyway.) ONE shuffle for
-    // build+dedup, not two: repartition FIRST, then dropDuplicates —
-    // hash(src) is a subset of the (src, dst) grouping keys, so the
-    // dedup aggregate satisfies its clustered distribution in place and
-    // EnsureRequirements inserts no second exchange.
-    // LAZY persist (round 20): the old eager `edges.count()` added one
-    // full driver-job barrier per CC consumer purely to materialize the
-    // cache; round 1's groupBy(src) computes and caches the identical
-    // src-partitioned edge list inside its own checkpoint job, and rounds
-    // 2+ read the cache exactly as before. Same shuffles, one less job.
-    val edges = edgesIn.repartition(col("src"))
-      .dropDuplicates("src", "dst").persist()
+    // a round's local-checkpoint blocks are dead once the next eager
+    // checkpoint (the next round's, or the final expand's) has
+    // materialized: drop them then, rather than leave them pinned until a
+    // driver GC lets the ContextCleaner notice (DedupSpec counts the
+    // persisted RDDs a call leaves). Reliable checkpoints persist nothing.
+    var live: Option[DataFrame] = None
+    def supersede(next: Option[DataFrame]): Unit = {
+      live.foreach(_.queryExecution.logical match {
+        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist()
+        case _ => ()
+      })
+      live = next
+    }
     // SPARSE-DELTA LABELS (the r10 rewrite; r9 carried a corpus-sized
     // label table through every round): labels only ever differ from the
     // identity for docs inside a non-trivial component, so the loop state
@@ -4293,9 +4412,8 @@ object LlmQueries {
     // not the corpus-sized count the r12 form paid (frontierN from round 1
     // on comes from the observed metrics, and round 1 never reads it)
     var frontierN =
-      ptime("docs nonempty probe")(
-        if (graft.Bounded.nonEmpty(docs, "CC loop-entry probe")) Long.MaxValue
-        else 0L)
+      if (graft.Bounded.nonEmpty(docs, "CC loop-entry probe")) Long.MaxValue
+      else 0L
     var round = 0
     while (frontierN > 0) {
       round += 1
@@ -4364,13 +4482,14 @@ object LlmQueries {
       // write per round — and no observe node at all, so no listener is
       // left registered by an obs.get that never ran.
       if (checkpointDir.isDefined) {
-        val next = ptime(s"round $round truncate")(truncate(chased))
+        val next = truncate(chased)
         val r = graft.Bounded.one(
           next.agg(sum(col("chg").cast("long")), count(lit(1))),
           s"CC round $round frontier/delta sizes")
         frontierN = if (r.isNullAt(0)) 0L else r.getLong(0)
         deltaN = r.getLong(1)
         merged.unpersist()
+        supersede(Some(next))
         delta = next.select("doc_id", "canonical")
         frontier = next.filter(col("chg")).select("doc_id", "canonical")
       } else {
@@ -4378,7 +4497,7 @@ object LlmQueries {
         val observed = chased.observe(obs,
           sum(col("chg").cast("long")).as("chg_n"),
           count(lit(1)).as("delta_n"))
-        val next = ptime(s"round $round truncate+observe")(truncate(observed))
+        val next = truncate(observed)
         val metrics = obs.get
         frontierN = metrics.get("chg_n") match {
           case Some(l: java.lang.Long) => l.longValue // null sum = empty round
@@ -4389,6 +4508,7 @@ object LlmQueries {
           case _ => 0L
         }
         merged.unpersist()
+        supersede(Some(next))
         delta = next.select("doc_id", "canonical")
         frontier = next.filter(col("chg")).select("doc_id", "canonical")
       }
@@ -4398,9 +4518,10 @@ object LlmQueries {
     // delta over the full doc list. The delta row count is known-small
     // (bounded by multi-doc component membership), so broadcast it under
     // the same threshold that gates the frontier; the eager localCheckpoint
-    // truncates the whole loop lineage so the edge cache can drop — the
-    // only thing left pinned is the returned result's own blocks, which
-    // the session owns for as long as the caller may re-read the DataFrame.
+    // runs the job and truncates the whole loop lineage so the edge cache
+    // and the last round's checkpoint can drop — the only thing left
+    // pinned is the returned result's own blocks, which the session owns
+    // for as long as the caller may re-read the DataFrame.
     // deltaN was observed on the last round's checkpoint job — no
     // post-loop count job (r12 paid one more delta-sized scan here)
     val deltaSide = if (deltaN < broadcastChaseBelow) broadcast(delta) else delta
@@ -4410,8 +4531,7 @@ object LlmQueries {
         coalesce(col("d_can"), col("doc_id")).as("canonical"),
         coalesce(col("d_can"), col("doc_id")).equalTo(col("doc_id")).as("kept"))
       .localCheckpoint(true)
-    ptime("final expand")(out.count())
-    edges.unpersist()
+    supersede(None)
     (out, round)
   }
 

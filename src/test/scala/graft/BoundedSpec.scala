@@ -50,12 +50,16 @@ class BoundedSpec extends SparkSpec {
     assert(e.getMessage.contains("rdd over"))
   }
 
-  test("nonEmpty probes at most one row (limit-1 plan) and answers both ways") {
-    import org.apache.spark.sql.functions._
+  /** Runs `body` in an isolated child session (a listener there sees OUR
+    * fetches only, not whatever a concurrently-running suite executes) and
+    * returns its result with the CollectLimit limits of the `n` plans it
+    * executed — the at-most-k-rows claims verified against the EXECUTED
+    * plans, not the helpers' source.
+    */
+  private def executedLimits[R](n: Int)(
+      body: org.apache.spark.sql.SparkSession => R): (R, List[Int]) = {
     import org.apache.spark.sql.execution.{CollectLimitExec, QueryExecution}
     import org.apache.spark.sql.util.QueryExecutionListener
-    // isolated child session: the listener must see OUR probes only, not
-    // whatever a concurrently-running suite happens to execute
     val s = spark.newSession()
     val plans = java.util.Collections.synchronizedList(
       new java.util.ArrayList[org.apache.spark.sql.execution.SparkPlan]())
@@ -65,23 +69,43 @@ class BoundedSpec extends SparkSpec {
       def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
     }
     s.listenerManager.register(l)
-    try {
-      assert(Bounded.nonEmpty(s.range(1000000L), "big probe"))
-      assert(!Bounded.nonEmpty(s.range(5).filter(col("id") > 100), "empty probe"))
-      // listener delivery is async; wait for both plans (bounded)
+    val result = try {
+      val r = body(s)
+      // listener delivery is async; wait for all n plans (bounded)
       val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-      while (plans.size < 2 && System.nanoTime() < deadline) Thread.sleep(20)
+      while (plans.size < n && System.nanoTime() < deadline) Thread.sleep(20)
+      r
     } finally s.listenerManager.unregister(l)
-    // the at-most-one-row claim in the name, verified against the EXECUTED
-    // plans: every probe collected through a limit-1 (take(1)) plan — a
-    // regression of nonEmpty to e.g. `count() != 0` executes an aggregate
-    // with no CollectLimit and fails here (ADVICE r16)
     import scala.jdk.CollectionConverters._
     val captured = plans.asScala.toList
-    assert(captured.size == 2, s"expected 2 probe plans, saw ${captured.size}")
-    val limits = captured.flatMap(_.collect { case c: CollectLimitExec => c.limit })
-    assert(limits == List(1, 1),
-      s"nonEmpty must probe via limit-1 plans; executed: ${captured.map(_.nodeName)}")
+    assert(captured.size == n, s"expected $n fetch plans, saw ${captured.size}")
+    (result, captured.flatMap(_.collect { case c: CollectLimitExec => c.limit }))
+  }
+
+  test("nonEmpty probes at most one row (limit-1 plan) and answers both ways") {
+    import org.apache.spark.sql.functions._
+    val (answers, limits) = executedLimits(2) { s =>
+      (Bounded.nonEmpty(s.range(1000000L), "big probe"),
+        Bounded.nonEmpty(s.range(5).filter(col("id") > 100), "empty probe"))
+    }
+    assert(answers == ((true, false)))
+    // a regression of nonEmpty to e.g. `count() != 0` executes an
+    // aggregate with no CollectLimit and fails here (ADVICE r16)
+    assert(limits == List(1, 1), s"nonEmpty must probe via limit-1 plans, got $limits")
+  }
+
+  test("upTo returns every row at exactly cap and None at cap + 1") {
+    val atCap = Bounded.upTo(spark.range(10).toDF(), cap = 10, what = "at cap")
+    assert(atCap.map(_.map(_.getLong(0)).sorted.toSeq) == Some(0L until 10L))
+    assert(Bounded.upTo(spark.range(11).toDF(), cap = 10, what = "one over").isEmpty)
+  }
+
+  test("upTo never fetches more than cap + 1 rows (limit cap+1 plan), however large the frame") {
+    val (got, limits) = executedLimits(1) { s =>
+      Bounded.upTo(s.range(10000000L).toDF(), cap = 5, what = "huge")
+    }
+    assert(got.isEmpty)
+    assert(limits == List(6), s"upTo must fetch through a limit-(cap+1) plan, got $limits")
   }
 
   // ---- Bench third-sample trigger (VERDICT r15 ask #2) ------------------

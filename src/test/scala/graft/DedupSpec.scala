@@ -79,6 +79,20 @@ class DedupSpec extends SparkSpec {
       "mega-bucket docs must fall back to self-canonical, not merge")
   }
 
+  /** The distributed CC loop run directly, inside the same edge-cache
+    * lifecycle [[operators.LlmQueries.labelPropagation]] gives it. Spec
+    * graphs are far below the driver-finish cap, so through the
+    * dispatcher these loop specs would run the driver path and test
+    * nothing about the loop.
+    */
+  private def loop(docs: org.apache.spark.sql.DataFrame,
+      edges: org.apache.spark.sql.DataFrame,
+      broadcastChaseBelow: Long = operators.LlmQueries.DriverRows,
+      checkpointDir: Option[String] = None,
+      roundStats: (Int, Long, Long) => Unit = (_, _, _) => ()) =
+    operators.LlmQueries.withEdgeCache(edges)(operators.LlmQueries
+      .labelPropagationLoop(docs, _, broadcastChaseBelow, checkpointDir, roundStats))
+
   /** Symmetric path graph 0—1—…—d (no self-edges) plus its isolated docs. */
   private def chainGraph(d: Int) = {
     import spark.implicits._
@@ -96,8 +110,8 @@ class DedupSpec extends SparkSpec {
     // the halving reach matters) and on the planted-bucket corpus.
     for (d <- Seq(16, 64)) {
       val (docs, edges) = chainGraph(d)
-      val (lb, rb) = operators.LlmQueries.labelPropagation(docs, edges)
-      val (lf, rf) = operators.LlmQueries.labelPropagation(docs, edges,
+      val (lb, rb) = loop(docs, edges)
+      val (lf, rf) = loop(docs, edges,
         broadcastChaseBelow = 0L) // force the fused branch every round
       assert(rb == rf, s"d=$d: rounds differ broadcast=$rb fused=$rf")
       val mb = lb.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -116,7 +130,7 @@ class DedupSpec extends SparkSpec {
     // assertion fails loudly if the pointer join is ever dropped.
     for (d <- Seq(4, 16, 64)) {
       val (docs, edges) = chainGraph(d)
-      val (labels, rounds) = operators.LlmQueries.labelPropagation(docs, edges)
+      val (labels, rounds) = loop(docs, edges)
       val got = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(got.size == d + 1)
       assert(got.values.forall(_ == 0L),
@@ -135,7 +149,7 @@ class DedupSpec extends SparkSpec {
     // must make this resolve fully to 1.
     val docs = Seq(1L, 2L, 3L).toDF("doc_id")
     val edges = Seq((1L, 2L), (2L, 1L), (2L, 3L), (3L, 2L)).toDF("src", "dst")
-    val (labels, _) = operators.LlmQueries.labelPropagation(docs, edges)
+    val (labels, _) = loop(docs, edges)
     val got = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L), s"got $got")
   }
@@ -201,9 +215,9 @@ class DedupSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
     val statsLocal = scala.collection.mutable.ListBuffer.empty[(Int, Long, Long)]
     val statsRel = scala.collection.mutable.ListBuffer.empty[(Int, Long, Long)]
-    val (lb, rb) = operators.LlmQueries.labelPropagation(docs, edges,
+    val (lb, rb) = loop(docs, edges,
       roundStats = (r, f, d) => statsLocal += ((r, f, d)))
-    val (lc, rc) = operators.LlmQueries.labelPropagation(docs, edges,
+    val (lc, rc) = loop(docs, edges,
       checkpointDir = Some(dir),
       roundStats = (r, f, d) => statsRel += ((r, f, d)))
     assert(rb == rc, s"rounds differ local=$rb reliable=$rc")
@@ -247,8 +261,64 @@ class DedupSpec extends SparkSpec {
     import spark.implicits._
     val docs = Seq.empty[Long].toDF("doc_id")
     val edges = Seq.empty[(Long, Long)].toDF("src", "dst")
-    val (labels, _) = operators.LlmQueries.labelPropagation(docs, edges)
+    val (labels, _) = loop(docs, edges)
     assert(labels.count() == 0L)
+  }
+
+  test("driver finish and distributed loop give identical labels; the driver path runs no rounds") {
+    import spark.implicits._
+    import org.apache.spark.sql.DataFrame
+    def rows(df: DataFrame) = df.select("doc_id", "canonical", "kept").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
+    def same(name: String, docs: DataFrame, edges: DataFrame) = {
+      val (viaDriver, driverRounds) = operators.LlmQueries.labelPropagation(docs, edges)
+      assert(driverRounds == 0, s"$name: driver finish ran $driverRounds rounds")
+      val (viaLoop, _) = loop(docs, edges)
+      val (d, l) = (rows(viaDriver), rows(viaLoop))
+      assert(d == l, s"$name: driver-only ${d -- l}, loop-only ${l -- d}")
+      d
+    }
+    for (d <- Seq(4, 16, 64)) {
+      val (docs, edges) = chainGraph(d)
+      same(s"chain d=$d", docs, edges)
+    }
+    same("label-swap graph", Seq(1L, 2L, 3L).toDF("doc_id"),
+      Seq((1L, 2L), (2L, 1L), (2L, 3L), (3L, 2L)).toDF("src", "dst"))
+    same("empty corpus", Seq.empty[Long].toDF("doc_id"),
+      Seq.empty[(Long, Long)].toDF("src", "dst"))
+    // many components of mixed shape over scattered ids, with duplicate
+    // edges, self-edges and isolated docs — union order must not matter
+    val rnd = new scala.util.Random(42)
+    val ids = Array.fill(400)(rnd.nextInt(1000000).toLong).distinct
+    val und = Seq.fill(300)((ids(rnd.nextInt(ids.length)), ids(rnd.nextInt(ids.length))))
+    val sym = und ++ und.map(_.swap) ++ und.take(20)
+    val randomGraph = ids.toSeq.toDF("doc_id")
+    val nComponents = same("seeded random graph", randomGraph, sym.toDF("src", "dst"))
+      .map(_._2).size
+    assert(nComponents > 50, s"random graph has only $nComponents components")
+    val corpus = operators.LlmQueries.chainCorpus(spark, sf).persist()
+    val fromCC = rows(operators.LlmQueries.connectedComponents(corpus))
+    val (viaLoop, _) = loop(corpus.select("doc_id"), operators.LlmQueries.starEdges(corpus))
+    corpus.unpersist()
+    assert(fromCC == rows(viaLoop), "connectedComponents differs from the loop on the chain corpus")
+    assert(fromCC.exists(r => !r._3), "chain corpus merged nothing — vacuous comparison")
+  }
+
+  test("labelPropagation leaves only its result persisted, on both paths") {
+    // a leaked edge cache (or per-round checkpoint) stays pinned in the
+    // block manager until a driver GC happens to notice it; the eagerly
+    // checkpointed result is the one persisted RDD a CC call may add
+    val sc = spark.sparkContext
+    val (docs, edges) = chainGraph(16)
+    def added(run: => org.apache.spark.sql.DataFrame): Set[Int] = {
+      val before = sc.getPersistentRDDs.keySet
+      run
+      sc.getPersistentRDDs.keySet.toSet -- before
+    }
+    val driver = added(operators.LlmQueries.labelPropagation(docs, edges)._1)
+    assert(driver.size <= 1, s"driver finish left ${driver.size} persisted RDDs")
+    val distributed = added(loop(docs, edges)._1)
+    assert(distributed.size <= 1, s"distributed loop left ${distributed.size} persisted RDDs")
   }
 
   test("q114 DSIR scores match an independent computation and rank target-like docs up") {
