@@ -193,7 +193,7 @@ object Bench {
         // DRIVER GC notices the dead references. In this 8 GB shared JVM
         // the leftovers evicted the next query's own cache (q86's passes
         // were re-scanning parquet instead of reading its persisted
-        // projection — RANKPROF showed every sub-second pass uniformly
+        // projection — a per-pass timing showed every sub-second pass uniformly
         // 2–4× slower mid-suite). One explicit GC before each timed
         // sample lets the cleaner drain; it runs OUTSIDE the timed
         // window, so it speeds measurement fidelity, not the queries.

@@ -30,7 +30,7 @@ object Plans {
     "q116_semdedup_resolve" -> "semantic dedup resolution: q108's capped LSH edge generation feeding the sparse-delta CC kernel — edges shuffle once on the band key, the closure moves only label deltas",
     "q86_robust_stats" -> "exact robust stats on the zero-shuffle rank-selection kernel: every pass a map-side-combining aggregate over one cached projection — no range partition, no sort, no corpus-sized exchange anywhere (the emitted plan is the driver-local epilogue; the heavy passes ran eagerly)",
     "q118_repetition_audit" -> "Gopher-style repetition audit: ONE map-only codegen'd pass — the native graft_gram_stats kernel computes all four per-doc statistics per row; no exchange, no explode, no windows",
-    "q119_kmeans_step" -> "one exact Lloyd step: assignment is MAP-ONLY — one argmin kernel call per row over the driver-collected primitive centroid matrix (the per-seed expression form paid k+1 array conversions per row); only the k×64-group centroid update exchanges",
+    "q119_kmeans_step" -> "one exact Lloyd step, size-dispatched: a corpus of at most KmeansDriverVectors (15,625) rows is fetched once through a capped take and the seeds, assignment and means run on the driver, so the emitted plan is the local result; above the cap the assignment is MAP-ONLY — one argmin kernel call per row over the driver-collected centroid matrix — and only the k×64-group centroid update exchanges",
     "q123_kmeans_semdedup" -> "SemDeDup's published shape: map-only k-means assignment (corpus-derived sqrt-balanced k) as the candidate generator, ONE cluster-id shuffle into a per-cell dense pairwise kernel, sparse-delta CC, single-argmax quality keep",
     "q129_bm25_topk" -> "BM25 retrieval with ZERO corpus exchanges: per-doc tf in one graft_token_tf kernel call, corpus stats as a 1-row broadcast aggregate, global top-k via TakeOrderedAndProject",
     "q130_source_overlap" -> "exact cross-source Jaccard matrix: md5-folded 8-byte shingle keys into ONE vocab-sized exchange aggregating a codegen'd bit_or source bitmask, vocab collapsed to distinct co-occurrence patterns, checkpoint-fed |sources|-squared expansion",

@@ -4211,9 +4211,10 @@ object LlmQueries {
   /** Rows the driver takes in one piece: a frame under it may broadcast
     * (Spark builds every broadcast on the driver), and a CC edge list of
     * at most this many rows is fetched and finished by union-find on the
-    * driver ([[labelPropagation]]). One figure for both decisions.
+    * driver ([[labelPropagation]]). One figure for both decisions, and a
+    * constant, so other objects' initializers may read it.
     */
-  val DriverRows = 2000000
+  final val DriverRows = 2000000
 
   /** Connected components by min label over an EXPLICIT symmetric edge
     * list (src, dst): every doc's `canonical` is the smallest id of its

@@ -176,19 +176,6 @@ object StatsQueries {
   private val RankCollectCap = 262144L  // max bracket rows fetched to the driver
   private val RankMaxLevels = 8         // refinement budget before the sort fallback
 
-  /** Env-gated pass profiler (GRAFT_RANK_PROFILE=1): the rankSelect family
-    * is a chain of small driver-round-trip jobs, so suite-context slowdowns
-    * that a single-job query never sees (GC pressure, scheduler backlog,
-    * cache eviction) show up here as uniform or pass-specific inflation —
-    * this pins down which (the r13 committed-vs-targeted 2.4× question).
-    */
-  private def rtime[T](name: String)(f: => T): T = {
-    val t0 = System.nanoTime; val r = f
-    if (sys.env.contains("GRAFT_RANK_PROFILE"))
-      println(f"RANKPROF $name: ${(System.nanoTime - t0) / 1e9}%.3f s")
-    r
-  }
-
   /** Monotone bucket index of `x` under the linear map [lo, hi] → [0, B):
     * deterministic executor-side double arithmetic, clamped at both ends
     * so totals stay exact, degenerate (lo = hi) ranges collapse to bucket
@@ -297,13 +284,12 @@ object StatsQueries {
         }
       val aggs = Seq(count(lit(1)).as("c"), min(col("x")).as("mn"),
         max(col("x")).as("mx")) ++ (if (level == 1) extra else Nil)
-      val rows = rtime(s"level $level (${active.size} brackets)")(
-        graft.Bounded.collect(
-          data.withColumn("vg", vgCol).filter(col("vg") >= 0)
-            .withColumn("b", bucketOf(col("x"), perVg(_.lo), perVg(_.hi)))
-            .groupBy("vg", "b").agg(aggs.head, aggs.tail: _*),
-          cap = active.size * 8192,
-          what = s"rankSelect level-$level bucket counts"))
+      val rows = graft.Bounded.collect(
+        data.withColumn("vg", vgCol).filter(col("vg") >= 0)
+          .withColumn("b", bucketOf(col("x"), perVg(_.lo), perVg(_.hi)))
+          .groupBy("vg", "b").agg(aggs.head, aggs.tail: _*),
+        cap = active.size * 8192,
+        what = s"rankSelect level-$level bucket counts")
       if (level == 1 && extra.nonEmpty)
         extras = rows.groupBy(r => active(r.getInt(0)).g).map { case (g, rs) =>
           g -> extra.indices.map(j => rs.map(_.getLong(5 + j)).sum).toSeq
@@ -341,12 +327,11 @@ object StatsQueries {
       val vgCol = fs.zipWithIndex.foldLeft(lit(-1)) { case (acc, (b, i)) =>
         when(col("gi") === b.g && pathCond(b), lit(i)).otherwise(acc)
       }
-      val got = rtime(s"fetch (${fs.size} brackets)")(
-        graft.Bounded.collect(
-          data.withColumn("vg", vgCol).filter(col("vg") >= 0)
-            .select(col("vg"), col("x")).as[(Int, Double)],
-          cap = math.min(fs.map(_.rows).sum, Int.MaxValue - 1L).toInt,
-          what = s"rankSelect collect-sized bracket fetch (${fs.size} brackets)"))
+      val got = graft.Bounded.collect(
+        data.withColumn("vg", vgCol).filter(col("vg") >= 0)
+          .select(col("vg"), col("x")).as[(Int, Double)],
+        cap = math.min(fs.map(_.rows).sum, Int.MaxValue - 1L).toInt,
+        what = s"rankSelect collect-sized bracket fetch (${fs.size} brackets)")
         .groupBy(_._1)
       fs.zipWithIndex.foreach { case (bk, i) =>
         val ds = got.getOrElse(i, Array.empty[(Int, Double)]).map(_._2).sorted
@@ -405,11 +390,11 @@ object StatsQueries {
     // and a pushed-down two-column parquet aggregate costs about what the
     // old cache-build-plus-aggregate pass did without ever caching the
     // string column
-    val meta = rtime("pcts meta")(graft.Bounded.collect(
+    val meta = graft.Bounded.collect(
       src.groupBy("g")
         .agg(count(lit(1)).as("n"),
           min(col("x")).as("mn"), max(col("x")).as("mx")),
-      cap = 4096, what = "exactGroupPercentiles per-group meta (bounded class dim)"))
+      cap = 4096, what = "exactGroupPercentiles per-group meta (bounded class dim)")
       .map(r => r.getString(0) -> ((r.getLong(1), r.getDouble(2), r.getDouble(3))))
       .toMap
     val groups = meta.keys.toSeq.sorted
@@ -470,11 +455,11 @@ object StatsQueries {
     // cache — the r17 form cached the string group column and paid
     // UTF8String CASE-chain compares in every refinement pass (rankSelect
     // scaladoc; the A/B for this change is AB_q86_r18_*.json)
-    val meta = rtime("robust meta")(graft.Bounded.collect(
+    val meta = graft.Bounded.collect(
       src.groupBy("g")
         .agg(count(lit(1)).as("n"),
           min(col("v")).as("mn"), max(col("v")).as("mx")),
-      cap = 4096, what = "robustStats per-group meta (bounded class dim)"))
+      cap = 4096, what = "robustStats per-group meta (bounded class dim)")
       .map(r => r.getString(0) -> ((r.getLong(1), r.getDouble(2), r.getDouble(3))))
       .toMap
     val groups = meta.keys.toSeq.sorted

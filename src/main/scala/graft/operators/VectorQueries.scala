@@ -4,7 +4,8 @@ import graft.{Q, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.commons.codec.digest.DigestUtils
+import org.apache.spark.sql.types.{Decimal, DecimalType, DoubleType, IntegerType, LongType, StructField, StructType}
 
 /** Embedding-column aggregation operators: per-label centroids and int8
   * scalar quantization — the storage/serving side of a vector pipeline
@@ -699,36 +700,76 @@ object VectorQueries {
     * deterministic, engine-portable, and unclustered-data-safe (md5
     * scatters ids, so seeds are an unbiased sample; k-means++ would need
     * engine-identical weighted sampling, which floats forbid). Assignment
-    * is map-only: every seed becomes LITERAL arrays in the plan, each
-    * row's dist² evaluates through the codegen'd `graft_vector_dot` (the
-    * list_dot_product fold-order contract, q45), rounded to 6 dp with
-    * c_id tie-break, argmin via `array_min` over structs. The c·c terms
-    * are computed ENGINE-SIDE once (a 1-row constant query) so their fold
-    * order matches the oracle exactly. The centroid update is the q77
-    * decimal-routed mean over posexploded dimensions. Returns
-    * (cluster, dim, centroid, n_vectors) — k×64 rows.
+    * is the nearest seed by dist² rounded to 6 dp with c_id tie-break
+    * ([[graft.plans.KmeansKernel.argmin]], the list_dot_product
+    * fold-order contract of q45); the centroid update is the q77
+    * decimal-routed mean over the dimensions. Returns
+    * (cluster, dim, centroid, n_vectors) — k×64 rows. Runs as
+    * [[kmeansIterate]] with one pass, so the same size dispatch applies.
     */
   def kmeansStep(emb: DataFrame, k: Int = 8): DataFrame =
     kmeansIterate(emb, k, iters = 1)
 
+  /** Vectors a k-means call fetches whole for the driver finish: half of
+    * [[LlmQueries.DriverRows]] doubles' worth at the corpus's 64-dim
+    * width — 15,625 vectors, 8 MB of doubles. The full figure (31,250
+    * vectors) was measured against the loop on 4 cores: there the driver
+    * finish lost by a few percent at k = 73, its per-pass argmin running
+    * on one core, while at 16,000 vectors it was faster at k = 8 and 73.
+    * A constant, so it never reads a LlmQueries still initializing (the
+    * two objects reach each other through their query lists).
+    */
+  final val KmeansDriverVectors = LlmQueries.DriverRows / 128
+
   /** q120 kernel (and q119's core with `iters = 1`): exact Lloyd
-    * iterations. Each pass re-assigns map-only against the CURRENT
-    * centroids embedded as literal arrays and recomputes the
-    * decimal-routed per-dimension means; between passes the k×64 ROUNDED
-    * means (round 6 — the output discipline, so the round-trip is
-    * bit-stable across engines) collect to the driver and become the
-    * next pass's literals. The corpus is never shuffled by assignment at
-    * any iteration; per iteration the only exchange is the k×64-group
-    * centroid aggregate — the canonical distributed k-means shape (data
-    * stays put, centroids move). A cluster that loses all members simply
-    * has no mean row and drops out of later passes — both engines derive
-    * that from the same GROUP BY. Returns the FINAL pass's
-    * (cluster, dim, centroid, n_vectors).
+    * iterations. Returns the FINAL pass's (cluster, dim, centroid,
+    * n_vectors). Every pass assigns each vector to its nearest current
+    * centroid and recomputes the decimal-routed per-dimension means,
+    * rounded to 6 dp — the output discipline, so the centroids the next
+    * pass reads are bit-stable across engines. A cluster that loses all
+    * members has no mean row and drops out of later passes.
+    *
+    * A size dispatch over two paths with identical output (VectorSpec
+    * pins them equal):
+    *  - DRIVER FINISH, when the corpus has at most [[KmeansDriverVectors]]
+    *    rows: ONE capped fetch of (vec_id, v), then the seeds, every
+    *    pass and the final means on the driver, returned as a local
+    *    frame. The loop below pays a driver round trip per pass, each
+    *    planning a k×64-literal centroid expression; at these sizes the
+    *    round trips are the whole cost, and one fetch replaces them.
+    *  - DISTRIBUTED LOOP otherwise ([[kmeansCentroidsLoop]], then one
+    *    map-only assignment pass and the k×64-group mean aggregate). The
+    *    corpus is never shuffled; per pass only k×64 means move.
+    * The cap is a property of the input (its row count), not a setting.
     */
   def kmeansIterate(emb: DataFrame, k: Int = 8, iters: Int = 3): DataFrame = {
+    val base = kmBase(emb)
+    kmFetch(base, k) match {
+      case Some(c) =>
+        val rows = c.pass(c.centroids(iters)).map { case (cid, dim, m, n) =>
+          org.apache.spark.sql.Row(cid, dim, m, n)
+        }
+        base.sparkSession.createDataFrame(
+          java.util.Arrays.asList(rows: _*), kmMeansSchema(base))
+      case None => kmeansIterateLoop(emb, k, iters)
+    }
+  }
+
+  /** [[kmeansIterate]]'s distributed path, whatever the corpus size (the
+    * specs pin the two paths equal through it).
+    */
+  private[graft] def kmeansIterateLoop(emb: DataFrame, k: Int, iters: Int): DataFrame = {
+    val base = kmBase(emb)
+    kmMeans(argminAssign(base, kmeansCentroidsLoop(base, k, iters)))
+  }
+
+  /** (vec_id, v): the embedding widened to doubles, as every k-means
+    * kernel reads it.
+    */
+  private def kmBase(emb: DataFrame): DataFrame = {
     graft.plans.GraftExtensions.register(emb.sparkSession)
-    kmMeans(kmeansAssign(emb.select(col("vec_id"),
-      expr("transform(embedding, x -> CAST(x AS double))").as("v")), k, iters))
+    emb.select(col("vec_id"),
+      expr("transform(embedding, x -> CAST(x AS double))").as("v"))
   }
 
   /** The q77/q119 decimal-routed rounded per-dimension mean over an
@@ -743,13 +784,23 @@ object VectorQueries {
       .select(col("cluster"), col("dim"), round(col("raw"), 6).as("centroid"),
         col("n_vectors"))
 
+  /** [[kmMeans]]'s schema over `base`, for the driver finish's local
+    * frame: the kernel's cluster id is null exactly where `v` is.
+    */
+  private def kmMeansSchema(base: DataFrame) = StructType(Seq(
+    StructField("cluster", LongType, nullable = base.schema("v").nullable),
+    StructField("dim", IntegerType, nullable = false),
+    StructField("centroid", DoubleType),
+    StructField("n_vectors", LongType, nullable = false)))
+
   /** Final-pass Lloyd ASSIGNMENT after `iters` passes over a prepared
     * `base` with `vec_id` and double-array `v` (extra columns ride
     * along): returns `base`'s columns plus `cluster`. This is the
     * composition seam q123 builds on — the assignment, not just the
     * means, is the useful product of k-means in a SemDeDup-shaped
-    * pipeline. Same arithmetic contract as the scaladoc above
-    * ([[kmeansIterate]] = kmMeans of this).
+    * pipeline. Same arithmetic contract as [[kmeansIterate]]; the
+    * centroids come from [[kmeansCentroids]]'s size dispatch and the
+    * final assignment is always the distributed map-only pass.
     */
   def kmeansAssign(base: DataFrame, k: Int = 8, iters: Int = 3): DataFrame =
     argminAssign(base, kmeansCentroids(base, k, iters))
@@ -760,32 +811,145 @@ object VectorQueries {
   private def dArr(xs: Seq[Double]): String =
     "array(" + xs.map(x => s"${x}D").mkString(",") + ")"
 
-  /** The driver-side Lloyd centroid loop of [[kmeansAssign]]: seeds = the
-    * k corpus vectors with the smallest md5(vec_id) (vec_id tie-break),
-    * then `iters − 1` mean updates, each a k×64-group aggregate whose
-    * 6-dp-rounded means round-trip the driver (the q120 bit-stability
-    * contract). Returns the FINAL (c_id, centroid) table the last
-    * assignment pass uses — exposed so silhouette/diagnostic passes can
-    * score against exactly the centroids the assignment saw.
+  /** The centroids the last assignment pass of [[kmeansAssign]] uses:
+    * seeds = the k corpus vectors with the smallest md5(vec_id) (vec_id
+    * tie-break), then `iters − 1` mean updates. Exposed so
+    * silhouette/diagnostic passes can score against exactly the
+    * centroids the assignment saw. The same size dispatch as
+    * [[kmeansIterate]]: a corpus of at most [[KmeansDriverVectors]] rows
+    * is fetched once and the updates run on the driver; a larger one
+    * runs [[kmeansCentroidsLoop]].
     */
   private[graft] def kmeansCentroids(base: DataFrame, k: Int,
+      iters: Int): Seq[(Long, Seq[Double])] =
+    kmFetch(base, k) match {
+      case Some(c) => c.centroids(iters)
+      case None => kmeansCentroidsLoop(base, k, iters)
+    }
+
+  /** The distributed centroid loop behind [[kmeansCentroids]], for
+    * corpora over [[KmeansDriverVectors]]: the seed rows are one capped
+    * fetch, and each mean update is a k×64-group aggregate whose
+    * 6-dp-rounded means round-trip the driver and re-enter the next
+    * pass as literals (the q120 bit-stability contract).
+    */
+  private[graft] def kmeansCentroidsLoop(base: DataFrame, k: Int,
       iters: Int): Seq[(Long, Seq[Double])] = {
-    var centroids: Seq[(Long, Seq[Double])] = kmProf(s"seed collect k=$k")(
+    var centroids: Seq[(Long, Seq[Double])] =
       graft.Bounded.collect(base
         .select(col("vec_id"), col("v"), md5(col("vec_id").cast("string")).as("mk"))
         .orderBy(col("mk"), col("vec_id")).limit(k),
-        cap = k, what = s"k-means seed rows (k=$k)"))
+        cap = k, what = s"k-means seed rows (k=$k)")
       .map(r => (r.getLong(0), r.getSeq[Double](1))).toSeq
-    for (it <- 1 until iters)
-      centroids = kmProf(s"mean collect pass $it")(
+    for (_ <- 1 until iters)
+      centroids = kmCentroidsOf(
         graft.Bounded.collect(kmMeans(argminAssign(base, centroids)),
-          cap = k * 64, what = s"k-means centroid means (k=$k x 64 dims)"))
-        .groupBy(_.getLong(0)).toSeq
-        .map { case (cid, rows) =>
-          (cid, rows.sortBy(_.getInt(1)).map(_.getDouble(2)).toSeq)
-        }
-        .sortBy(_._1)
+          cap = k * 64, what = s"k-means centroid means (k=$k x 64 dims)")
+        .map(r => (r.getLong(0), r.getInt(1), r.getDouble(2), r.getLong(3))).toSeq)
     centroids
+  }
+
+  /** Centroids from (cluster, dim, centroid, n) mean rows, in cluster-id
+    * order with each vector in dim order — the order both paths lay the
+    * kernel's centroid matrix out in.
+    */
+  private def kmCentroidsOf(
+      rows: Seq[(Long, Int, Double, Long)]): Seq[(Long, Seq[Double])] =
+    rows.groupBy(_._1).toSeq.sortBy(_._1)
+      .map { case (cid, rs) => (cid, rs.sortBy(_._2).map(_._3)) }
+
+  /** The argmin kernel's tables for `cents`: the row-major centroid
+    * matrix, the ids, and each cᵢ·cᵢ by the [[graft.plans.VectorDot.dot]]
+    * fold the oracle's list_dot_product(cv, cv) computes. One helper for
+    * both paths, so they hand the kernel identical tables.
+    */
+  private def kmTables(
+      cents: Seq[(Long, Seq[Double])]): (Array[Double], Array[Long], Array[Double]) =
+    (cents.flatMap(_._2).toArray, cents.map(_._1).toArray,
+      cents.map { case (_, cv) =>
+        val a = cv.toArray; graft.plans.VectorDot.dot(a, a)
+      }.toArray)
+
+  /** Fetches (vec_id, v) for the driver finish of [[kmeansIterate]] and
+    * [[kmeansCentroids]], or None — the distributed loop — when the
+    * corpus has more than [[KmeansDriverVectors]] rows or holds a row
+    * the driver would not reproduce bit for bit: a null element (the
+    * loop's sum skips it but its count does not), an element
+    * CAST(x AS DECIMAL(18,9)) does not give a value for, a null vector
+    * among the k seeds (the loop's own failure), or magnitudes large
+    * enough that an exact per-(cluster, dim) sum could overflow a Long
+    * of 1e-9 units. A null vector elsewhere joins no cluster on either
+    * path.
+    */
+  private def kmFetch(base: DataFrame, k: Int): Option[KmCorpus] =
+    graft.Bounded.upTo(base.select("vec_id", "v"), KmeansDriverVectors,
+        "k-means corpus (vec_id, v)").flatMap { rows =>
+      val ids = rows.map(_.getLong(0))
+      val vs = rows.map(r =>
+        if (r.isNullAt(1)) null else r.getSeq[Any](1).toArray)
+      val units = vs.map(v => if (v == null) Array.empty[Long] else v.map(decimalUnits))
+      val seeds = ids.indices
+        .map(i => (DigestUtils.md5Hex(ids(i).toString), ids(i), i)).sorted
+        .slice(0, k).map(_._3)
+      val reproducible = seeds.forall(vs(_) != null) && units.forall(_.forall(u =>
+        u != NoUnits && math.abs(u) <= Long.MaxValue / rows.length))
+      if (!reproducible) None
+      else Some(new KmCorpus(ids,
+        vs.map(v => if (v == null) null else v.map(_.asInstanceOf[Double])),
+        units, seeds.map(i => (ids(i), vs(i).map(_.asInstanceOf[Double]).toSeq))))
+    }
+
+  /** [[decimalUnits]]' answer for an element it cannot convert: a null, or
+    * a value CAST(x AS DECIMAL(18,9)) maps to null or an error. No valid
+    * unit count reaches it (|units| < 1e18).
+    */
+  private val NoUnits = Long.MinValue
+
+  /** `x` in units of 1e-9 exactly as Spark's CAST(x AS DECIMAL(18,9))
+    * computes it (its own [[Decimal]], HALF_UP), or [[NoUnits]].
+    */
+  private def decimalUnits(x: Any): Long = x match {
+    case d: Double if !d.isNaN && !d.isInfinite =>
+      val dec = Decimal(d)
+      if (dec.changePrecision(18, 9)) dec.toUnscaledLong else NoUnits
+    case _ => NoUnits
+  }
+
+  /** A corpus fetched whole for the k-means driver finish: `vs(i)` is
+    * vector i as the kernel reads it (null for a null vector), `units(i)`
+    * its elements as DECIMAL(18,9) unscaled longs, `seeds` the loop's k
+    * seed centroids in its (md5, vec_id) order.
+    */
+  private final class KmCorpus(ids: Array[Long], vs: Array[Array[Double]],
+      units: Array[Array[Long]], seeds: Seq[(Long, Seq[Double])]) {
+
+    /** The centroids after `iters − 1` mean updates from the seeds. */
+    def centroids(iters: Int): Seq[(Long, Seq[Double])] =
+      (1 until iters).foldLeft(seeds)((cents, _) => kmCentroidsOf(pass(cents)))
+
+    /** One Lloyd pass against `cents`, with the loop's arithmetic: each
+      * non-null vector goes to the cluster the same kernel picks, then
+      * per (cluster, dim) the exact DECIMAL(18,9) sum, as a double, over
+      * the count of elements at that dim (posexplode's count, so ragged
+      * widths match), rounded to 6 dp. Returns (cluster, dim, centroid,
+      * n_vectors) for every (cluster, dim) with a member.
+      */
+    def pass(cents: Seq[(Long, Seq[Double])]): Seq[(Long, Int, Double, Long)] = {
+      val (mat, cids, ccs) = kmTables(cents)
+      val slot = cids.zipWithIndex.toMap
+      val width = vs.iterator.filter(_ != null).map(_.length).maxOption.getOrElse(0)
+      val sums = Array.ofDim[Long](cids.length, width)
+      val ns = Array.ofDim[Long](cids.length, width)
+      for (i <- vs.indices if vs(i) != null) {
+        val c = slot(graft.plans.KmeansKernel.argmin(vs(i), mat, cids, ccs))
+        val u = units(i)
+        for (j <- u.indices) { sums(c)(j) += u(j); ns(c)(j) += 1 }
+      }
+      for (c <- cids.indices.sortBy(cids(_)); j <- 0 until width if ns(c)(j) > 0)
+        yield (cids(c), j,
+          graft.plans.KmeansKernel.round6(Decimal(sums(c)(j), 28, 9).toDouble / ns(c)(j)),
+          ns(c)(j))
+    }
   }
 
   /** One map-only Lloyd assignment against literal centroids: ONE native
@@ -797,22 +961,17 @@ object VectorQueries {
     * assignment pass at sf5, k=134; this form runs it in ~1 s). The
     * centroid matrix, ids, and c·c terms enter the plan as FOLDABLE
     * array literals (the kernel converts them to primitive tables once
-    * per task); c·c is precomputed with the same
-    * [[graft.plans.VectorDot.dot]] fold the oracle's
-    * list_dot_product(cv, cv) computes, the literals round-trip
-    * Double.toString exactly, and the (d², c_id) tie-break matches the
-    * old array_min-over-structs — arithmetic is bit-identical to both
-    * the old plan and the oracle.
+    * per task); the literals round-trip Double.toString exactly, and the
+    * (d², c_id) tie-break matches the old array_min-over-structs —
+    * arithmetic is bit-identical to both the old plan and the oracle.
     */
   private def argminAssign(base: DataFrame,
       cents: Seq[(Long, Seq[Double])]): DataFrame = {
     graft.plans.GraftExtensions.register(base.sparkSession)
-    val ccs = cents.map { case (_, cv) =>
-      val a = cv.toArray; graft.plans.VectorDot.dot(a, a)
-    }
-    val idsSql = "array(" + cents.map(c => s"${c._1}L").mkString(",") + ")"
+    val (mat, ids, ccs) = kmTables(cents)
+    val idsSql = ids.map(id => s"${id}L").mkString("array(", ",", ")")
     base.withColumn("cluster", expr(
-      s"graft_centroid_argmin(v, ${dArr(cents.flatMap(_._2))}, $idsSql, ${dArr(ccs)})"))
+      s"graft_centroid_argmin(v, ${dArr(mat.toSeq)}, $idsSql, ${dArr(ccs.toSeq)})"))
   }
 
   /** q135 kernel — centroid-based (simplified) silhouette audit of the
@@ -836,9 +995,7 @@ object VectorQueries {
     * identical expression text in both engines.
     */
   def kmeansSilhouette(emb: DataFrame, k: Int = 8, iters: Int = 3): DataFrame = {
-    graft.plans.GraftExtensions.register(emb.sparkSession)
-    val base = emb.select(col("vec_id"),
-      expr("transform(embedding, x -> CAST(x AS double))").as("v"))
+    val base = kmBase(emb)
     val cents = kmeansCentroids(base, k, iters)
     require(cents.length >= 2,
       s"silhouette needs >= 2 surviving clusters, got ${cents.length}")
@@ -999,9 +1156,8 @@ object VectorQueries {
     // result is materialized (the CC kernel does this anyway for its own
     // lineage hygiene) so both caches release before returning.
     val corpusP = corpus.persist()
-    val kk = k.getOrElse(kmProf("corpus count")(semDedupK(corpusP.count())))
-    val asg = kmProf("kmeansAssign driver loop")(
-      kmeansAssign(corpusP, kk, iters)).persist()
+    val kk = k.getOrElse(semDedupK(corpusP.count()))
+    val asg = kmeansAssign(corpusP, kk, iters).persist()
     // production cell-size posture (round 18, VERDICT r17 ask #3): with
     // maxCell set, over-cap cells re-split before the pair kernel, so the
     // quadratic within-cell term stays <= maxCell² per cell at ANY corpus
@@ -1032,17 +1188,10 @@ object VectorQueries {
       .select(col("cluster_id"), col("km_cluster"),
         (-col("best.nid")).as("keep_id"),
         col("best.quality").as("max_quality"), col("n_members"))
-    val outM = kmProf("final reduce materialize")(out.localCheckpoint(true))
+    val outM = out.localCheckpoint(true)
     asg.unpersist()
     corpusP.unpersist()
     outM
-  }
-
-  private def kmProf[T](name: String)(f: => T): T = {
-    val t0 = System.nanoTime; val r = f
-    if (sys.env.contains("GRAFT_KM_PROFILE"))
-      println(f"KMPROF $name: ${(System.nanoTime - t0) / 1e9}%.2f s")
-    r
   }
 
   /** q123's corpus-derived k: max(8, min(512, ceil(sqrt(n / 6)))) —

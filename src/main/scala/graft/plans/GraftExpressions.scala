@@ -49,8 +49,20 @@ object ZlibOps {
     data.length >= 2 && (data(0) & 0x0f) == 8 &&
       ((((data(0) & 0xff) << 8) | (data(1) & 0xff)) % 31 == 0)
 
+  /** Per-thread inflate output buffer, doubled whenever a record fills
+    * it: the consume path inflates every record, and inflating straight
+    * into it leaves one allocation per record — the exact-length result.
+    * A thread keeps a grown buffer only up to [[InflateBufKeep]] bytes.
+    */
+  private val tlInflateBuf = new ThreadLocal[Array[Byte]] {
+    override def initialValue(): Array[Byte] = new Array[Byte](8192)
+  }
+  private val InflateBufKeep = 1 << 20
+
   /** zlib inflate; ANY failure returns the raw input (consumer.go:211-224).
-    * Static so generated code can call it directly.
+    * Static so generated code can call it directly. A stream that stalls
+    * — input exhausted, or a preset dictionary this codec never has —
+    * counts as a failure.
     */
   def inflateOrRaw(data: Array[Byte]): Array[Byte] = {
     if (!looksZlib(data)) return data
@@ -58,14 +70,17 @@ object ZlibOps {
     inf.reset()
     try {
       inf.setInput(data)
-      val out = new java.io.ByteArrayOutputStream(data.length * 4)
-      val buf = new Array[Byte](8192)
+      var buf = tlInflateBuf.get()
+      var n = 0
       while (!inf.finished()) {
-        val n = inf.inflate(buf)
-        if (n == 0 && inf.needsInput()) throw new java.util.zip.DataFormatException("truncated")
-        out.write(buf, 0, n)
+        if (n == buf.length) buf = java.util.Arrays.copyOf(buf, buf.length * 2)
+        val got = inf.inflate(buf, n, buf.length - n)
+        if (got == 0 && (inf.needsInput() || inf.needsDictionary()))
+          throw new java.util.zip.DataFormatException("truncated")
+        n += got
       }
-      out.toByteArray
+      if (buf.length <= InflateBufKeep) tlInflateBuf.set(buf)
+      java.util.Arrays.copyOf(buf, n)
     } catch { case _: Exception => data }
   }
 
@@ -273,12 +288,11 @@ object KmeansKernel {
   /** Nearest-centroid id: `mat` is the row-major k×d centroid matrix,
     * `ccs(i)` the precomputed cᵢ·cᵢ (the same [[VectorDot.dot]] fold).
     * Dots run ascending over min(|v|, d) like [[VectorDot.dot]];
-    * rounding is `java.math.BigDecimal.valueOf` + HALF_UP — Spark
-    * `round`'s codegen formula for doubles.
+    * distances round through [[round6]]. The k-means driver finish calls
+    * this form directly, so both paths assign with one kernel.
     */
-  def argmin(v: org.apache.spark.sql.catalyst.util.ArrayData,
-      mat: Array[Double], ids: Array[Long], ccs: Array[Double]): Long = {
-    val va = v.toDoubleArray()
+  def argmin(va: Array[Double], mat: Array[Double], ids: Array[Long],
+      ccs: Array[Double]): Long = {
     val k = ids.length
     val d = if (k == 0) 0 else mat.length / k
     var vv = 0.0
@@ -294,8 +308,7 @@ object KmeansKernel {
       var dot = 0.0
       var j = 0
       while (j < n) { dot += va(j) * mat(off + j); j += 1 }
-      val d2 = java.math.BigDecimal.valueOf(vv - 2.0 * dot + ccs(i))
-        .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+      val d2 = round6(vv - 2.0 * dot + ccs(i))
       if (first || d2 < bestD || (d2 == bestD && ids(i) < bestId)) {
         bestD = d2; bestId = ids(i); first = false
       }
@@ -303,6 +316,18 @@ object KmeansKernel {
     }
     bestId
   }
+
+  /** The row form [[CentroidArgmin]] evaluates and generates code for. */
+  def argmin(v: org.apache.spark.sql.catalyst.util.ArrayData,
+      mat: Array[Double], ids: Array[Long], ccs: Array[Double]): Long =
+    argmin(v.toDoubleArray(), mat, ids, ccs)
+
+  /** Spark `round(x, 6)` on a finite double: `java.math.BigDecimal.valueOf`
+    * + HALF_UP, its codegen formula for doubles.
+    */
+  def round6(x: Double): Double =
+    java.math.BigDecimal.valueOf(x).setScale(6, java.math.RoundingMode.HALF_UP)
+      .doubleValue()
 }
 
 /** `graft_minhash16(string) → array<bigint>`: 16-permutation MinHash

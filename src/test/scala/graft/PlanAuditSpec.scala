@@ -276,8 +276,16 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("q119/q120 k-means assignment is map-only: no join, one centroid-update exchange") {
-    for (q <- Seq("q119_kmeans_step", "q120_kmeans_iterate")) {
-      val all = executed(q)
+    // the registered queries take the driver finish at fixture scale, so
+    // the distributed loop's final pass is audited directly as well
+    val loop = operators.VectorQueries.kmeansIterateLoop(
+      Tables.t(spark, sf, "embeddings"), k = 8, iters = 3)
+    loop.collect()
+    val loopPlan = flatten(loop.queryExecution.executedPlan)
+    assert(loopPlan.exists(_.nodeName.contains("Exchange")),
+      "the loop's final means must aggregate over the exchange this audit bounds")
+    for ((q, all) <- Seq("q119_kmeans_step", "q120_kmeans_iterate").map(q => q -> executed(q)) :+
+        ("kmeansIterateLoop" -> loopPlan)) {
       assert(!all.exists(_.nodeName.contains("Join")),
         s"$q assignment must not join (literal centroids)")
       val exchanges = all.count(_.nodeName.contains("Exchange"))

@@ -123,6 +123,35 @@ class RecordPipelineSpec extends SparkSpec {
     assert(out.toSeq == truncated.toSeq)
   }
 
+  test("zlib: output many buffer fills long and over 4x its input inflates whole, then a short one") {
+    val payload = Array.tabulate(300000)(i => ('a' + i % 7).toByte)
+    val small = b("short record after a long one")
+    val df = spark.createDataFrame(
+      spark.sparkContext.parallelize(Seq(Row(payload), Row(small)), 1),
+      StructType(Seq(StructField("data", BinaryType))))
+    val deflated = df.select(RecordPipeline.deflateZlib(col("data")).as("z"))
+    val zs = deflated.collect().map(_.getAs[Array[Byte]]("z"))
+    assert(payload.length > 4 * zs(0).length && payload.length > 8 * 8192)
+    // one task on one thread: the short record reuses the grown inflate
+    // buffer and must still come back at its own exact length
+    val out = deflated.select(RecordPipeline.inflateZlib(col("z")).as("d"))
+      .collect().map(_.getAs[Array[Byte]]("d"))
+    assert(out(0).toSeq == payload.toSeq)
+    assert(out(1).toSeq == small.toSeq)
+  }
+
+  test("zlib: a stream that needs a preset dictionary passes through raw instead of stalling") {
+    val d = new java.util.zip.Deflater()
+    d.setDictionary(b("dictionary"))
+    d.setInput(b("dictionary words " * 40))
+    d.finish()
+    val buf = new Array[Byte](4096)
+    val z = buf.take(d.deflate(buf))
+    d.end()
+    assert(graft.plans.ZlibOps.looksZlib(z))
+    assert(graft.plans.ZlibOps.inflateOrRaw(z).toSeq == z.toSeq)
+  }
+
   // ---- partition keys (producer.go:54-63)
   test("random partition key is 32 lowercase hex chars, unique per row") {
     val df = spark.range(100)

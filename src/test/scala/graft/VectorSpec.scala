@@ -10,6 +10,31 @@ class VectorSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
   private def run(name: String) = SparkEntry.queries(name)(spark, sf)
 
+  /** k-means corpus of two tight 4-dim clusters far apart in dim 0. */
+  private val kmTwoClusters: Seq[(Long, Array[Float], Int)] =
+    (0L until 40L).map { id =>
+      val c = if (id % 2 == 0) 0.0f else 10.0f
+      (id, Array.tabulate(4)(j =>
+        c + (if (j == 0) (id % 5).toFloat * 0.01f else 0.0f)), 0)
+    }
+
+  /** k-means corpus of three 4-dim clusters 7 apart. */
+  private val kmThreeClusters: Seq[(Long, Array[Float], Int)] =
+    (0L until 60L).map { id =>
+      val c = (id % 3).toDouble * 7.0
+      (id, Array.tabulate(4)(j =>
+        (c + (id % 7).toDouble * 0.013 * (j + 1)).toFloat), 0)
+    }
+
+  /** k-means corpus whose k = 3 seeds include two identical vectors
+    * (ids 1 and 2), so seed 2's cluster is empty from the first pass.
+    */
+  private val kmEmptyCluster: Seq[(Long, Array[Float], Int)] = Seq(
+    (1L, Array.fill(64)(0.5f), 0),
+    (2L, Array.fill(64)(0.5f), 0),
+    (3L, Array.fill(64)(0.4f), 0),
+    (4L, Array.fill(64)(-0.5f), 0))
+
   test("q77 emits one centroid per (label, dim) and means stay in data range") {
     val df = run("q77_embed_centroids")
     val labels = df.select("label").distinct().count()
@@ -231,11 +256,7 @@ class VectorSpec extends SparkSpec {
     // on that: it recomputes the SAME seed rule and brute-force
     // assignment driver-side and compares exactly
     val dim = 4
-    val vecs = (0L until 40L).map { id =>
-      val c = if (id % 2 == 0) 0.0f else 10.0f
-      (id, Array.tabulate(dim)(j =>
-        c + (if (j == 0) (id % 5).toFloat * 0.01f else 0.0f)), 0)
-    }
+    val vecs = kmTwoClusters
     val emb = vecs.toDF("vec_id", "embedding", "label")
     val got = operators.VectorQueries.kmeansStep(emb, k = 2)
       .collect().map(r => (r.getLong(0), r.getInt(1)) ->
@@ -286,11 +307,7 @@ class VectorSpec extends SparkSpec {
   test("q120 iterated k-means: three driver-replicated Lloyd passes agree exactly") {
     import spark.implicits._
     val dim = 4
-    val vecs = (0L until 60L).map { id =>
-      val c = (id % 3).toDouble * 7.0
-      (id, Array.tabulate(dim)(j =>
-        (c + (id % 7).toDouble * 0.013 * (j + 1)).toFloat), 0)
-    }
+    val vecs = kmThreeClusters
     val emb = vecs.toDF("vec_id", "embedding", "label")
     val got = operators.VectorQueries.kmeansIterate(emb, k = 3, iters = 3)
       .collect().map(r => (r.getLong(0), r.getInt(1)) ->
@@ -357,12 +374,7 @@ class VectorSpec extends SparkSpec {
     // documented contract is that an empty cluster simply has no mean row
     // and drops out of later passes; pin that for one step AND a full
     // 3-pass iteration (k and iters are the exposed knobs).
-    val vecs = Seq(
-      (1L, Array.fill(64)(0.5f), 0),
-      (2L, Array.fill(64)(0.5f), 0),
-      (3L, Array.fill(64)(0.4f), 0),
-      (4L, Array.fill(64)(-0.5f), 0))
-    val emb = vecs.toDF("vec_id", "embedding", "label")
+    val emb = kmEmptyCluster.toDF("vec_id", "embedding", "label")
     for (iters <- Seq(1, 3)) {
       val rows = operators.VectorQueries.kmeansIterate(emb, k = 3, iters = iters)
         .collect()
@@ -375,6 +387,135 @@ class VectorSpec extends SparkSpec {
       val n = rows.map(r => r.getLong(0) -> r.getLong(3)).toMap
       assert(n == Map(1L -> 3L, 4L -> 1L), s"iters=$iters: member counts $n")
     }
+  }
+
+  /** Runs `f` and returns its result with the number of Spark jobs it
+    * started: jobs are counted by job group, and a marker job in a second
+    * group closes the count once the async listener bus has delivered it.
+    */
+  private def jobsOf[R](f: => R): (R, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"jobs-of-${System.nanoTime}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val closed = new java.util.concurrent.CountDownLatch(1)
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.incrementAndGet()
+          case Some(g) if g == s"$group-end" => closed.countDown()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(l)
+    try {
+      sc.setJobGroup(group, "counted")
+      val r = f
+      sc.setJobGroup(s"$group-end", "count marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(closed.await(30, java.util.concurrent.TimeUnit.SECONDS), "listener marker")
+      (r, jobs.get)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(l)
+    }
+  }
+
+  private def kmRows(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(r => (r.getLong(0), r.getInt(1), r.getDouble(2), r.getLong(3)))
+      .sorted.toSeq
+
+  /** Pins the k-means size dispatch to its distributed loop on `emb`:
+    * identical centroids from [[operators.VectorQueries.kmeansCentroids]]
+    * and `kmeansCentroidsLoop`, identical (cluster, dim, centroid,
+    * n_vectors) and schema from `kmeansIterate` and `kmeansIterateLoop`,
+    * at iters 1 and 3. Returns the jobs the dispatcher's `kmeansIterate`
+    * runs per call, result collected, for the caller to say which path
+    * it took.
+    */
+  private def kmPathsAgree(what: String, emb: org.apache.spark.sql.DataFrame,
+      k: Int): Seq[Int] = {
+    val vq = operators.VectorQueries
+    val base = emb.selectExpr("vec_id",
+      "transform(embedding, x -> CAST(x AS double)) AS v")
+    for (iters <- Seq(1, 3)) yield {
+      assert(vq.kmeansCentroids(base, k, iters) == vq.kmeansCentroidsLoop(base, k, iters),
+        s"$what, iters=$iters: centroids")
+      val (dispatched, jobs) = jobsOf {
+        val df = vq.kmeansIterate(emb, k, iters)
+        (df.schema, kmRows(df))
+      }
+      val loop = vq.kmeansIterateLoop(emb, k, iters)
+      assert(dispatched._1 == loop.schema, s"$what, iters=$iters: schema")
+      assert(dispatched._2 == kmRows(loop), s"$what, iters=$iters: final means")
+      assert(dispatched._2.nonEmpty, s"$what, iters=$iters: no means")
+      jobs
+    }
+  }
+
+  /** A seeded pseudo-random 64-dim float corpus of `n` vectors in one
+    * partition, read through a Spark job (not a local relation).
+    */
+  private def kmRandom(n: Int, seed: Long) =
+    spark.range(0, n, 1, 1).selectExpr("id AS vec_id", "CAST(0 AS INT) AS label",
+      s"""transform(sequence(0, 63), j -> CAST(
+         |  (xxhash64(id, j, ${seed}L) % 2000000) / 2000000.0D AS FLOAT)) AS embedding"""
+        .stripMargin)
+
+  test("k-means driver finish and distributed loop give identical centroids and means") {
+    import spark.implicits._
+    // local corpora fetch without a job, so the driver finish runs none
+    // at all here; the loop runs several per call
+    def local(what: String, vecs: Seq[(Long, Array[Float], Int)], k: Int): Unit = {
+      val jobs = kmPathsAgree(what, vecs.toDF("vec_id", "embedding", "label"), k)
+      assert(jobs.forall(_ == 0), s"$what: the driver finish ran jobs $jobs")
+    }
+    local("two clusters", kmTwoClusters, k = 2)
+    local("three clusters", kmThreeClusters, k = 3)
+    local("empty cluster", kmEmptyCluster, k = 3)
+    // widths 0..6: ragged centroids, and posexplode's per-dim counts
+    local("ragged", (0L until 48L).map { id =>
+      (id, Array.tabulate((id % 7).toInt)(j =>
+        ((id % 4) * 3 + j * 0.25 + id * 0.001).toFloat), 0)
+    }, k = 4)
+    for (k <- Seq(8, 73)) {
+      val jobs = kmPathsAgree(s"random k=$k", kmRandom(500, 11), k)
+      assert(jobs.forall(_ == 1), s"random k=$k: jobs per driver-finish call $jobs")
+    }
+  }
+
+  test("k-means null vectors join no cluster on either path; a null element sends the call to the loop") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("vec_id", LongType, nullable = false),
+      StructField("embedding", ArrayType(FloatType, containsNull = true))))
+    def md5hex(id: Long): String =
+      java.security.MessageDigest.getInstance("MD5").digest(id.toString.getBytes)
+        .map("%02x".format(_)).mkString
+    val vecs = kmThreeClusters.map { case (id, v, _) => id -> v.toSeq }
+    // the null vector takes the id that sorts last by md5, so it is no seed
+    val nullId = vecs.map(_._1).maxBy(md5hex)
+    def corpus(nullElementAt: Option[Long]) = spark.createDataFrame(
+      java.util.Arrays.asList(vecs.map { case (id, v) =>
+        if (id == nullId) Row(id, null)
+        else if (nullElementAt.contains(id)) Row(id, v.updated(2, null))
+        else Row(id, v)
+      }: _*), schema)
+    val onlyNullVector = kmPathsAgree("null vector", corpus(None), k = 3)
+    assert(onlyNullVector.forall(_ == 0), s"null vector: driver finish expected $onlyNullVector")
+    val nullElement = kmPathsAgree("null vector and element",
+      corpus(Some(vecs.map(_._1).filter(_ != nullId).head)), k = 3)
+    assert(nullElement.forall(_ > 1), s"null element: the loop expected, ran $nullElement jobs")
+  }
+
+  test("k-means driver finish runs exactly one Spark job per call") {
+    val emb = kmRandom(500, 23)
+    val base = emb.selectExpr("vec_id", "transform(embedding, x -> CAST(x AS double)) AS v")
+    val vq = operators.VectorQueries
+    assert(jobsOf(vq.kmeansIterate(emb, 8, 3).collect())._2 == 1)
+    assert(jobsOf(vq.kmeansCentroids(base, 8, 3))._2 == 1)
+    // the loop's seed fetch and two mean updates are jobs of their own
+    assert(jobsOf(vq.kmeansCentroidsLoop(base, 8, 3))._2 >= 3)
   }
 
   test("q123 keeps the highest-quality member of each within-cell semantic group") {
