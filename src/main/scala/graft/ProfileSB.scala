@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
   * expensive query. `ProfileSB <sfDir>` times each pipeline stage with a
   * noop-sink materialization so the committed artifact's price can be
   * attributed (corpus explode vs count tables vs term build vs scoring
-  * probe) instead of guessed at. Same diagnostic role as [[ProfileCC]].
+  * probe) instead of guessed at.
   */
 object ProfileSB {
   def main(args: Array[String]): Unit = {

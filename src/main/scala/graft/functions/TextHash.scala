@@ -94,7 +94,7 @@ object TextHash {
 
   /** 16-permutation MinHash signature over the text's 3-token shingles —
     * ONE md5 per shingle plus 16 linear permutations, replacing the r3–r13
-    * 16-md5s-per-shingle family that profiling (ProfileCC sf5) measured as
+    * 16-md5s-per-shingle family that a phase profile at sf5 measured as
     * the dominant cost of the whole LSH family:
     * `h = u64(md5(shingle)[0:16]) mod p` (first 8 digest bytes big-endian,
     * i.e. the first 16 hex chars), `sig(i) = min over shingles of

@@ -282,11 +282,12 @@ object VectorQueries {
     // One exact k-means (Lloyd) step over the embedding corpus — the
     // clustering primitive under SemDeDup-style pipelines (Abbas et al.
     // 2023 cluster before deduplicating) and domain-discovery mixes:
-    // deterministic hash-seeded centroids (the k lowest md5(vec_id) —
-    // reproducible across engines AND cluster re-runs, the q71 sampling
-    // argument), nearest-centroid assignment, and the exact recomputed
-    // per-dimension centroid means. 100 TB posture: the k seed vectors
-    // collect to the driver (k×64 doubles) and assignment is a MAP-ONLY
+    // deterministic hash-seeded centroids (the k non-null vectors with
+    // the lowest md5(vec_id) — reproducible across engines AND cluster
+    // re-runs, the q71 sampling argument), nearest-centroid assignment,
+    // and the exact recomputed per-dimension centroid means. 100 TB
+    // posture: the k seed vectors collect to the driver (k×64 doubles)
+    // and assignment is a MAP-ONLY
     // pass — dist² = v·v − 2·v·c + c·c per seed as literal-embedded
     // codegen'd `graft_vector_dot` expressions, argmin via one
     // `array_min` over (round(d2, 6), c_id) structs, no join and no
@@ -297,7 +298,7 @@ object VectorQueries {
     // fold-order contract), and rounding-then-id tie-break.
     Q("q119_kmeans_step", Some("""
       WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-      seeds AS (SELECT vec_id AS c_id, v AS cv FROM base
+      seeds AS (SELECT vec_id AS c_id, v AS cv FROM base WHERE v IS NOT NULL
                 ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 8),
       asg AS (
         SELECT b.vec_id, b.v, s.c_id,
@@ -329,7 +330,7 @@ object VectorQueries {
     // end — no float drift can accumulate across passes.
     Q("q120_kmeans_iterate", Some(s"""
       WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-      seeds AS (SELECT vec_id AS c_id, v AS cv FROM base
+      seeds AS (SELECT vec_id AS c_id, v AS cv FROM base WHERE v IS NOT NULL
                 ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 8),
       ${kmAsgSql("base", "seeds", "asg1")},
       ${kmCentSql("asg1", "cent1")},
@@ -408,7 +409,7 @@ object VectorQueries {
     Q("q123_kmeans_semdedup", Some(s"""
       WITH RECURSIVE base AS ($semBaseSql),
       n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM base),
-      seeds AS (SELECT vec_id AS c_id, v AS cv FROM base
+      seeds AS (SELECT vec_id AS c_id, v AS cv FROM base WHERE v IS NOT NULL
                 ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
                 LIMIT ${semDedupKSql("base")}),
       ${kmAsgSql("base", "seeds", "asg1")},
@@ -500,7 +501,7 @@ object VectorQueries {
     // (b), s = (b − a) / max(a, b) rounded at 6 dp, means decimal-routed.
     Q("q135_kmeans_silhouette", Some(s"""
       WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-      seeds AS (SELECT vec_id AS c_id, v AS cv FROM base
+      seeds AS (SELECT vec_id AS c_id, v AS cv FROM base WHERE v IS NOT NULL
                 ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 8),
       ${kmAsgSql("base", "seeds", "asg1")},
       ${kmCentSql("asg1", "cent1")},
@@ -695,11 +696,12 @@ object VectorQueries {
   private def kmListSql(cent: String, cl: String): String = s"""
       $cl AS (SELECT c_id, list(c ORDER BY i) AS cv FROM $cent GROUP BY c_id)"""
 
-  /** q119 kernel: one exact Lloyd iteration. Seeds = the k corpus vectors
-    * with the lexicographically smallest md5(vec_id) (vec_id tie-break) —
-    * deterministic, engine-portable, and unclustered-data-safe (md5
-    * scatters ids, so seeds are an unbiased sample; k-means++ would need
-    * engine-identical weighted sampling, which floats forbid). Assignment
+  /** q119 kernel: one exact Lloyd iteration. Seeds = the k non-null
+    * corpus vectors with the lexicographically smallest md5(vec_id)
+    * (vec_id tie-break) — deterministic, engine-portable, and
+    * unclustered-data-safe (md5 scatters ids, so seeds are an unbiased
+    * sample; k-means++ would need engine-identical weighted sampling,
+    * which floats forbid). Assignment
     * is the nearest seed by dist² rounded to 6 dp with c_id tie-break
     * ([[graft.plans.KmeansKernel.argmin]], the list_dot_product
     * fold-order contract of q45); the centroid update is the q77
@@ -812,8 +814,8 @@ object VectorQueries {
     "array(" + xs.map(x => s"${x}D").mkString(",") + ")"
 
   /** The centroids the last assignment pass of [[kmeansAssign]] uses:
-    * seeds = the k corpus vectors with the smallest md5(vec_id) (vec_id
-    * tie-break), then `iters − 1` mean updates. Exposed so
+    * seeds = the k non-null corpus vectors with the smallest md5(vec_id)
+    * (vec_id tie-break), then `iters − 1` mean updates. Exposed so
     * silhouette/diagnostic passes can score against exactly the
     * centroids the assignment saw. The same size dispatch as
     * [[kmeansIterate]]: a corpus of at most [[KmeansDriverVectors]] rows
@@ -836,7 +838,7 @@ object VectorQueries {
   private[graft] def kmeansCentroidsLoop(base: DataFrame, k: Int,
       iters: Int): Seq[(Long, Seq[Double])] = {
     var centroids: Seq[(Long, Seq[Double])] =
-      graft.Bounded.collect(base
+      graft.Bounded.collect(base.where(col("v").isNotNull)
         .select(col("vec_id"), col("v"), md5(col("vec_id").cast("string")).as("mk"))
         .orderBy(col("mk"), col("vec_id")).limit(k),
         cap = k, what = s"k-means seed rows (k=$k)")
@@ -875,10 +877,10 @@ object VectorQueries {
     * corpus has more than [[KmeansDriverVectors]] rows or holds a row
     * the driver would not reproduce bit for bit: a null element (the
     * loop's sum skips it but its count does not), an element
-    * CAST(x AS DECIMAL(18,9)) does not give a value for, a null vector
-    * among the k seeds (the loop's own failure), or magnitudes large
-    * enough that an exact per-(cluster, dim) sum could overflow a Long
-    * of 1e-9 units. A null vector elsewhere joins no cluster on either
+    * CAST(x AS DECIMAL(18,9)) does not give a value for, or magnitudes
+    * large enough that an exact per-(cluster, dim) sum could overflow a
+    * Long of 1e-9 units. Seeds are drawn from non-null vectors only, as
+    * in the loop and the oracle; a null vector joins no cluster on either
     * path.
     */
   private def kmFetch(base: DataFrame, k: Int): Option[KmCorpus] =
@@ -888,10 +890,10 @@ object VectorQueries {
       val vs = rows.map(r =>
         if (r.isNullAt(1)) null else r.getSeq[Any](1).toArray)
       val units = vs.map(v => if (v == null) Array.empty[Long] else v.map(decimalUnits))
-      val seeds = ids.indices
+      val seeds = ids.indices.filter(vs(_) != null)
         .map(i => (DigestUtils.md5Hex(ids(i).toString), ids(i), i)).sorted
         .slice(0, k).map(_._3)
-      val reproducible = seeds.forall(vs(_) != null) && units.forall(_.forall(u =>
+      val reproducible = units.forall(_.forall(u =>
         u != NoUnits && math.abs(u) <= Long.MaxValue / rows.length))
       if (!reproducible) None
       else Some(new KmCorpus(ids,

@@ -21,9 +21,10 @@ import java.security.MessageDigest
   *    — we only promise stable, uniform, engine-independent routing, not
   *    the service's exact key→shard map);
   *  - each record lands as `<path>/<stream>/<shard>/<seq 20-digit>.rec`
-  *    containing `key \n payload` — exactly the layout
-  *    [[graft.streaming.ProduceSink.PutRecordWriter]] writes and
-  *    [[ShardSpoolSource]] reads, so native write → native read round-trips.
+  *    containing `key \n payload` — the layout [[ShardSpoolSource]] reads,
+  *    so native write → native read round-trips. `graft.Cli produce`
+  *    drives this sink's own writer and [[ShardSpoolWrite.publish]] on the
+  *    driver, so the CLI writes the same layout.
   *
   * Exactly-once protocol (streaming): tasks stage records under
   * `<path>/.staging/<writeId>-<epoch>/`; the driver's `commit` then
@@ -126,12 +127,17 @@ class ShardSpoolWrite(opts: Map[String, String], inputSchema: StructType)
   private def rename(plan: Seq[(File, File)]): Unit =
     plan.foreach { case (src, target) => renameOne(src, target) }
 
-  /** Batch commit has no intent manifest to resume from (Spark fails the
-    * whole job on commit failure), so a rename that throws mid-commit
-    * must not leave the targets renamed so far permanently visible:
-    * best-effort unlink them before rethrowing.
+  override def commit(messages: Array[WriterCommitMessage]): Unit = publish(messages)
+
+  /** The batch commit: publishes every staged record and returns its
+    * (shardId, sequenceNumber), in message order and, within a message,
+    * in write order — `graft.Cli produce` prints these as its acks. There
+    * is no intent manifest to resume from (Spark fails the whole job on
+    * commit failure), so a rename that throws mid-commit must not leave
+    * the targets renamed so far permanently visible: best-effort unlink
+    * them before rethrowing.
     */
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
+  private[graft] def publish(messages: Array[WriterCommitMessage]): Seq[(String, Long)] = {
     val done = scala.collection.mutable.ArrayBuffer.empty[File]
     try
       planRenames(messages).foreach { case (src, target) =>
@@ -145,6 +151,7 @@ class ShardSpoolWrite(opts: Map[String, String], inputSchema: StructType)
         throw e
     }
     deleteStaging()
+    done.map(t => (t.getParentFile.getName, t.getName.stripSuffix(".rec").toLong)).toSeq
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = deleteStaging()

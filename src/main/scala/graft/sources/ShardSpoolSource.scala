@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.streaming.StartPosition
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -16,8 +17,8 @@ import scala.collection.JavaConverters._
 /** DataSource V2 micro-batch source implementing the shard-spool protocol
   * natively (SURVEY.md §2 A2–A4, A6; §4.2's "proper DSv2 source" option).
   *
-  * Layout (exactly what [[graft.streaming.ProduceSink.PutRecordWriter]]
-  * writes — produce → consume round-trips through one directory contract):
+  * Layout (exactly what [[ShardSpoolSink]] writes, for `graft.Cli produce`
+  * too — produce → consume round-trips through one directory contract):
   *
   * {{{
   *   <path>/<stream>/<shardId>/<seq 20-digit>.rec   ("key\n" ++ payload)
@@ -43,8 +44,9 @@ import scala.collection.JavaConverters._
   *    trigger (per-shard admission control, like the per-fetch cap);
   *  - `NextShardIterator` threading (consumer.go:137,166) → the
   *    checkpointed per-shard offset map, JSON `{shard: lastSeqInclusive}`;
-  *  - iterator modes (consumer.go:125-130): LATEST / TRIM_HORIZON resolve
-  *    in `initialOffset`; AT_SEQUENCE_NUMBER seeds the offset map;
+  *  - iterator modes (consumer.go:125-130), parsed by
+  *    [[graft.streaming.StartPosition.parse]]: LATEST / TRIM_HORIZON
+  *    resolve in `initialOffset`; AT_SEQUENCE_NUMBER seeds the offset map;
   *    AT_TIMESTAMP filters on arrival time (file mtime) at read.
   *
   * Usage:
@@ -155,28 +157,22 @@ class ShardSpoolScan(opts: Map[String, String]) extends Scan {
     override def createReaderFactory(): PartitionReaderFactory = new ShardReaderFactory
   }
 
-  private def sinceMicros: Long = {
-    // AT_TIMESTAMP filter; other modes don't constrain arrival time.
-    // Invalid RFC3339 fails here, before the stream starts (C10/D3).
-    if (opts.getOrElse("iterator", "LATEST") == "AT_TIMESTAMP")
-      opts.get("since") match {
-        case Some(s) =>
-          try java.time.OffsetDateTime.parse(s).toInstant.toEpochMilli * 1000L
-          catch {
-            case e: java.time.format.DateTimeParseException =>
-              throw new IllegalArgumentException(
-                s"--since needs to be in RFC3339 format. $s: ${e.getMessage}")
-          }
-        case None => Long.MinValue // zero time: everything (consumer.go:63-72)
-      }
-    else Long.MinValue
+  /** The start position, through the CLI's own parser: an invalid
+    * RFC3339 `since` fails here, before the stream starts (C10/D3).
+    */
+  private lazy val start = StartPosition.parse(opts.getOrElse("iterator", "LATEST"),
+    opts.get("since"), opts.get("seq").map(_.toLong))
+
+  /** AT_TIMESTAMP filters on arrival time; other modes don't constrain it. */
+  private def sinceMicros: Long = start match {
+    case StartPosition.AtTimestamp(ts) => ts.toEpochMilli * 1000L
+    case _ => Long.MinValue
   }
 
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
     new MicroBatchStream
       with org.apache.spark.sql.connector.read.streaming.SupportsAdmissionControl
       with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
-      private val iteratorType = opts.getOrElse("iterator", "LATEST")
       private val limitPerTrigger = opts.getOrElse("limitpertrigger", "500").toLong
       private val since = sinceMicros
       // shard set fixed at query open, like the reference (consumer.go:83-85)
@@ -194,18 +190,12 @@ class ShardSpoolScan(opts: Map[String, String]) extends Scan {
 
       override def initialOffset(): Offset = {
         val m = shards.map { shard =>
-          val existing = ShardSpoolSource.seqs(new java.io.File(streamDir, shard))
-          iteratorType match {
-            case "LATEST" => shard -> existing.lastOption.getOrElse(-1L)
-            case "TRIM_HORIZON" | "AT_TIMESTAMP" => shard -> -1L
-            case "AT_SEQUENCE_NUMBER" =>
-              val seq = opts.getOrElse("seq",
-                throw new IllegalArgumentException(
-                  "AT_SEQUENCE_NUMBER needs option 'seq'")).toLong
-              shard -> (seq - 1) // start inclusive at `seq`
-            case other =>
-              throw new IllegalArgumentException(s"unknown iterator type $other")
-          }
+          shard -> (start match {
+            case StartPosition.Latest =>
+              ShardSpoolSource.seqs(new java.io.File(streamDir, shard)).lastOption.getOrElse(-1L)
+            case StartPosition.TrimHorizon | StartPosition.AtTimestamp(_) => -1L
+            case StartPosition.AtSequenceNumber(seq) => seq - 1 // start inclusive at `seq`
+          })
         }.toMap
         ShardOffsets(m)
       }

@@ -1,76 +1,14 @@
 package graft.streaming
 
 import graft.kpl.KplCodec
-import org.apache.spark.sql.{DataFrame, ForeachWriter, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Producer path (SURVEY.md §2 B1/B2/B5, D2, D4) — the kitkat `produce`
-  * command re-expressed as a Structured Streaming sink.
-  *
-  * The reference producer (producer/producer.go) does one synchronous
-  * PutRecord per stdin line, prints-and-continues on per-record errors, and
-  * optionally prints a `ShardId SequenceNumber` ack. Here PutRecord is
-  * emulated as one file per record in the spool layout [[RecordSchema]]
-  * readers consume — so produce → consume round-trips through the same
-  * directory contract.
+/** The producer's KPL aggregation. The PutRecord path itself (SURVEY.md
+  * §2 B1/B2/B5, D2) is the `graft-shards` sink
+  * ([[graft.sources.ShardSpoolSink]]), which `graft.Cli produce` drives.
   */
 object ProduceSink {
-
-  /** Kinesis routes a record by the MD5 of its partition key onto a shard's
-    * hash-key range; with N equal shards that is the top byte mod N.
-    */
-  def shardFor(partitionKey: String, nShards: Int): String = {
-    val d = java.security.MessageDigest.getInstance("MD5")
-      .digest(partitionKey.getBytes("UTF-8"))
-    f"shardId-${(d(0) & 0xFF) % nShards}%012d"
-  }
-
-  /** Per-record PutRecord emulation — producer.go:38-52.
-    *
-    * Expects rows with `partitionKey: string` and `data: binary`. Errors on
-    * a single record are printed and swallowed (producer.go:44-46 — the
-    * stream continues); `verbose` prints the `ShardId SequenceNumber` ack
-    * and `---` separator (producer.go:47-50).
-    */
-  final class PutRecordWriter(
-      spoolDir: String, stream: String, nShards: Int, verbose: Boolean)
-      extends ForeachWriter[Row] {
-
-    @transient private var partitionId: Long = _
-    @transient private var epochId: Long = _
-    @transient private var rowIdx: Long = _
-
-    override def open(partitionId: Long, epochId: Long): Boolean = {
-      this.partitionId = partitionId; this.epochId = epochId; this.rowIdx = 0
-      true
-    }
-
-    override def process(row: Row): Unit =
-      try {
-        val key = row.getAs[String]("partitionKey")
-        val data = row.getAs[Array[Byte]]("data")
-        val shard = shardFor(key, nShards)
-        // sortable unique sequence number: epoch | partition | row
-        val seq = (epochId << 40) | (partitionId << 20) | rowIdx
-        rowIdx += 1
-        val dir = new java.io.File(s"$spoolDir/$stream/$shard")
-        dir.mkdirs()
-        val f = new java.io.File(dir, f"$seq%020d.rec")
-        val out = new java.io.FileOutputStream(f)
-        try {
-          out.write(key.getBytes("UTF-8")); out.write('\n'); out.write(data)
-        } finally out.close()
-        if (verbose) {
-          println(s"$shard $seq")
-          println("---")
-        }
-      } catch {
-        // per-record tolerance: print, continue (producer.go:44-46)
-        case e: Exception => println(s"ERROR: ${e.getMessage}")
-      }
-
-    override def close(errorOrNull: Throwable): Unit = ()
-  }
 
   /** Produce-side KPL aggregation — the reference's `--aggregated` flag is
     * parsed but never implemented (command/produce.go:26, README "under

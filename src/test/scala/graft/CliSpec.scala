@@ -1,15 +1,15 @@
 package graft
 
-import graft.streaming._
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
+import org.apache.spark.sql.types.{BinaryType, StringType, StructField, StructType}
 import java.nio.charset.StandardCharsets
 import java.nio.file.Files
-import java.sql.Timestamp
 
 /** CLI + control-semantics suite: arg validation (§2 D3, ports the
   * TestRead error cases of consumer_test.go:39-107), fail-fast first-error
-  * termination (§2 D1), and the assembled consume pipeline.
+  * termination (§2 D1), the assembled consume pipeline, and produce →
+  * consume round trips through one `graft-shards` spool.
   */
 class CliSpec extends SparkSpec {
 
@@ -62,26 +62,22 @@ class CliSpec extends SparkSpec {
 
   // ---- the assembled consume pipeline (SURVEY §3.1 lifecycle)
   private def b(s: String): Array[Byte] = s.getBytes(StandardCharsets.UTF_8)
+  private def tmp(): String = Files.createTempDirectory("graft-cli").toString
 
   test("consume pipeline: deaggregate + zlib + console projection end-to-end") {
-    val dir = Files.createTempDirectory("graft-cli").toString
+    val dir = tmp()
     val deflated = {
       val buf = new java.io.ByteArrayOutputStream()
       val dos = new java.util.zip.DeflaterOutputStream(buf)
       dos.write(b("compressed payload\n")); dos.close(); buf.toByteArray
     }
-    val framed = graft.kpl.KplCodec.aggregate(Seq("k1" -> deflated))
-    val rows = Seq(
-      Row("shardId-000000000000", 1L, Timestamp.valueOf("2024-01-02 03:04:05"),
-        "parent", framed, "NONE"))
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), RecordSchema.schema)
-      .write.parquet(s"$dir/s1")
+    Spool.put(dir, "s1", "shardId-000000000000", 1, "parent",
+      graft.kpl.KplCodec.aggregate(Seq("k1" -> deflated)), at = "2024-01-02 03:04:05")
     val cfg = Cli.ConsumeConfig(streams = Seq("s1"), iterator = "TRIM_HORIZON",
       compress = Some("zlib"), spool = dir)
-    val lines = Cli.consumeFrame(spark, cfg, batch = true)
-      .collect().map(_.getString(0))
+    val (lines, _) = Spool.drain(spark, Cli.consumeFrame(spark, cfg))
     // deaggregated, inflated, trailing \n trimmed, ts-formatted
-    assert(lines.toSeq == Seq("2024-01-02 03:04:05 compressed payload"))
+    assert(lines == Seq("2024-01-02 03:04:05 compressed payload"))
   }
 
   test("--verify-md5 passes NULL-data rows through while dropping corrupt frames") {
@@ -90,47 +86,97 @@ class CliSpec extends SparkSpec {
     // and be silently dropped — diverging from the default path, which
     // passes NULLs through deaggregate. The verify filter must only drop
     // provably-corrupt KPL frames.
-    val dir = Files.createTempDirectory("graft-cli").toString
+    val dir = tmp()
     val goodFrame = graft.kpl.KplCodec.aggregate(Seq("k1" -> b("good payload\n")))
     val corruptFrame = {
       val f = goodFrame.clone()
       f(f.length - 1) = (f(f.length - 1) ^ 0x5A).toByte // break the MD5 trailer
       f
     }
-    val rows = Seq(
-      Row("shardId-000000000000", 1L, Timestamp.valueOf("2024-01-02 03:04:05"),
-        "pk-good", goodFrame, "NONE"),
-      Row("shardId-000000000000", 2L, Timestamp.valueOf("2024-01-02 03:04:06"),
-        "pk-corrupt", corruptFrame, "NONE"),
-      Row("shardId-000000000000", 3L, Timestamp.valueOf("2024-01-02 03:04:07"),
-        "pk-null", null, "NONE"))
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), RecordSchema.schema)
-      .write.parquet(s"$dir/s1")
+    Spool.put(dir, "s1", "shardId-000000000000", 1, "pk-good", goodFrame)
+    Spool.put(dir, "s1", "shardId-000000000000", 2, "pk-corrupt", corruptFrame)
+    Spool.put(dir, "s1", "shardId-000000000000", 3, "pk-plain", b("plain payload"))
     val cfg = Cli.ConsumeConfig(streams = Seq("s1"), iterator = "TRIM_HORIZON",
       spool = dir, verifyMd5 = true)
-    val out = Cli.consumeFrame(spark, cfg, batch = true)
-      .collect().map(_.getString(0)).sorted
-    // corrupt frame dropped whole; good frame deaggregated; NULL-data row kept
-    assert(out.length == 2, s"got ${out.toSeq}")
-    assert(out.exists(_.endsWith("good payload")))
-    assert(out.forall(!_.contains("corrupt")))
+    val (out, _) = Spool.drain(spark, Cli.consumeFrame(spark, cfg))
+    // corrupt frame dropped whole; good frame deaggregated; plain record kept
+    assert(out.map(_.drop(20)).sorted == Seq("good payload", "plain payload"), out)
+    // a spool record always has data, so the NULL arm is pinned on a frame
+    val withNull = spark.createDataFrame(java.util.Arrays.asList(
+        Row("pk-null", null), Row("pk-corrupt", corruptFrame), Row("pk-good", goodFrame)),
+      StructType(Seq(StructField("partitionKey", StringType), StructField("data", BinaryType))))
+    assert(Cli.verifiedFrames(withNull).collect().map(_.getString(0)).sorted.toSeq ==
+      Seq("pk-good", "pk-null"))
   }
 
   // ---- D1: first stream error terminates the query (consumer.go:57-61)
   test("fail-fast: a poisoned shard file kills the whole query") {
-    val dir = Files.createTempDirectory("graft-cli").toString
-    spark.createDataFrame(spark.sparkContext.parallelize(Seq(
-      Row("shardId-000000000000", 1L, Timestamp.valueOf("2024-01-01 00:00:00"),
-        "k", b("ok"), "NONE")), 1), RecordSchema.schema)
-      .write.parquet(s"$dir/s1")
-    // corrupt parquet: valid footer magic missing → task failure at read
-    Files.write(java.nio.file.Paths.get(s"$dir/s1/zzz-poison.parquet"),
-      "this is not parquet".getBytes(StandardCharsets.UTF_8))
-    val r = new StreamReader(StreamReaderConfig(dir, Seq("s1"), StartPosition.TrimHorizon))
-    val q = r.load(spark).writeStream.format("memory")
+    val dir = tmp()
+    Spool.put(dir, "s1", "shardId-000000000000", 1, "k", b("ok"))
+    // a record file whose name is no sequence number fails the shard listing
+    Files.write(java.nio.file.Paths.get(s"$dir/s1/shardId-000000000000/poison.rec"),
+      b("k\nbad"))
+    val cfg = Cli.ConsumeConfig(streams = Seq("s1"), iterator = "TRIM_HORIZON", spool = dir)
+    val q = Cli.consumeFrame(spark, cfg).writeStream.format("memory")
       .queryName(s"t${System.nanoTime()}")
       .trigger(Trigger.AvailableNow()).start()
     val e = intercept[StreamingQueryException] { q.awaitTermination() }
     assert(e.getMessage != null)
+  }
+
+  // ---- produce → consume through one spool (ROADMAP Direction C)
+  /** Runs `graft.Cli produce` argv over `lines` as its stdin; returns what it printed. */
+  private def produce(argv: Seq[String], lines: Seq[String]): Seq[String] = {
+    val Right(Cli.Produce(cfg)) = Cli.parse(argv): @unchecked
+    val out = new java.io.ByteArrayOutputStream()
+    Console.withOut(out)(Cli.produce(spark, cfg, lines))
+    out.toString(StandardCharsets.UTF_8).linesIterator.toSeq
+  }
+
+  /** Runs `graft.Cli consume -I TRIM_HORIZON` argv to the end of the spool. */
+  private def consumeAll(argv: Seq[String]): Seq[String] = {
+    val Right(Cli.Consume(cfg)) = Cli.parse(argv ++ Seq("-I", "TRIM_HORIZON")): @unchecked
+    Spool.drain(spark, Cli.consumeFrame(spark, cfg))._1
+  }
+
+  /** (shardId, sequence number) of every published record file. */
+  private def published(dir: String, stream: String): Set[(String, Long)] =
+    new java.io.File(dir, stream).listFiles().filter(_.isDirectory)
+      .filterNot(_.getName.startsWith("_"))
+      .flatMap(d => d.list().filter(_.endsWith(".rec"))
+        .map(f => (d.getName, f.stripSuffix(".rec").toLong))).toSet
+
+  test("CLI round trip: produce -a frames the lines, consume de-aggregates every one") {
+    val dir = tmp()
+    val lines = Seq("alpha", "beta", "gamma")
+    assert(produce(Seq("produce", "-s", "s1", "-a", "-k", "fixed", "--spool", dir), lines).isEmpty)
+    assert(published(dir, "s1").size == 1, "one key, one KPL frame")
+    val out = consumeAll(Seq("consume", "-s", "s1", "--spool", dir))
+    assert(out.map(_.drop(20)).sorted == lines)
+  }
+
+  test("CLI produce twice with -k fixed keeps all six records, contiguous in one shard") {
+    val dir = tmp()
+    val argv = Seq("produce", "-s", "s1", "-k", "fixed", "--spool", dir)
+    produce(argv, Seq("a1", "a2", "a3"))
+    produce(argv, Seq("b1", "b2", "b3"))
+    val out = consumeAll(Seq("consume", "-s", "s1", "-v", "--spool", dir))
+      .map(_.split(" ")).map(f => (f(3), f(4).toLong, f(5))).sortBy(_._2)
+    assert(out.map(_._1).distinct.length == 1, s"one key, one shard: $out")
+    assert(out.map(_._2) == (0L until 6L))
+    assert(out.map(_._3) == Seq("a1", "a2", "a3", "b1", "b2", "b3"))
+  }
+
+  test("CLI produce -v acks name exactly the published files, in stdin order") {
+    val dir = tmp()
+    val lines = (1 to 8).map(i => s"line$i")
+    val printed = produce(Seq("produce", "-s", "s1", "-v", "--spool", dir), lines)
+    assert(printed.length == 2 * lines.length)
+    assert(printed.grouped(2).forall(_(1) == "---"), printed)
+    val acks = printed.grouped(2).map(_.head.split(" ")).map(a => (a(0), a(1).toLong)).toSeq
+    assert(acks.toSet == published(dir, "s1") && acks.distinct.length == lines.length)
+    val landed = consumeAll(Seq("consume", "-s", "s1", "-v", "--spool", dir))
+      .map(_.split(" ")).map(f => f(5) -> (f(3), f(4).toLong)).toMap
+    assert(lines.map(landed) == acks, "ack i names the file line i landed in")
   }
 }

@@ -7,19 +7,15 @@ import java.nio.file.Files
 
 /** DSv2 shard-spool source suite: native micro-batch offsets, start modes,
   * per-shard partitions, admission control, closed shards, checkpoint
-  * resume — over the exact files PutRecordWriter produces.
+  * resume — over the `.rec` files the graft-shards sink publishes.
   */
 class ShardSpoolSourceSpec extends SparkSpec {
 
   private def tmp(): String = Files.createTempDirectory("graft-dsv2").toString
 
-  /** Write one record the PutRecordWriter way: "<key>\n<payload>". */
   private def put(dir: String, stream: String, shard: String, seq: Long,
-      key: String, payload: String): Unit = {
-    val d = new java.io.File(s"$dir/$stream/$shard"); d.mkdirs()
-    Files.write(new java.io.File(d, f"$seq%020d.rec").toPath,
-      (key + "\n" + payload).getBytes(StandardCharsets.UTF_8))
-  }
+      key: String, payload: String): Unit =
+    Spool.put(dir, stream, shard, seq, key, payload.getBytes(StandardCharsets.UTF_8))
 
   private def reader(dir: String, extra: (String, String)*): DataFrame = {
     var r = spark.readStream.format("graft-shards")

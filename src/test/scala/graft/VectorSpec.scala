@@ -508,6 +508,22 @@ class VectorSpec extends SparkSpec {
     assert(nullElement.forall(_ > 1), s"null element: the loop expected, ran $nullElement jobs")
   }
 
+  test("k-means seeds skip null vectors: a null vector that sorts md5-first is no seed on either path") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("vec_id", LongType, nullable = false),
+      StructField("embedding", ArrayType(FloatType))))
+    // md5("4") sorts before md5("1") < md5("2") < md5("3")
+    val emb = spark.createDataFrame(java.util.Arrays.asList(
+      Row(1L, Seq(0.0f, 0.0f)), Row(2L, Seq(10.0f, 10.0f)),
+      Row(3L, Seq(0.5f, 0.5f)), Row(4L, null)), schema)
+    val jobs = kmPathsAgree("null md5-first vector", emb, k = 2)
+    assert(jobs.forall(_ == 0), s"null md5-first vector: driver finish expected $jobs")
+    val base = emb.selectExpr("vec_id", "transform(embedding, x -> CAST(x AS double)) AS v")
+    assert(operators.VectorQueries.kmeansCentroids(base, 2, 1) ==
+      Seq(1L -> Seq(0.0, 0.0), 2L -> Seq(10.0, 10.0)))
+  }
+
   test("k-means driver finish runs exactly one Spark job per call") {
     val emb = kmRandom(500, 23)
     val base = emb.selectExpr("vec_id", "transform(embedding, x -> CAST(x AS double)) AS v")
