@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
 object ProfileSB {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("benchdata/sf5")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
     val builder = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

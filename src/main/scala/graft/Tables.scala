@@ -44,9 +44,21 @@ object Tables {
     * heavy family (the 22-query sf5 probe dropped 150 s → 70 s). The
     * cache key is the generated source; 5000 entries is megabytes of
     * metaspace, not heap.
+    *
+    * Artifact isolation is off so that streaming queries share that cache.
+    * Spark 4.1 keys a cached class on the task thread's context classloader
+    * as well as on its source. With isolation on, every streaming query
+    * runs in a cloned session whose tasks get a classloader of their own,
+    * so each new query compiled the whole consume plan again, source for
+    * source identical to the last one, and ran its first micro-batch cold:
+    * 7-8 compiles per drain, first-trigger tasks about twice as slow as
+    * the second trigger's. graft adds no per-session jars or files, so
+    * isolation protects nothing here. Batch queries in one session share
+    * one loader and hit the cache either way.
     */
   val staticConf: Map[String, String] = Map(
-    "spark.sql.codegen.cache.maxEntries" -> "5000")
+    "spark.sql.codegen.cache.maxEntries" -> "5000",
+    "spark.sql.artifact.isolation.enabled" -> "false")
 
   /** SQL yielding `events.ts` as epoch-MICROSECOND BIGINT, robust to the
     * fixture's on-disk encoding. The driver's testdata has shipped `ts`

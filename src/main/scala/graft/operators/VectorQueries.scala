@@ -746,7 +746,7 @@ object VectorQueries {
     */
   def kmeansIterate(emb: DataFrame, k: Int = 8, iters: Int = 3): DataFrame = {
     val base = kmBase(emb)
-    kmFetch(base, k) match {
+    kmFetch(base, _ => k) match {
       case Some(c) =>
         val rows = c.pass(c.centroids(iters)).map { case (cid, dim, m, n) =>
           org.apache.spark.sql.Row(cid, dim, m, n)
@@ -798,9 +798,9 @@ object VectorQueries {
   /** Final-pass Lloyd ASSIGNMENT after `iters` passes over a prepared
     * `base` with `vec_id` and double-array `v` (extra columns ride
     * along): returns `base`'s columns plus `cluster`. This is the
-    * composition seam q123 builds on — the assignment, not just the
-    * means, is the useful product of k-means in a SemDeDup-shaped
-    * pipeline. Same arithmetic contract as [[kmeansIterate]]; the
+    * composition seam q123 builds on (with a corpus-derived k) — the
+    * assignment, not just the means, is the useful product of k-means in
+    * a SemDeDup-shaped pipeline. Same arithmetic contract as [[kmeansIterate]]; the
     * centroids come from [[kmeansCentroids]]'s size dispatch and the
     * final assignment is always the distributed map-only pass.
     */
@@ -824,9 +824,16 @@ object VectorQueries {
     */
   private[graft] def kmeansCentroids(base: DataFrame, k: Int,
       iters: Int): Seq[(Long, Seq[Double])] =
+    kmeansCentroidsSized(base, _ => k, iters)
+
+  /** [[kmeansCentroids]] with k derived from the corpus row count n: the
+    * driver finish reads n off its fetch, so only the loop pays a count.
+    */
+  private def kmeansCentroidsSized(base: DataFrame, k: Long => Int,
+      iters: Int): Seq[(Long, Seq[Double])] =
     kmFetch(base, k) match {
       case Some(c) => c.centroids(iters)
-      case None => kmeansCentroidsLoop(base, k, iters)
+      case None => kmeansCentroidsLoop(base, k(base.count()), iters)
     }
 
   /** The distributed centroid loop behind [[kmeansCentroids]], for
@@ -881,9 +888,9 @@ object VectorQueries {
     * large enough that an exact per-(cluster, dim) sum could overflow a
     * Long of 1e-9 units. Seeds are drawn from non-null vectors only, as
     * in the loop and the oracle; a null vector joins no cluster on either
-    * path.
+    * path. `k` maps the corpus row count to the number of seeds.
     */
-  private def kmFetch(base: DataFrame, k: Int): Option[KmCorpus] =
+  private def kmFetch(base: DataFrame, k: Long => Int): Option[KmCorpus] =
     graft.Bounded.upTo(base.select("vec_id", "v"), KmeansDriverVectors,
         "k-means corpus (vec_id, v)").flatMap { rows =>
       val ids = rows.map(_.getLong(0))
@@ -892,7 +899,7 @@ object VectorQueries {
       val units = vs.map(v => if (v == null) Array.empty[Long] else v.map(decimalUnits))
       val seeds = ids.indices.filter(vs(_) != null)
         .map(i => (DigestUtils.md5Hex(ids(i).toString), ids(i), i)).sorted
-        .slice(0, k).map(_._3)
+        .slice(0, k(rows.length.toLong)).map(_._3)
       val reproducible = units.forall(_.forall(u =>
         u != NoUnits && math.abs(u) <= Long.MaxValue / rows.length))
       if (!reproducible) None
@@ -1158,8 +1165,8 @@ object VectorQueries {
     // result is materialized (the CC kernel does this anyway for its own
     // lineage hygiene) so both caches release before returning.
     val corpusP = corpus.persist()
-    val kk = k.getOrElse(semDedupK(corpusP.count()))
-    val asg = kmeansAssign(corpusP, kk, iters).persist()
+    val kOf: Long => Int = k.fold(semDedupK _)(kk => _ => kk)
+    val asg = argminAssign(corpusP, kmeansCentroidsSized(corpusP, kOf, iters)).persist()
     // production cell-size posture (round 18, VERDICT r17 ask #3): with
     // maxCell set, over-cap cells re-split before the pair kernel, so the
     // quadratic within-cell term stays <= maxCell² per cell at ANY corpus

@@ -63,16 +63,17 @@ class CliSpec extends SparkSpec {
   // ---- the assembled consume pipeline (SURVEY §3.1 lifecycle)
   private def b(s: String): Array[Byte] = s.getBytes(StandardCharsets.UTF_8)
   private def tmp(): String = Files.createTempDirectory("graft-cli").toString
+  private def deflate(s: String): Array[Byte] = {
+    val buf = new java.io.ByteArrayOutputStream()
+    val dos = new java.util.zip.DeflaterOutputStream(buf)
+    dos.write(b(s)); dos.close(); buf.toByteArray
+  }
 
   test("consume pipeline: deaggregate + zlib + console projection end-to-end") {
     val dir = tmp()
-    val deflated = {
-      val buf = new java.io.ByteArrayOutputStream()
-      val dos = new java.util.zip.DeflaterOutputStream(buf)
-      dos.write(b("compressed payload\n")); dos.close(); buf.toByteArray
-    }
     Spool.put(dir, "s1", "shardId-000000000000", 1, "parent",
-      graft.kpl.KplCodec.aggregate(Seq("k1" -> deflated)), at = "2024-01-02 03:04:05")
+      graft.kpl.KplCodec.aggregate(Seq("k1" -> deflate("compressed payload\n"))),
+      at = "2024-01-02 03:04:05")
     val cfg = Cli.ConsumeConfig(streams = Seq("s1"), iterator = "TRIM_HORIZON",
       compress = Some("zlib"), spool = dir)
     val (lines, _) = Spool.drain(spark, Cli.consumeFrame(spark, cfg))
@@ -178,5 +179,33 @@ class CliSpec extends SparkSpec {
     val landed = consumeAll(Seq("consume", "-s", "s1", "-v", "--spool", dir))
       .map(_.split(" ")).map(f => f(5) -> (f(3), f(4).toLong)).toMap
     assert(lines.map(landed) == acks, "ack i names the file line i landed in")
+  }
+
+  // ---- codegen reuse across streaming queries (Tables.staticConf)
+  test("a second consume query over the same spool compiles no generated class") {
+    val dir = tmp()
+    for (shard <- 0 until 2; seq <- 0 until 3)
+      Spool.put(dir, "s1", f"shardId-$shard%012d", seq, s"pk$shard",
+        graft.kpl.KplCodec.aggregate((0 until 5).map(i => s"k$i" -> deflate(s"r$shard-$seq-$i\n"))))
+    val cfg = Cli.ConsumeConfig(streams = Seq("s1"), iterator = "TRIM_HORIZON", limit = 2,
+      compress = Some("zlib"), spool = dir)
+    /** One AvailableNow drain as a new query with its own checkpoint: its
+      * rendered lines and the Janino compiles it caused.
+      */
+    def drain(): (Seq[String], Long) = {
+      val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+      val before = compiles.getCount
+      val name = s"t${System.nanoTime()}"
+      val q = Cli.consumeFrame(spark, cfg).writeStream.format("memory").queryName(name)
+        .option("checkpointLocation", tmp())
+        .trigger(Trigger.AvailableNow()).start()
+      assert(q.awaitTermination(60000), "the drain did not finish within 60 s")
+      val lines = spark.table(name).collect().map(_.getString(0)).toSeq
+      (lines, compiles.getCount - before)
+    }
+    val (first, _) = drain()
+    val (second, compiled) = drain()
+    assert(first.length == 30 && second.sorted == first.sorted)
+    assert(compiled == 0, s"the second query recompiled $compiled generated classes")
   }
 }

@@ -534,6 +534,19 @@ class VectorSpec extends SparkSpec {
     assert(jobsOf(vq.kmeansCentroidsLoop(base, 8, 3))._2 >= 3)
   }
 
+  test("q123 under the driver cap takes its corpus-derived k from the fetch, not a count job") {
+    graft.plans.GraftExtensions.register(spark)
+    val vq = operators.VectorQueries
+    val base = kmRandom(500, 29).selectExpr("vec_id",
+      "transform(embedding, x -> CAST(x AS double)) AS v")
+      .selectExpr("vec_id", "v", "sqrt(graft_vector_dot(v, v)) AS nrm")
+    def run(k: Option[Int]) = jobsOf(vq.kmeansSemDedup(base, k).collect().map(_.toString).sorted.toSeq)
+    val (derived, derivedJobs) = run(None)
+    val (given, givenJobs) = run(Some(vq.semDedupK(500)))
+    assert(derived == given && derived.nonEmpty)
+    assert(derivedJobs == givenJobs, s"derived k ran $derivedJobs jobs, given k $givenJobs")
+  }
+
   test("q123 keeps the highest-quality member of each within-cell semantic group") {
     import spark.implicits._
     graft.plans.GraftExtensions.register(spark)

@@ -6,6 +6,7 @@
 #
 #   tools/run_round_bench.sh r16 [r15]
 #
+# Runs on local[$SPARK_GRAFT_CPUS], by default every core of the machine.
 # Produces BENCH_<round>_{local,sf1,sf2,sf5,sf10}.json +
 # bench_details_<round>_*.json at the repo root. Run
 # tools/gen_bench_table.py <round> afterwards to regenerate the
@@ -30,7 +31,7 @@ run_scale() { # <tag> <sfdir>
   # the generated table (ADVICE r16)
   log="$(mktemp /tmp/bench_${ROUND}_${tag}.XXXX.log)"
   rc=0
-  SPARK_GRAFT_SF_DIR="$dir" SPARK_GRAFT_CPUS=32 \
+  SPARK_GRAFT_SF_DIR="$dir" SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-$(nproc)}" \
   SPARK_GRAFT_PREV_DETAILS="$prev" \
   SPARK_GRAFT_BENCH_DETAILS="bench_details_${ROUND}_${tag}.json" \
   SPARK_GRAFT_BENCH_SUMMARY="BENCH_${ROUND}_${tag}.json" \
