@@ -6,7 +6,7 @@ import org.apache.spark.sql.types.StructType
 import java.io.File
 import java.math.BigInteger
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, StandardCopyOption}
+import java.nio.file.{FileAlreadyExistsException, Files, StandardCopyOption}
 import java.security.MessageDigest
 
 /** Native DataSource V2 batch + streaming writer for the shard spool — the
@@ -31,15 +31,17 @@ import java.security.MessageDigest
   *  1. writes an INTENT manifest `_epochs/<queryId>/<epoch>.intent`
   *     (atomic tmp+rename) listing every staged→target rename with final
   *     per-shard sequence numbers pre-assigned,
-  *  2. performs the renames,
+  *  2. publishes each staged file under its target name (a hard link that
+  *     never replaces an existing target, then an unlink of the staged
+  *     name — see [[ShardSpoolWrite.renameOne]]),
   *  3. renames the intent to `<epoch>.committed`.
   * A replayed epoch whose `.committed` exists is a no-op; one whose
-  * `.intent` exists resumes the recorded renames (a rename whose target
-  * already exists is treated as done), so a crash at ANY point inside
-  * commit publishes each record exactly once. Markers are namespaced by
-  * `queryId` (stable across restarts of one query, distinct across
-  * queries), so a fresh query whose epochIds restart at 0 is not confused
-  * with a predecessor's epochs. Batch writes use the same rename publish
+  * `.intent` exists resumes the recorded publishes (one whose staged file
+  * is gone and whose target exists is treated as done), so a crash at ANY
+  * point inside commit publishes each record exactly once. Markers are
+  * namespaced by `queryId` (stable across restarts of one query, distinct
+  * across queries), so a fresh query whose epochIds restart at 0 is not
+  * confused with a predecessor's epochs. Batch writes use the same publish
   * without markers — Spark fails the whole batch job on commit failure.
   */
 object ShardSpoolSink {
@@ -103,26 +105,35 @@ class ShardSpoolWrite(opts: Map[String, String], inputSchema: StructType)
     }
   }
 
-  /** Execute one staged→target rename. An existing target is only treated
-    * as done when the SOURCE is gone too (a replayed rename during crash
-    * recovery); if both source and target exist, the target was written by
-    * someone else — a sequence-number collision with a concurrent writer
-    * (second batch job, zombie driver) — and silently skipping would drop
-    * this write's record while reporting success, so fail the commit
-    * instead.
+  /** Publish one staged file under its target name without ever replacing
+    * a record: `Files.createLink(target, staged)` fails atomically when the
+    * target exists, and only then is the staged file unlinked. A target
+    * that already exists is done only when the staged file is gone (a
+    * replayed publish during crash recovery) or is the very same file (a
+    * crash between link and unlink, finished here). Otherwise another
+    * writer (a concurrent producer that planned the same sequence number,
+    * a zombie driver) published it first, and skipping would drop this
+    * write's record while reporting success, so fail the commit instead.
+    * `File.renameTo` would not do: on Linux it silently replaces the target.
     */
-  private[graft] def renameOne(src: File, target: File): Unit =
-    if (target.exists()) {
-      if (src.exists())
-        throw new java.io.IOException(
-          s"sequence collision: $target already exists while staged $src is still " +
-            "present — concurrent writer to the same stream? refusing to drop records")
-      // else: replayed rename, already done
+  private[graft] def renameOne(src: File, target: File): Unit = {
+    val (s, t) = (src.toPath, target.toPath)
+    if (!Files.exists(s)) {
+      if (!Files.exists(t)) throw new java.io.IOException(s"commit failed: $src -> $target")
+      // else: replayed publish, already done
     } else {
       target.getParentFile.mkdirs()
-      if (!src.renameTo(target))
-        throw new java.io.IOException(s"commit failed: $src -> $target")
+      try Files.createLink(t, s)
+      catch {
+        case _: FileAlreadyExistsException if Files.isSameFile(t, s) => // linked, not yet unlinked
+        case _: FileAlreadyExistsException =>
+          throw new java.io.IOException(
+            s"sequence collision: $target already exists while staged $src is still " +
+              "present — concurrent writer to the same stream? refusing to drop records")
+      }
+      Files.delete(s)
     }
+  }
 
   private def rename(plan: Seq[(File, File)]): Unit =
     plan.foreach { case (src, target) => renameOne(src, target) }

@@ -136,7 +136,7 @@ class ShardSpoolSinkSpec extends SparkSpec {
     // the collision window is the race between planRenames (which reads the
     // shard high-water mark) and the rename itself — not reproducible
     // through sequential public writes, so exercise the rename kernel
-    // directly on its three cases
+    // directly on its four cases
     import org.apache.spark.sql.types._
     val schema = StructType(Seq(StructField("partitionKey", StringType),
       StructField("data", BinaryType)))
@@ -165,6 +165,68 @@ class ShardSpoolSinkSpec extends SparkSpec {
     assert(s3.exists(), "staged record must survive the failed commit")
     assert(new String(Files.readAllBytes(t1.toPath)) == "k\np1",
       "the concurrent writer's record must not be overwritten")
+    // 4. crash between link and unlink: target and staged are one file →
+    // finish the publish by unlinking the staged name
+    val s4 = f(staging, "c.tmp", "k\np3")
+    val t4 = new java.io.File(shardDir, f"${1L}%020d.rec")
+    Files.createLink(t4.toPath, s4.toPath)
+    w.renameOne(s4, t4)
+    assert(!s4.exists() && new String(Files.readAllBytes(t4.toPath)) == "k\np3")
+  }
+
+  test("concurrent publishers into one shard never silently replace a record") {
+    // each publish plans its sequence number from the shard's high-water
+    // mark, so concurrent publishers race for the same number; whichever
+    // loses must fail loudly, never replace the winner's record
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.connector.write.PhysicalWriteInfo
+    import org.apache.spark.sql.types._
+    import org.apache.spark.unsafe.types.UTF8String
+    import java.util.concurrent.{Callable, CountDownLatch, Executors}
+    val schema = StructType(Seq(StructField("partitionKey", StringType),
+      StructField("data", BinaryType)))
+    val dir = tmp()
+    val (threads, perThread) = (8, 40)
+    def publishOne(payload: String): Seq[(String, Long)] = {
+      val w = new graft.sources.ShardSpoolWrite(
+        Map("path" -> dir, "stream" -> "sc", "shardcount" -> "1"), schema)
+      val writer = w.createBatchWriterFactory(new PhysicalWriteInfo {
+        override def numPartitions(): Int = 1
+      }).createWriter(0, 0)
+      writer.write(InternalRow(UTF8String.fromString("k"), payload.getBytes("UTF-8")))
+      w.publish(Array(writer.commit()))
+    }
+    val go = new CountDownLatch(1)
+    val pool = Executors.newFixedThreadPool(threads)
+    val outcomes = try {
+      val runs = (0 until threads).map { t =>
+        pool.submit(new Callable[Seq[(String, Either[Throwable, Long])]] {
+          override def call() = {
+            go.await()
+            (0 until perThread).map { r =>
+              val payload = s"t$t-r$r"
+              payload -> (try publishOne(payload) match { case Seq((_, seq)) => Right(seq) }
+                          catch { case e: java.io.IOException => Left(e) })
+            }
+          }
+        })
+      }
+      go.countDown()
+      runs.flatMap(_.get())
+    } finally pool.shutdown()
+    val acked = outcomes.collect { case (p, Right(seq)) => p -> seq }
+    val failed = outcomes.collect { case (p, Left(e)) => p -> e }
+    failed.foreach { case (p, e) =>
+      assert(e.getMessage.contains("sequence collision"), s"$p failed with $e")
+    }
+    assert(acked.map(_._2).distinct.size == acked.size, "one sequence number acked twice")
+    val shardDir = new java.io.File(s"$dir/sc/shardId-000000000000")
+    acked.foreach { case (p, seq) =>
+      val got = new String(Files.readAllBytes(new java.io.File(shardDir, f"$seq%020d.rec").toPath))
+      assert(got == s"k\n$p", s"acked record $p at $seq was replaced by '$got'")
+    }
+    assert(shardDir.list().count(_.endsWith(".rec")) == acked.size)
+    assert(acked.nonEmpty)
   }
 
   test("native write feeds the native micro-batch source (produce → consume)") {

@@ -1,7 +1,8 @@
 #!/usr/bin/env python3
 """Local replica of the driver's t2 correctness gate.
 
-Usage: python3 tools/check_oracle.py [--iterative-closures] <sfDir> <outDir>
+Usage: python3 tools/check_oracle.py [--iterative-closures] [--only q30,q31,...]
+                                     <sfDir> <outDir>
 
 Reads every result parquet under <outDir>/<name>/ (written by graft.Verify),
 runs the matching oracle SQL from <outDir>/oracle_sql.json in DuckDB with
@@ -9,6 +10,11 @@ views over <sfDir>'s parquet tables, and compares: columns sorted by name,
 rows sorted by all columns, exact value equality (doubles must be
 bit-identical — the engine routes aggregate sums through DECIMAL to
 guarantee that).
+
+--only names the queries a targeted graft.Verify ran, by id (q30) or full
+name (q30_...). Without it every query the oracle declares must have a
+result; with it only the named ones must, and a named query without a
+result still FAILs. Results that were written are checked either way.
 
 --iterative-closures (round 17, VERDICT r16 ask #4): replay the three
 connected-component oracles (q116/q117/q123) with the recursive `reach`
@@ -258,9 +264,31 @@ def connect(sf_dir: str, memory_limit: str = "24GB",
     return con
 
 
+def query_id(name: str) -> str:
+    """q30 for q30_some_query."""
+    return name.split("_", 1)[0]
+
+
+def split_only(argv: list) -> tuple:
+    """(argv without --only and its value, the named queries or None)."""
+    rest, only = [], None
+    it = iter(argv)
+    for a in it:
+        if a == "--only":
+            only = next(it, "")
+        elif a.startswith("--only="):
+            only = a[len("--only="):]
+        else:
+            rest.append(a)
+    if only is None:
+        return rest, None
+    return rest, {q.strip() for q in only.split(",") if q.strip()}
+
+
 def main() -> int:
-    args = [a for a in sys.argv[1:] if not a.startswith("--")]
-    iterative = "--iterative-closures" in sys.argv[1:]
+    argv, only = split_only(sys.argv[1:])
+    args = [a for a in argv if not a.startswith("--")]
+    iterative = "--iterative-closures" in argv
     sf_dir, out_dir = args[0], args[1]
     if iterative:
         ensure_map_headroom()
@@ -313,7 +341,15 @@ def main() -> int:
         else:
             n_pass += 1
             print(f"PASS {name} ({len(got)} rows)")
-    declared = set(oracle) - {os.path.basename(d) for d in result_dirs}
+    written = {os.path.basename(d) for d in result_dirs}
+    declared = set(oracle) - written
+    if only is not None:
+        declared = {n for n in declared if n in only or query_id(n) in only}
+        known = written | set(oracle)
+        for q in sorted(only):
+            if not any(q in (n, query_id(n)) for n in known):
+                print(f"FAIL {q}: named by --only but no result written")
+                n_fail += 1
     for name in sorted(declared):
         print(f"FAIL {name}: oracle declared but no result written")
         n_fail += 1
