@@ -135,21 +135,15 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Tables.cpus
     // recorded into the stdout line so the one number the driver keeps
     // self-adjudicates (VERDICT r17 ask #2): a run that STARTED at
     // loadavg 4+ (the r17 driver session) declares its regime up front
     val laStart = loadavg1m()
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // back-stop for the per-sample System.gc() below: the cleaner's own
-      // periodic GC default is 30 min — longer than a whole suite run
-      .config("spark.cleaner.periodicGC.interval", "2min")
-    (Tables.sessionConf ++ Tables.staticConf ++ Tables.scratchDirConf).foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // back-stop for the per-sample System.gc() below: the cleaner's own
+    // periodic GC default is 30 min — longer than a whole suite run
+    val spark = Tables.session(cpus,
+      Tables.scratchDirConf + ("spark.cleaner.periodicGC.interval" -> "2min"))
     // Untimed warmup: absorbs JVM/codegen/session startup so the first timed
     // query isn't charged ~8s of one-off cost (it previously was).
     try SparkEntry.queries("q1_pricing_summary")(spark, sfDir)

@@ -251,13 +251,7 @@ object Cli {
       spark.stop()
   }
 
-  private def session(): SparkSession = {
-    val b = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-    (Tables.sessionConf ++ Tables.staticConf).foreach { case (k, v) => b.config(k, v) }
-    val s = b.getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  // Spark's default local dir, not Tables.scratchDirConf: a deployment's
+  // own local-dir policy wins
+  private def session(): SparkSession = Tables.session(4, Map.empty)
 }

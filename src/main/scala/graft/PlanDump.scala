@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Round-deliverable plan dumper: `PlanDump <outDir> <suffix> <q1,q2,...> [sfDir]`
@@ -17,15 +16,7 @@ object PlanDump {
     val suffix = args(1)
     val names = args(2).split(",").map(_.trim).filter(_.nonEmpty)
     val sfDir = args.lift(3).getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    (Tables.sessionConf ++ Tables.staticConf ++ Tables.scratchDirConf)
-      .foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tables.session(Tables.cpus)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     // capture the AQE-FINAL executed plan of the noop write itself: the
     // Dataset's own queryExecution is never executed by `write`, so

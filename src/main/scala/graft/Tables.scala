@@ -90,7 +90,8 @@ object Tables {
       case _ => "unix_micros(CAST(ts AS TIMESTAMP))"
     }
 
-  /** Harness-only scratch-dir tuning for the local[32] test box.
+  /** Scratch-dir tuning for the local test box, which runs
+    * `local[SPARK_GRAFT_CPUS or core count]` (see [[cpus]]).
     *
     * Shuffle/spill/localCheckpoint blocks go to `spark.local.dir`. The CI
     * sandbox runs under a user-space-kernel hypervisor where file syscalls
@@ -102,8 +103,9 @@ object Tables {
     * equivalent setting is NVMe-backed local dirs per executor, so this is
     * an accurate stand-in for production I/O, not a benchmark cheat.
     *
-    * Used by the measurement/verify entry points only — `Cli` keeps Spark's
-    * default so a deployment's own local-dir policy wins. Override with
+    * Every entry point except `Cli` takes it through [[session]]'s default
+    * `conf`; `Cli` passes `Map.empty` and keeps Spark's default so a
+    * deployment's own local-dir policy wins. Override with
     * SPARK_GRAFT_LOCAL_DIR; falls back to the JVM default when /dev/shm is
     * unavailable (e.g. a container without a tmpfs mount).
     */
@@ -114,4 +116,26 @@ object Tables {
     }
     dir.map("spark.local.dir" -> _).toMap
   }
+
+  /** The one session builder: every graft entry point and the specs start
+    * their SparkSession here, so [[sessionConf]] and [[staticConf]] reach
+    * every session by construction. `local[cpus]`, one shuffle partition
+    * per core, UI off; `conf` is applied last.
+    */
+  def session(cpus: Int, conf: Map[String, String] = scratchDirConf): SparkSession = {
+    val b = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.ui.enabled", "false")
+    (sessionConf ++ staticConf ++ conf).foreach { case (k, v) => b.config(k, v) }
+    val s = b.getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
+
+  /** Cores for a measurement or verify session: SPARK_GRAFT_CPUS, else the
+    * machine's core count.
+    */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
 }

@@ -2859,7 +2859,7 @@ object LlmQueries {
     * q131 projects (term, lvl) from it; q150 additionally probes the CMS
     * six-pack on the same rows (count-table scale, never per occurrence).
     */
-  private[operators] case class SbParts(tg: DataFrame, tcs: DataFrame,
+  private case class SbParts(tg: DataFrame, tcs: DataFrame,
       bcs: DataFrame, ucs: DataFrame, enriched: DataFrame)
 
   /** The exact (term, lvl) projection both q131 and q150 score with. */
@@ -2875,7 +2875,7 @@ object LlmQueries {
     * rationale in [[sbParts]]' term-table comment): extras are q150's
     * audit-boolean reductions, empty for q131.
     */
-  private[operators] def sbScore(tg: DataFrame, term: DataFrame,
+  private def sbScore(tg: DataFrame, term: DataFrame,
       extras: Seq[Column] = Nil): DataFrame =
     tg.join(term.hint("shuffle_hash"), Seq("w1", "w2", "w3", "source"))
       .groupBy("doc_id")
@@ -2887,7 +2887,7 @@ object LlmQueries {
           sum(when(col("lvl") === 0, 1L).otherwise(0L)).as("n_oov")) ++
           extras): _*)
 
-  private[operators] def sbParts(docs: DataFrame): SbParts = {
+  private def sbParts(docs: DataFrame): SbParts = {
     val toks = docs.select(col("doc_id"), col("source"),
       split(col("text"), " ").as("t"))
     val tg = toks.filter(size(col("t")) >= 3)
@@ -3014,7 +3014,7 @@ object LlmQueries {
     * occurrence streams' counters exactly (the q112 argument): for the
     * total sketches, Σ_src add(key, c(key,src)) == add(key, c_tot(key)).
     */
-  private[operators] def sbSketches(p: SbParts, eps: Double, confidence: Double,
+  private def sbSketches(p: SbParts, eps: Double, confidence: Double,
       seed: Int): (DataFrame, Array[CountMinSketch]) = {
     val spark = p.tcs.sparkSession
     import spark.implicits._

@@ -635,9 +635,6 @@ final case class BloomProbe(
     copy(child = newChild)
 }
 
-/** Injector: `SparkSession.builder.withExtensions(new GraftExtensions)` at
-  * session build time, or [[GraftExtensions.register]] on a live session.
-  */
 /** `graft_gram_stats(string) → struct<n2,top2,n5,d5>`: q118's per-doc
   * repetition statistics in one token pass (kernel + split contract in
   * [[graft.functions.TextHash.gramStats]]); null for docs under 5 tokens.
@@ -693,6 +690,9 @@ final case class TokenTf(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
+/** Injector: a session builder's `withExtensions(new GraftExtensions)` at
+  * session build time, or [[GraftExtensions.register]] on a live session.
+  */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit =
     GraftExtensions.functions.foreach { case (name, info, builder) =>

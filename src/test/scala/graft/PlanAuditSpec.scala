@@ -41,6 +41,22 @@ class PlanAuditSpec extends SparkSpec {
     flatten(df.queryExecution.executedPlan)
   }
 
+  /** Every `.scala` file under src/main/scala/graft with its lines, for
+    * the source audits.
+    */
+  private def mainSources: Seq[(java.io.File, Vector[String])] = {
+    def walk(d: java.io.File): Seq[java.io.File] =
+      d.listFiles().toSeq.flatMap(f =>
+        if (f.isDirectory) walk(f)
+        else if (f.getName.endsWith(".scala")) Seq(f) else Nil)
+    val root = new java.io.File("src/main/scala/graft")
+    assert(root.isDirectory, s"expected ${root.getAbsolutePath}")
+    walk(root).map { f =>
+      val src = scala.io.Source.fromFile(f, "UTF-8")
+      try (f, src.getLines().toVector) finally src.close()
+    }
+  }
+
   test("q2: filter and projection reach the parquet scan") {
     val p = plan("q2_filter_project")
     assert(p.contains("PushedFilters: [") &&
@@ -634,7 +650,6 @@ class PlanAuditSpec extends SparkSpec {
     // exempt iff some entry matches both.
     val allow: Seq[(String, String, String)] = Seq(
       ("Bounded.scala", ".take(", "Bounded itself: the cap-enforcing take is the audited primitive"),
-      ("Explain.scala", "df.collect()", "diagnostic main for .explain dumps, never a registered query; collects to finalize AQE"),
       ("Bench.scala", ".take(12)", "Seq[(String,fn)] of query names, not a Dataset"),
       ("Bench.scala", "f.take(8).sum", "Array[Long] of /proc/stat jiffy fields (steal_pct window total)"),
       ("Verify.scala", "args.take(2)", "Array[String] CLI args"),
@@ -647,15 +662,7 @@ class PlanAuditSpec extends SparkSpec {
       ("ShardSpoolSource.scala", ".last", "in-memory shard-offset Vector on the driver (source metadata, not data)"),
       ("ShardSpoolSource.scala", "avail.take(", "in-memory per-shard offset Vector (admission control)"),
       ("TopK.scala", ".sorted(ord).take(k)", "Seq buffer inside the UDAF, bounded by k by construction"))
-    def walk(d: java.io.File): Seq[java.io.File] =
-      d.listFiles().toSeq.flatMap(f =>
-        if (f.isDirectory) walk(f)
-        else if (f.getName.endsWith(".scala")) Seq(f) else Nil)
-    val root = new java.io.File("src/main/scala/graft")
-    assert(root.isDirectory, s"expected ${root.getAbsolutePath}")
-    val offenders = walk(root).flatMap { f =>
-      val src = scala.io.Source.fromFile(f, "UTF-8")
-      val lines = try src.getLines().toVector finally src.close()
+    val offenders = mainSources.flatMap { case (f, lines) =>
       lines.zipWithIndex.collect {
         case (l, i) if fetch.findFirstIn(l).isDefined &&
           !l.trim.startsWith("*") && !l.trim.startsWith("//") &&
@@ -673,6 +680,22 @@ class PlanAuditSpec extends SparkSpec {
     assert(offenders.isEmpty,
       "raw driver fetches in src/main (use graft.Bounded or justify an allowlist entry):\n" +
         offenders.mkString("\n"))
+  }
+
+  test("one session builder: src/main builds a SparkSession only in Tables.session") {
+    // sessionConf (UTC, nanosAsLong, the java.nio checkpoint manager) and
+    // staticConf (codegen cache, artifact isolation) reach a session only
+    // through the builder that applies them; a second builder is a copy
+    // that can drift
+    val sites = mainSources.filter(_._1.getName != "Tables.scala").flatMap { case (f, lines) =>
+      lines.zipWithIndex.collect {
+        case (l, i) if l.contains("SparkSession.builder") =>
+          s"${f.getName}:${i + 1}: ${l.trim}"
+      }
+    }
+    assert(sites.isEmpty,
+      "SparkSession.builder outside Tables.scala (use Tables.session):\n" +
+        sites.mkString("\n"))
   }
 
   test("q140 JL audit is map-only: literal matrix folds, no join, one group exchange") {

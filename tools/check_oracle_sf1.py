@@ -120,9 +120,7 @@ def main() -> int:
     r = subprocess.run(
         ["sbt", "-batch",
          "runMain graft.Verify " + SF1 + " " + OUT + " " + " ".join(queries)],
-        cwd=ROOT, env={**os.environ, "SPARK_GRAFT_CPUS":
-                       os.environ.get("SPARK_GRAFT_CPUS", "32")},
-        capture_output=True, text=True, timeout=3600)
+        cwd=ROOT, capture_output=True, text=True, timeout=3600)
     fails = [ln for ln in r.stderr.splitlines() + r.stdout.splitlines()
              if "[verify]" in ln]
     for ln in fails:
