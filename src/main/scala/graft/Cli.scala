@@ -175,10 +175,8 @@ object Cli {
     * (deaggregate passes NULLs through) beyond the flag's corrupt-frame
     * scope.
     */
-  private[graft] def verifiedFrames(raw: DataFrame): DataFrame = {
-    graft.plans.GraftExtensions.register(raw.sparkSession) // graft_is_kpl / graft_kpl_md5_ok
+  private[graft] def verifiedFrames(raw: DataFrame): DataFrame =
     raw.filter(expr("data IS NULL OR NOT graft_is_kpl(data) OR graft_kpl_md5_ok(data)"))
-  }
 
   /** Shards `produce` spreads a stream over. */
   private val ProduceShards = 4

@@ -14,10 +14,10 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def t(spark: SparkSession, dir: String, name: String): DataFrame = {
-    // every entry point scans through here, so this is the one chokepoint
-    // that guarantees the graft_* function registry (including the
-    // fixed-point sum aggregate dsum resolves against) on ANY session the
-    // driver hands us; registration is an idempotent map put
+    // [[session]] registers the graft_* functions on every session graft
+    // builds; this covers a session graft did not build, such as the one
+    // the driver hands SparkEntry. Every query scans through here before
+    // its first graft_* call, and registering again is an idempotent map put
     graft.plans.GraftExtensions.register(spark)
     spark.read.parquet(s"$dir/$name.parquet")
   }
@@ -118,9 +118,10 @@ object Tables {
   }
 
   /** The one session builder: every graft entry point and the specs start
-    * their SparkSession here, so [[sessionConf]] and [[staticConf]] reach
-    * every session by construction. `local[cpus]`, one shuffle partition
-    * per core, UI off; `conf` is applied last.
+    * their SparkSession here, so [[sessionConf]], [[staticConf]] and the
+    * graft_* SQL functions reach every session by construction.
+    * `local[cpus]`, one shuffle partition per core, UI off; `conf` is
+    * applied last.
     */
   def session(cpus: Int, conf: Map[String, String] = scratchDirConf): SparkSession = {
     val b = SparkSession.builder()
@@ -129,6 +130,7 @@ object Tables {
       .config("spark.ui.enabled", "false")
     (sessionConf ++ staticConf ++ conf).foreach { case (k, v) => b.config(k, v) }
     val s = b.getOrCreate()
+    graft.plans.GraftExtensions.register(s)
     s.sparkContext.setLogLevel("WARN")
     s
   }

@@ -1,8 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.expressions.UserDefinedFunction
-import org.apache.spark.sql.functions.udf
 import org.apache.spark.unsafe.types.UTF8String
 import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
@@ -322,18 +320,5 @@ object TextHash {
       j += 1
     }
     new GenericArrayData(out)
-  }
-
-  /** Hamming distance between two equal-length bit strings ('0'/'1' chars)
-    * — counts differing positions; the oracle mirror is a per-position
-    * substr compare sum. Runs only on candidate pairs (post-bucket-join),
-    * so a plain UDF is fine here.
-    */
-  val hammingBits: UserDefinedFunction = udf { (a: String, b: String) =>
-    var d = 0
-    var i = 0
-    val n = math.min(a.length, b.length)
-    while (i < n) { if (a.charAt(i) != b.charAt(i)) d += 1; i += 1 }
-    d
   }
 }

@@ -272,7 +272,6 @@ object LlmQueries {
     * to a NULL band_key exactly as the r13 hex concat did.
     */
   def bandTable(corpus: DataFrame): DataFrame = {
-    graft.plans.GraftExtensions.register(corpus.sparkSession)
     corpus
       .select(col("doc_id"), expr("graft_minhash16(text)").as("sig"))
       .selectExpr("doc_id", """
@@ -367,7 +366,6 @@ object LlmQueries {
             THEN 1 ELSE -1 END for h in hs ]) >= 0 THEN '1' ELSE '0' END
           for b in range(0, 64) ], '') AS simhash
       FROM tok""")) { (s, dir) =>
-      graft.plans.GraftExtensions.register(s)
       Tables.t(s, dir, "documents")
         .select(col("doc_id"), expr("graft_simhash64(text)").as("simhash"))
     },
@@ -420,7 +418,6 @@ object LlmQueries {
       UNION ALL
       SELECT a.doc_id, b.doc_id, CAST(0 AS INT)
       FROM sh a JOIN sh b ON a.sim = b.sim AND a.doc_id < b.doc_id""")) { (s, dir) =>
-      graft.plans.GraftExtensions.register(s)
       val sigs = nearCorpus(s, dir)
         .select(col("doc_id"), expr("graft_simhash64(text)").as("sim"))
       val dsig = sigs.select(col("sim")).distinct()
@@ -472,7 +469,6 @@ object LlmQueries {
         len(list_intersect(a.sh, b.sh)) /
           (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) AS jaccard
       FROM shs a JOIN shs b ON b.doc_id = a.doc_id + 1""")) { (s, dir) =>
-      graft.plans.GraftExtensions.register(s) // graft_shingles
       val shs = Tables.t(s, dir, "documents")
         .selectExpr("doc_id", "graft_shingles(text, 3) AS sh")
       val a = shs.select(col("doc_id").as("doc_id1"), col("sh").as("xsh"))
@@ -500,7 +496,6 @@ object LlmQueries {
                      c.vec_id) AS INT) AS rk
         FROM n q JOIN n c ON q.vec_id < 10 AND c.vec_id <> q.vec_id) t
       WHERE rk <= 10""")) { (s, dir) =>
-      graft.plans.GraftExtensions.register(s) // graft_vector_dot
       val n = Tables.t(s, dir, "embeddings")
         .selectExpr("vec_id", "transform(embedding, x -> CAST(x AS double)) AS v")
         .select(col("vec_id"), col("v"),
@@ -547,7 +542,6 @@ object LlmQueries {
         round(list_dot_product(a.v, b.v) / (a.nrm * b.nrm), 6) AS sim
       FROM n a JOIN n b ON a.label = b.label AND a.vec_id < b.vec_id
       WHERE round(list_dot_product(a.v, b.v) / (a.nrm * b.nrm), 6) >= 0.9""")) { (s, dir) =>
-      graft.plans.GraftExtensions.register(s) // graft_vector_dot
       val n = graft.operators.VectorQueries.anchorBase(s, dir)
         .select(col("vec_id"), col("label"), col("v"),
           sqrt(expr("graft_vector_dot(v, v)")).as("nrm"))
@@ -583,7 +577,6 @@ object LlmQueries {
         FROM n q JOIN n c ON q.label = c.label AND q.vec_id < 10
                           AND c.vec_id <> q.vec_id) t
       WHERE rk <= 5""")) { (s, dir) =>
-      graft.plans.GraftExtensions.register(s) // graft_vector_dot
       val n = Tables.t(s, dir, "embeddings")
         .selectExpr("vec_id", "label", "transform(embedding, x -> CAST(x AS double)) AS v")
         .select(col("vec_id"), col("label"), col("v"),
@@ -759,7 +752,6 @@ object LlmQueries {
         (dup_2gram_ratio <= 0.3 AND mean_word_len BETWEEN 2.0 AND 12.0
           AND n_tok >= 10) AS keep
       FROM m""")) { (s, dir) =>
-      graft.plans.GraftExtensions.register(s) // graft_shingles
       val d = Tables.t(s, dir, "documents").select(col("doc_id"), col("text"))
       d.unionByName(d.filter(col("doc_id") % 25 === 0)
         .select((col("doc_id") + 40000).as("doc_id"),
@@ -802,7 +794,6 @@ object LlmQueries {
       FROM sh s JOIN ev USING (sh)
       WHERE s.doc_id % 50 <> 0
       GROUP BY s.doc_id""")) { (s, dir) =>
-      graft.plans.GraftExtensions.register(s) // graft_shingles
       val d = Tables.t(s, dir, "documents").select(col("doc_id"), col("text"))
       val corpus = d.unionByName(d.filter(col("doc_id") % 50 === 0)
         .select((col("doc_id") + 30001).as("doc_id"),
@@ -1153,7 +1144,6 @@ object LlmQueries {
       FROM cand JOIN dsh d ON delta_id = d.doc_id JOIN ish i ON index_id = i.doc_id
       WHERE len(list_intersect(d.sh, i.sh)) /
           (len(d.sh) + len(i.sh) - len(list_intersect(d.sh, i.sh))) >= 0.5""")) { (s, dir) =>
-      graft.plans.GraftExtensions.register(s)
       val docs = Tables.t(s, dir, "documents").select(col("doc_id"), col("text"))
       val idx = docs
       val delta = docs.filter(col("doc_id") % 10 === 0)
@@ -1213,7 +1203,6 @@ object LlmQueries {
         COUNT(*) AS n_shared_20grams
       FROM capped a JOIN capped b ON a.sh = b.sh AND a.doc_id < b.doc_id
       GROUP BY a.doc_id, b.doc_id""")) { (s, dir) =>
-      graft.plans.GraftExtensions.register(s) // graft_shingles
       val d = Tables.t(s, dir, "documents").select(col("doc_id"), col("text"))
       val corpus = d.unionByName(
         d.filter(col("doc_id") % 20 === 0 && size(split(col("text"), " ")) >= 25)
@@ -2772,7 +2761,6 @@ object LlmQueries {
     * IEEE division of exact integers (bit-identical in any engine; no
     * rounding needed — the q127 idiom). */
   def sourceOverlap(docs: DataFrame): DataFrame = {
-    graft.plans.GraftExtensions.register(docs.sparkSession)
     val srcs = graft.Bounded.collect(
       docs.select("source").distinct().orderBy("source"),
       cap = 64, what = "q130 source dim (bitmask width)")
@@ -3055,11 +3043,12 @@ object LlmQueries {
     * join strategy comfortably; the scale path replaces each of the six
     * count lookups a scoring row performs — (own, total) × (trigram,
     * bigram, unigram) — with a probe of a fixed-size CMS (megabytes at ANY
-    * corpus size, plan-embedded, probed inside WholeStageCodegen via
-    * `graft_cms_estimate`). This query verifies that substitution's error
-    * contract on every lookup the scoring actually performs: probes run at
-    * COUNT-TABLE scale on the enriched term rows (never per corpus
-    * occurrence — the q112 distinct-key lesson), checking est ≥ exact and
+    * corpus size, broadcast once per executor and probed inside
+    * WholeStageCodegen through [[graft.plans.CmsProbe]]). This query
+    * verifies that substitution's error contract on every lookup the
+    * scoring actually performs: probes run at COUNT-TABLE scale on the
+    * enriched term rows (never per corpus occurrence — the q112
+    * distinct-key lesson), checking est ≥ exact and
     * est ≤ exact + 3·eps·N per sketch (N = that sketch's own totalCount).
     * The 3× slack is the audited-bool_and analogue of q112's 2×: each
     * counter's expected overcount is ≤ eps·N/2, so by Markov one row
@@ -3076,7 +3065,6 @@ object LlmQueries {
   def stupidBackoffCms(docs: DataFrame, eps: Double = 2e-4,
       confidence: Double = 0.999, seed: Int = 42): DataFrame = {
     val spark = docs.sparkSession
-    graft.plans.GraftExtensions.register(spark)
     val p = sbParts(docs)
     val (_, sk) = sbSketches(p, eps, confidence, seed)
     val slack = sk.map(s => math.ceil(3 * eps * s.totalCount()).toLong)
@@ -3144,7 +3132,6 @@ object LlmQueries {
   def sbCmsReduction(docs: DataFrame, eps: Double = 2e-4,
       confidence: Double = 0.999, seed: Int = 42): (Long, Long, Long) = {
     val spark = docs.sparkSession
-    graft.plans.GraftExtensions.register(spark)
     val p = sbParts(docs)
     val (unioned, sk) = sbSketches(p, eps, confidence, seed)
     val slack = sk.map(s => math.ceil(3 * eps * s.totalCount()).toLong)
@@ -3252,7 +3239,6 @@ object LlmQueries {
     * both over capped posting/pair streams.
     */
   def containmentDedup(docs: DataFrame, cap: Int = BucketCap): DataFrame = {
-    graft.plans.GraftExtensions.register(docs.sparkSession)
     val post = docs
       .selectExpr("doc_id", "graft_shingles64(text, 5) AS sh")
       .filter(size(col("sh")) > 0)
@@ -3491,7 +3477,6 @@ object LlmQueries {
     * no (doc, token) exchange exists), probed with try_element_at
     * (ANSI-safe: absent term → 0). */
   def bm25TopK(docs: DataFrame): DataFrame = {
-    graft.plans.GraftExtensions.register(docs.sparkSession)
     val tfCols = Bm25Terms.zipWithIndex.map { case (t, i) =>
       s"CAST(coalesce(try_element_at(tfm, '$t'), 0) AS BIGINT) AS tf$i" }
     val base = docs
@@ -3553,7 +3538,6 @@ object LlmQueries {
     * anywhere.
     */
   def tfidfTopTerms(docs: DataFrame, k: Int = 3): DataFrame = {
-    graft.plans.GraftExtensions.register(docs.sparkSession)
     val nDocs = docs.count() // parquet-metadata count, not a scan
     val tf = docs
       .select(col("doc_id"), explode(expr("graft_token_tf(text)")).as("t"))
@@ -3655,8 +3639,6 @@ object LlmQueries {
   def boilerplateScrub(docs: DataFrame, n: Int = 5,
       minDocFreq: Long = 2L,
       minDocFreqFraction: Option[Double] = None): DataFrame = {
-    val s = docs.sparkSession
-    graft.plans.GraftExtensions.register(s)
     val threshold = minDocFreqFraction match {
       case Some(f) => math.max(minDocFreq, math.ceil(f * docs.count()).toLong)
       case None => minDocFreq
@@ -3705,7 +3687,6 @@ object LlmQueries {
     */
   def repetitionAudit(docs: DataFrame, top2Micro: Long = 180000L,
       dup5Micro: Long = 150000L): DataFrame = {
-    graft.plans.GraftExtensions.register(docs.sparkSession)
     // one native kernel call per row computes all four statistics in a
     // single token pass ([[graft.plans.GramStats]]); null = under 5
     // tokens, which IS the skip filter. An earlier form computed the
@@ -3859,13 +3840,12 @@ object LlmQueries {
     * eps·N (N from the sketch's own totalCount — no extra pass), reduced
     * per doc with bool_and. The oracle emits literal TRUEs — the q74
     * HLL/approx-percentile within-bound pattern. Sketch probes run through
-    * the codegen'd `graft_cms_estimate` expression (Spark ships a
-    * count_min_sketch AGGREGATE but no probe function —
-    * [[graft.plans.CmsEstimate]]): two array reads per row over a
-    * plan-embedded sketch, inside WholeStageCodegen, outside every
-    * shuffle. Deterministic: fixed seed, and CMS merge is counter
-    * addition (commutative), so the sketch is identical whatever the
-    * aggregation order.
+    * the codegen'd [[graft.plans.CmsProbe]] expression (Spark ships a
+    * count_min_sketch AGGREGATE but no probe function): two array reads
+    * per row over a sketch broadcast once per executor, inside
+    * WholeStageCodegen, outside every shuffle. Deterministic: fixed seed,
+    * and CMS merge is counter addition (commutative), so the sketch is
+    * identical whatever the aggregation order.
     */
   def bigramLmCms(docs: DataFrame, eps: Double = 1e-4,
       confidence: Double = 0.999, seed: Int = 42): DataFrame = {
@@ -3916,7 +3896,6 @@ object LlmQueries {
     // wider slack.
     val slack12 = math.ceil(2 * eps * cms12.totalCount()).toLong
     val slack1 = math.ceil(2 * eps * cms1.totalCount()).toLong
-    graft.plans.GraftExtensions.register(spark)
     // Probe the sketches on the DISTINCT-bigram count table, not per
     // occurrence: the bound check depends only on (w1, w2), so auditing
     // it once per distinct bigram and carrying the verdict booleans
@@ -3948,16 +3927,12 @@ object LlmQueries {
         expr("bool_and(b1)").as("cms1_ok"))
   }
 
-  /** One serialized copy of a sketch for plan embedding (see
-    * [[graft.plans.BloomContains]] / [[graft.plans.CmsEstimate]]).
-    */
-  private def sketchBytes(writeTo: java.io.OutputStream => Unit): Array[Byte] = {
+  /** A sketch's serialized bytes ([[sbCmsReduction]]'s size metric). */
+  private def sketchBytes(cms: CountMinSketch): Array[Byte] = {
     val bos = new java.io.ByteArrayOutputStream()
-    writeTo(bos)
+    cms.writeTo(bos)
     bos.toByteArray
   }
-  private def sketchBytes(cms: CountMinSketch): Array[Byte] =
-    sketchBytes(cms.writeTo(_))
 
   /** q92/q113 shared shingle streams over the planted-leak corpus:
     * (all-doc 5-token shingle rows (doc_id, n_sh, sh), distinct eval
@@ -3996,7 +3971,6 @@ object LlmQueries {
     */
   def decontaminateBloom(docs: DataFrame, fpp: Double = 0.01): DataFrame = {
     val spark = docs.sparkSession
-    graft.plans.GraftExtensions.register(spark)
     val (sh, ev) = decontamShingles(docs)
     sh.filter(col("doc_id") % 50 =!= 0)
       .filter(bloomProbe(spark, evalBloom(ev, fpp), col("sh")))
@@ -4037,7 +4011,6 @@ object LlmQueries {
     * eval cardinality, survivors ≈ true hits + fpp·rows at every scale.
     */
   def decontamReduction(docs: DataFrame, fpp: Double = 0.01): (Long, Long) = {
-    graft.plans.GraftExtensions.register(docs.sparkSession)
     val (sh, ev) = decontamShingles(docs)
     val corpusSh = sh.filter(col("doc_id") % 50 =!= 0)
     val probe = bloomProbe(docs.sparkSession, evalBloom(ev, fpp), col("sh"))
@@ -4547,7 +4520,6 @@ object LlmQueries {
     * table).
     */
   def candidateCounts(s: SparkSession, dir: String): Seq[(String, Long)] = {
-    graft.plans.GraftExtensions.register(s)
     val docs = Tables.t(s, dir, "documents").select(col("doc_id"), col("text"))
     // q42: LSH candidate pairs over the near-dup corpus
     val q42 = candidatePairs(nearCorpus(s, dir)).count()
@@ -4838,7 +4810,6 @@ object LlmQueries {
     * hit contains an m-gram hit for every m < n.
     */
   def decontamSweep(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftExtensions.register(s)
     val d = Tables.t(s, dir, "documents").select(col("doc_id"), col("text"))
     val corpus = d.unionByName(d.filter(col("doc_id") % 50 === 0)
         .select((col("doc_id") + 30001).as("doc_id"),
@@ -4864,7 +4835,6 @@ object LlmQueries {
     * The threshold explode multiplies CANDIDATE-scale rows only.
     */
   def neardupThresholdSweep(corpus: DataFrame): DataFrame = {
-    graft.plans.GraftExtensions.register(corpus.sparkSession)
     val cand = candidatePairs(corpus)
     val shs = corpus.selectExpr("doc_id", "graft_shingles(text, 3) AS sh")
     val x = shs.select(col("doc_id").as("xid"), col("sh").as("xsh"))
@@ -4931,7 +4901,6 @@ object LlmQueries {
     * production pipeline it models.
     */
   def trainingFunnel(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftExtensions.register(s)
     // NOT observe-fused (round 21, VERDICT r20 ask #7 — tried and measured
     // counterproductive): riding each stage's (n_docs, n_tokens) aggregate
     // on its checkpoint job as a CollectMetrics metric (the q137 idiom)
@@ -5070,7 +5039,6 @@ object LlmQueries {
     */
   def chunkScrub(docs: DataFrame, broadcastDupCap: Long = 5000000L): DataFrame = {
     val spark = docs.sparkSession
-    graft.plans.GraftExtensions.register(spark)
     val ch = tokenChunks(docs, window = 32, stride = 32)
       .select(col("doc_id"), col("chunk_id").cast("long").as("chunk_id"),
         col("n_tokens").cast("long").as("n_tokens"), col("chunk_text"),
@@ -5160,7 +5128,6 @@ object LlmQueries {
     * the oracle comparison is exact by construction.
     */
   def minhashCalibration(corpus: DataFrame): DataFrame = {
-    graft.plans.GraftExtensions.register(corpus.sparkSession)
     val cand = candidatePairs(corpus)
     val feat = corpus.selectExpr("doc_id",
       "graft_minhash16(text) AS sig", "graft_shingles(text, 3) AS shd")

@@ -4,8 +4,6 @@ import graft.{Q, Tables}
 import org.apache.spark.sql.functions._
 import java.awt.image.BufferedImage
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
-import java.nio.charset.StandardCharsets
-import java.security.MessageDigest
 import javax.imageio.ImageIO
 
 /** Multimodal-column operators: opaque binary blobs with typed metadata,
@@ -18,10 +16,9 @@ import javax.imageio.ImageIO
   * sniffs its magic. Because the pixels are generated deterministically
   * from doc_id and PNG is lossless, the DuckDB oracle can recompute every
   * decoded value arithmetically — a full-table proof that the decode
-  * round-trips bit-exactly. [[FakeDecoder]] remains as the deterministic
-  * spec path pinning the batch-kernel contract (one decoder call per
-  * `grouped(batchSize)` slice — the `mapInPandas`-analog shape a model
-  * server needs to amortize per-call overhead).
+  * round-trips bit-exactly. Decode and resize run per `grouped(batchSize)`
+  * slice — the `mapInPandas`-analog shape a model server needs to amortize
+  * per-call overhead.
   *
   * 100 TB posture: blobs are opaque binary parquet columns, so scans prune
   * to (id, metadata) unless the blob is actually needed; decode is a
@@ -146,82 +143,15 @@ object Multimodal {
     }
   }
 
-  /** Fake blob container: `"GFT0" ++ width(2B BE) ++ height(2B BE) ++
-    * channels(1B) ++ payload`. Stands in for a real image/audio container
-    * header the way PNG/WAV headers carry dimensions/rates.
-    */
-  object BlobCodec {
-    val MagicStr = "GFT0"
-    private val Magic = MagicStr.getBytes(StandardCharsets.US_ASCII)
-
-    def encode(width: Int, height: Int, channels: Int, payload: Array[Byte]): Array[Byte] = {
-      val out = new Array[Byte](Magic.length + 5 + payload.length)
-      System.arraycopy(Magic, 0, out, 0, Magic.length)
-      out(4) = ((width >> 8) & 0xFF).toByte
-      out(5) = (width & 0xFF).toByte
-      out(6) = ((height >> 8) & 0xFF).toByte
-      out(7) = (height & 0xFF).toByte
-      out(8) = (channels & 0xFF).toByte
-      System.arraycopy(payload, 0, out, 9, payload.length)
-      out
-    }
-
-    final case class Meta(format: String, width: Int, height: Int,
-        channels: Int, payload_len: Int)
-
-    /** Decode the header; null (→ dropped/flagged upstream) on a foreign
-      * or truncated blob — same drop posture as the KPL decoder.
-      */
-    def decodeMeta(blob: Array[Byte]): Meta =
-      if (blob == null || blob.length < 9 ||
-        new String(blob, 0, 4, StandardCharsets.US_ASCII) != MagicStr) null
-      else Meta(MagicStr,
-        ((blob(4) & 0xFF) << 8) | (blob(5) & 0xFF),
-        ((blob(6) & 0xFF) << 8) | (blob(7) & 0xFF),
-        blob(8) & 0xFF,
-        blob.length - 9)
-  }
-
-  /** STUB — deterministic fake media decoder. A real deployment swaps this
-    * object for JNI/ONNX/ffmpeg bindings; the call shape — ONE invocation
-    * per record BATCH, fixed-dim vectors out — is what the pipeline
-    * depends on (a model server amortizes per-call overhead across the
-    * batch, so the signature must be batch-level, not per-record).
-    */
-  object FakeDecoder {
-    /** Batch invocation counter — the observable a real model server logs;
-      * MultimodalSpec asserts exactly one call per mapPartitions batch.
-      */
-    val invocations = new java.util.concurrent.atomic.AtomicLong
-
-    /** One feature vector per payload in the batch: feature i = first
-      * 16 bits of md5("f<i>:" ++ payload-as-utf8) / 65535, in [0,1].
-      * Deterministic, so the DuckDB oracle reproduces it arithmetically.
-      */
-    def features(batch: Seq[Array[Byte]], dim: Int): Seq[Seq[Double]] = {
-      invocations.incrementAndGet()
-      val md = MessageDigest.getInstance("MD5")
-      batch.map { payload =>
-        val text = new String(payload, StandardCharsets.UTF_8)
-        (0 until dim).map { i =>
-          md.reset()
-          val d = md.digest(s"f$i:$text".getBytes(StandardCharsets.UTF_8))
-          (((d(0) & 0xFF) << 8) | (d(1) & 0xFF)) / 65535.0
-        }
-      }
-    }
-  }
-
   final case class MmIn(doc_id: Long, data: Array[Byte])
-  final case class MmFeat(doc_id: Long, features: Seq[Double])
   final case class ImgDecoded(doc_id: Long, format: String, width: Int,
       height: Int, channels: Int, sample_sum: Long, sample_min: Int,
       sample_max: Int)
 
-  /** Batched REAL image decode — same mapInPandas-analog batch shape as
-    * [[featurize]]: each `grouped(batchSize)` slice is one bounded-memory
-    * unit of work per task (batchSize × blob size), decode runs entirely
-    * executor-side with no shuffle. A foreign/undecodable blob (decode →
+  /** Batched REAL image decode in the mapInPandas-analog batch shape: each
+    * `grouped(batchSize)` slice is one bounded-memory unit of work per task
+    * (batchSize × blob size), decode runs entirely executor-side with no
+    * shuffle. A foreign/undecodable blob (decode →
     * null) DROPS the row — same posture as the KPL decoder — rather than
     * killing the task.
     */
@@ -236,22 +166,6 @@ object Multimodal {
               d.sampleSum, d.sampleMin, d.sampleMax)
           }
         }
-      }
-    }
-  }
-
-  /** Batched featurization — the mapInPandas-analog batch kernel: each
-    * `grouped(batchSize)` slice reaches the decoder as ONE batch call
-    * (bounded memory: batchSize × blob size per task). Public so the spec
-    * can assert the one-call-per-batch contract on a controlled input.
-    */
-  def featurize(in: org.apache.spark.sql.Dataset[MmIn], dim: Int,
-      batchSize: Int = 64): org.apache.spark.sql.Dataset[MmFeat] = {
-    import in.sparkSession.implicits._
-    in.mapPartitions { it =>
-      it.grouped(batchSize).flatMap { batch =>
-        val feats = FakeDecoder.features(batch.map(_.data), dim)
-        batch.zip(feats).map { case (r, f) => MmFeat(r.doc_id, f) }
       }
     }
   }

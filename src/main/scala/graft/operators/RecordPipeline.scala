@@ -9,10 +9,9 @@ import org.apache.spark.sql.functions._
   * (SURVEY.md §2 rows C3–C9, B2–B4). Works identically on batch frames and
   * Structured Streaming frames — the transforms are stateless narrow ops.
   *
-  * The KPL decode is a Scala UDF rather than a codegen'd Expression because
-  * there is no builtin protobuf path (see KplCodec); it is a per-record
-  * flatMap (explode) off the relational hot path, and the UDF boundary cost
-  * is dwarfed by the MD5/varint work itself.
+  * The KPL decode is the native [[graft.plans.KplDeaggregate]] generator
+  * (see [[deaggregate]]); zlib inflate and deflate are Scala UDFs over the
+  * pooled [[graft.plans.ZlibOps]] kernels.
   */
 object RecordPipeline {
 

@@ -74,7 +74,6 @@ object RecordQueries {
       FROM b
       UNION ALL
       SELECT 'tampered-' || CAST(batch AS VARCHAR), FALSE FROM b""")) { (s, dir) =>
-      graft.plans.GraftExtensions.register(s) // graft_kpl_md5_ok
       val frames = Tables.t(s, dir, "documents")
         .filter(col("doc_id") % 2 === 0)
         .groupBy(expr("doc_id div 16").as("batch"))

@@ -210,7 +210,6 @@ object VectorQueries {
       FROM cand JOIN n a ON vec_id1 = a.vec_id JOIN n b ON vec_id2 = b.vec_id
       WHERE round(list_dot_product(a.v, b.v) / (a.nrm * b.nrm), 6) >= 0.9""")) {
       (s, dir) =>
-      graft.plans.GraftExtensions.register(s) // graft_vector_dot
       lshSimPairs(withNrm(plantedBase(s, dir)))
     },
 
@@ -234,7 +233,6 @@ object VectorQueries {
       $semClosureSql
       SELECT src AS vec_id, MIN(dst) AS canonical, src = MIN(dst) AS kept
       FROM reach GROUP BY src""")) { (s, dir) =>
-      graft.plans.GraftExtensions.register(s)
       val corpus = semCorpus(s, dir)
       LlmQueries
         .labelPropagation(corpus.select(col("vec_id").as("doc_id")),
@@ -274,7 +272,6 @@ object VectorQueries {
              mx.max_quality, mx.n_members
       FROM m JOIN mx ON m.canonical = mx.canonical AND m.quality = mx.max_quality
       GROUP BY m.canonical, mx.max_quality, mx.n_members""")) { (s, dir) =>
-      graft.plans.GraftExtensions.register(s)
       semDedupKeepBest(semCorpus(s, dir))
     },
 
@@ -312,7 +309,6 @@ object VectorQueries {
         COUNT(*) AS n_vectors
       FROM (SELECT vec_id, v, c_id FROM asg WHERE rk = 1) sel, range(0, 64) t(i)
       GROUP BY c_id, i""")) { (s, dir) =>
-      graft.plans.GraftExtensions.register(s)
       kmeansStep(Tables.t(s, dir, "embeddings"))
     },
 
@@ -344,7 +340,6 @@ object VectorQueries {
           AS centroid,
         COUNT(*) AS n_vectors
       FROM asg3, range(0, 64) t(i) GROUP BY c_id, i""")) { (s, dir) =>
-      graft.plans.GraftExtensions.register(s)
       kmeansIterate(Tables.t(s, dir, "embeddings"), k = 8, iters = 3)
     },
 
@@ -386,7 +381,6 @@ object VectorQueries {
         round(MAX(d.d2), 6) AS max_d2
       FROM d JOIN m USING (label)
       GROUP BY d.label, m.n, m.sd_, m.sdd""")) { (s, dir) =>
-      graft.plans.GraftExtensions.register(s)
       embedOutliers(Tables.t(s, dir, "embeddings"))
     },
 
@@ -446,7 +440,6 @@ object VectorQueries {
       FROM m JOIN mx ON m.canonical = mx.canonical AND m.quality = mx.max_quality
       GROUP BY m.canonical, mx.km_cluster, mx.max_quality, mx.n_members""")) {
       (s, dir) =>
-      graft.plans.GraftExtensions.register(s)
       kmeansSemDedup(semCorpus(s, dir))
     },
 
@@ -485,7 +478,6 @@ object VectorQueries {
              g.vec_id AS hard_neg_id, g.sim AS hard_neg_sim
       FROM pos p JOIN neg g ON p.query_id = g.query_id
       WHERE p.r = 1 AND g.r = 1""")) { (s, dir) =>
-      graft.plans.GraftExtensions.register(s) // graft_vector_dot
       hardTriplets(Tables.t(s, dir, "embeddings")
         .select(col("vec_id"), col("label"),
           expr("transform(embedding, x -> CAST(x AS double))").as("v")))
@@ -533,7 +525,6 @@ object VectorQueries {
         CAST(SUM(CASE WHEN s < CAST(0.5 AS DOUBLE) THEN 1 ELSE 0 END)
           AS BIGINT) AS n_boundary
       FROM sil GROUP BY cluster""")) { (s, dir) =>
-      graft.plans.GraftExtensions.register(s)
       kmeansSilhouette(Tables.t(s, dir, "embeddings"))
     },
 
@@ -618,7 +609,6 @@ object VectorQueries {
     */
   def embedOutliers(emb: DataFrame): DataFrame = {
     val s = emb.sparkSession
-    graft.plans.GraftExtensions.register(s)
     import s.implicits._
     val base = emb.select(col("vec_id"), col("label"),
       expr("transform(embedding, x -> CAST(x AS double))").as("v"))
@@ -769,7 +759,6 @@ object VectorQueries {
     * kernel reads it.
     */
   private def kmBase(emb: DataFrame): DataFrame = {
-    graft.plans.GraftExtensions.register(emb.sparkSession)
     emb.select(col("vec_id"),
       expr("transform(embedding, x -> CAST(x AS double))").as("v"))
   }
@@ -976,7 +965,6 @@ object VectorQueries {
     */
   private def argminAssign(base: DataFrame,
       cents: Seq[(Long, Seq[Double])]): DataFrame = {
-    graft.plans.GraftExtensions.register(base.sparkSession)
     val (mat, ids, ccs) = kmTables(cents)
     val idsSql = ids.map(id => s"${id}L").mkString("array(", ",", ")")
     base.withColumn("cluster", expr(
@@ -1532,7 +1520,6 @@ object VectorQueries {
     * buckets keep q108's near-linear.
     */
   def candidateCounts(s: SparkSession, dir: String): Seq[(String, Long)] = {
-    graft.plans.GraftExtensions.register(s)
     val off = variantOffset(s, dir)
     val e = Tables.t(s, dir, "embeddings")
       .selectExpr("vec_id", "label", "transform(embedding, x -> CAST(x AS double)) AS v")
@@ -1607,7 +1594,6 @@ object VectorQueries {
     */
   def ivfCandidates(s: SparkSession, dir: String, probes: Int): DataFrame = {
     require(probes >= 1, "probes must be >= 1")
-    graft.plans.GraftExtensions.register(s) // graft_vector_dot
     val base = Tables.t(s, dir, "embeddings")
       .selectExpr("vec_id", "label", "transform(embedding, x -> CAST(x AS double)) AS v")
     val n = base.select(col("vec_id"), col("label"), col("v"),
@@ -1732,7 +1718,6 @@ object VectorQueries {
     * joins carry a broadcast side; output is 3 rows.
     */
   def ivfRecallCurve(s: SparkSession, dir: String, k: Int = 5): DataFrame = {
-    graft.plans.GraftExtensions.register(s)
     val n = Tables.t(s, dir, "embeddings")
       .selectExpr("vec_id", "label",
         "transform(embedding, x -> CAST(x AS DOUBLE)) AS v")

@@ -111,7 +111,7 @@ object FixedPointSum {
     */
   def exact(c: Column, scale: Int): Column = {
     import org.apache.spark.sql.functions._
-    // resolved via the GraftExtensions registry (Tables.t registers on
+    // resolved via the GraftExtensions registry (Tables registers it on
     // every session); the analyzer wraps the bare AggregateFunction
     val hl = call_function("graft_fixed_sum_hl", c, lit(scale))
     val unscaled = hl("hi").cast(DecimalType(38, 0)) * lit(Split) + hl("lo")

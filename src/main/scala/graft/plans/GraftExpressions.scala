@@ -6,16 +6,15 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
-import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.types.{ArrayType, BinaryType, BooleanType, DataType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expressions for the two hot byte-level kernels, plus the
-  * [[SparkSessionExtensions]] injector that registers them as SQL functions
-  * (`graft_is_kpl`, `graft_inflate_zlib`).
+/** The zlib kernels behind [[graft.operators.RecordPipeline]]'s
+  * `inflateZlib` / `deflateZlib` UDFs, which the consume path and q31 use.
   *
-  * Versus the ScalaUDF path ([[graft.operators.RecordPipeline]] keeps UDF
-  * variants for the plain Column API), a native expression:
+  * The rest of this file holds graft's native Catalyst expressions;
+  * [[GraftExtensions]] lists the ones SQL can call. Versus a ScalaUDF, a
+  * native expression:
   *  - participates in whole-stage codegen — `defineCodeGen` emits a direct
   *    static call, no ScalaUDF closure dispatch, no encoder boundary;
   *  - propagates nulls for free (generated null checks);
@@ -172,23 +171,6 @@ final case class KplDeaggregate(key: Expression, data: Expression)
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): KplDeaggregate =
     copy(key = newChildren(0), data = newChildren(1))
-}
-
-/** `graft_inflate_zlib(binary) → binary`: conditional inflate with
-  * raw-on-error passthrough (§2 C7).
-  */
-final case class InflateZlibExpr(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"$prettyName requires a BINARY argument")
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "graft_inflate_zlib"
-  override protected def nullSafeEval(input: Any): Any =
-    ZlibOps.inflateOrRaw(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.ZlibOps.inflateOrRaw($c)")
-  override protected def withNewChildInternal(newChild: Expression): InflateZlibExpr =
-    copy(child = newChild)
 }
 
 /** `graft_vector_dot(array<double>, array<double>) → double`: ascending
@@ -493,94 +475,21 @@ object HyperplaneSig {
   }
 }
 
-/** `graft_bloom_contains(sketch_bytes, string) → boolean`: membership probe
-  * of a serialized [[org.apache.spark.util.sketch.BloomFilter]] — q113's
-  * pre-filter kernel. The sketch argument must be a foldable BINARY literal
-  * (the filter built at query-construction time, embedded in the plan the
-  * way Spark's own `InjectRuntimeFilter` embeds its bloom as a scalar — the
-  * plan ships to executors through the per-stage taskBinary torrent
-  * broadcast, so a plan-embedded sketch has the same network profile as an
-  * explicit `Broadcast` variable). Versus the previous ScalaUDF probe this
-  * stays inside WholeStageCodegen and skips the UTF8String→String encoder
-  * boundary: `BloomFilterBase.mightContainString` delegates to
-  * `mightContainBinary(utf8 bytes)`, so probing `UTF8String.getBytes`
-  * directly is bit-identical. Deserialized once at plan time (lazy),
-  * shared by all generated code via the codegen references array.
-  */
-final case class BloomContains(sketch: Expression, child: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-  override def left: Expression = sketch
-  override def right: Expression = child
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (sketch.dataType != BinaryType || !sketch.foldable)
-      TypeCheckResult.TypeCheckFailure(s"$prettyName requires a foldable BINARY sketch argument")
-    else if (child.dataType != StringType)
-      TypeCheckResult.TypeCheckFailure(s"$prettyName requires a STRING probe argument")
-    else TypeCheckResult.TypeCheckSuccess
-  override def dataType: DataType = BooleanType
-  override def prettyName: String = "graft_bloom_contains"
-  @transient private lazy val bloom: org.apache.spark.util.sketch.BloomFilter =
-    org.apache.spark.util.sketch.BloomFilter.readFrom(
-      new java.io.ByteArrayInputStream(sketch.eval().asInstanceOf[Array[Byte]]))
-  override protected def nullSafeEval(sketchBytes: Any, value: Any): Any =
-    bloom.mightContainBinary(value.asInstanceOf[UTF8String].getBytes)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("graftBloom", bloom,
-      "org.apache.spark.util.sketch.BloomFilter")
-    defineCodeGen(ctx, ev, (_, v) => s"$ref.mightContainBinary($v.getBytes())")
-  }
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): BloomContains =
-    copy(sketch = newLeft, child = newRight)
-}
-
-/** `graft_cms_estimate(sketch_bytes, string) → long`: point-count probe of a
-  * serialized [[org.apache.spark.util.sketch.CountMinSketch]] — q112's audit
-  * kernel. Same contract and rationale as [[BloomContains]]: foldable BINARY
-  * sketch literal, one lazy deserialization shared through the references
-  * array, and `CountMinSketchImpl.estimateCount` hashes a String via
-  * `Utils.getBytesFromUTF8String`, so probing the raw UTF8String bytes
-  * (`estimateCountForBinaryItem`) is bit-identical to the String path.
-  */
-final case class CmsEstimate(sketch: Expression, child: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-  override def left: Expression = sketch
-  override def right: Expression = child
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (sketch.dataType != BinaryType || !sketch.foldable)
-      TypeCheckResult.TypeCheckFailure(s"$prettyName requires a foldable BINARY sketch argument")
-    else if (child.dataType != StringType)
-      TypeCheckResult.TypeCheckFailure(s"$prettyName requires a STRING probe argument")
-    else TypeCheckResult.TypeCheckSuccess
-  override def dataType: DataType = org.apache.spark.sql.types.LongType
-  override def prettyName: String = "graft_cms_estimate"
-  @transient private lazy val cms: org.apache.spark.util.sketch.CountMinSketch =
-    org.apache.spark.util.sketch.CountMinSketch.readFrom(
-      new java.io.ByteArrayInputStream(sketch.eval().asInstanceOf[Array[Byte]]))
-  override protected def nullSafeEval(sketchBytes: Any, value: Any): Any =
-    cms.estimateCount(value.asInstanceOf[UTF8String].getBytes)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("graftCms", cms,
-      "org.apache.spark.util.sketch.CountMinSketch")
-    defineCodeGen(ctx, ev, (_, v) => s"$ref.estimateCount($v.getBytes())")
-  }
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): CmsEstimate =
-    copy(sketch = newLeft, child = newRight)
-}
-
-/** Broadcast-handle twin of [[CmsEstimate]] (round 20, guide §5 task-closure
-  * rule): the literal form serializes the sketch TWICE into every stage's
-  * task binary that references it — once as the foldable BINARY literal in
-  * the expression tree and once as the deserialized
-  * [[org.apache.spark.util.sketch.CountMinSketch]] in the codegen references
-  * array — and every TASK re-deserializes both (q150's six-pack measured as
-  * a 12.4 MiB "Broadcasting large task binary" per probe stage). Holding a
-  * [[org.apache.spark.broadcast.Broadcast]] handle instead ships the sketch
-  * ONCE per executor through the torrent protocol (in local mode: zero
-  * copies — the value is the driver's own object) and the task binary
-  * carries only the handle. Cannot be built from the SQL function registry
-  * (the handle is not a literal), so call sites construct the Column via
+/** Point-count probe of a [[org.apache.spark.util.sketch.CountMinSketch]]
+  * held through a [[org.apache.spark.broadcast.Broadcast]] handle — the
+  * q112/q150 CMS audits. Round 20 (guide §5 task-closure rule) replaced a
+  * plan-literal form, which serialized the sketch TWICE into every stage's
+  * task binary that referenced it — once as a foldable BINARY literal in
+  * the expression tree and once deserialized in the codegen references
+  * array — and made every TASK re-deserialize both (q150's six-pack
+  * measured as a 12.4 MiB "Broadcasting large task binary" per probe
+  * stage). The handle ships the sketch ONCE per executor through the
+  * torrent protocol (in local mode: zero copies — the value is the
+  * driver's own object) and the task binary carries only the handle.
+  * `CountMinSketch.estimateCount` hashes a String through its UTF-8 bytes,
+  * so probing `UTF8String.getBytes` gives the String path's estimate.
+  * Cannot be built from the SQL function registry (the handle is not a
+  * literal), so call sites construct the Column via
   * [[org.apache.spark.sql.graftbridge.ColumnBridge]].
   */
 final case class CmsProbe(
@@ -603,8 +512,11 @@ final case class CmsProbe(
     copy(child = newChild)
 }
 
-/** Broadcast-handle twin of [[BloomContains]] — same rationale as
-  * [[CmsProbe]].
+/** Membership probe of a [[org.apache.spark.util.sketch.BloomFilter]]
+  * held through a broadcast handle — the q113/q142 Bloom pre-filters, one
+  * broadcast per executor for the reason given at [[CmsProbe]]. A STRING
+  * probe tests its UTF-8 bytes with `mightContainBinary`, which is what
+  * `mightContainString` does; a BIGINT probe calls `mightContainLong`.
   */
 final case class BloomProbe(
     bcast: org.apache.spark.broadcast.Broadcast[org.apache.spark.util.sketch.BloomFilter],
@@ -690,16 +602,6 @@ final case class TokenTf(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
-/** Injector: a session builder's `withExtensions(new GraftExtensions)` at
-  * session build time, or [[GraftExtensions.register]] on a live session.
-  */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit =
-    GraftExtensions.functions.foreach { case (name, info, builder) =>
-      e.injectFunction((FunctionIdentifier(name), info, builder))
-    }
-}
-
 object GraftExtensions {
   private def one(args: Seq[Expression], name: String): Expression = {
     require(args.length == 1, s"$name takes exactly 1 argument")
@@ -710,9 +612,6 @@ object GraftExtensions {
     ("graft_is_kpl",
       new ExpressionInfo(classOf[IsKplAggregated].getName, "graft_is_kpl"),
       (args: Seq[Expression]) => IsKplAggregated(one(args, "graft_is_kpl"))),
-    ("graft_inflate_zlib",
-      new ExpressionInfo(classOf[InflateZlibExpr].getName, "graft_inflate_zlib"),
-      (args: Seq[Expression]) => InflateZlibExpr(one(args, "graft_inflate_zlib"))),
     ("graft_kpl_md5_ok",
       new ExpressionInfo(classOf[KplMd5Ok].getName, "graft_kpl_md5_ok"),
       (args: Seq[Expression]) => KplMd5Ok(one(args, "graft_kpl_md5_ok"))),
@@ -743,21 +642,9 @@ object GraftExtensions {
         require(args.length == 2, "graft_shingles64 takes exactly 2 arguments")
         ShingleSet64(args(0), args(1))
       }),
-    ("graft_bloom_contains",
-      new ExpressionInfo(classOf[BloomContains].getName, "graft_bloom_contains"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, "graft_bloom_contains takes exactly 2 arguments")
-        BloomContains(args(0), args(1))
-      }),
     ("graft_gram_stats",
       new ExpressionInfo(classOf[GramStats].getName, "graft_gram_stats"),
       (args: Seq[Expression]) => GramStats(one(args, "graft_gram_stats"))),
-    ("graft_cms_estimate",
-      new ExpressionInfo(classOf[CmsEstimate].getName, "graft_cms_estimate"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, "graft_cms_estimate takes exactly 2 arguments")
-        CmsEstimate(args(0), args(1))
-      }),
     ("graft_centroid_argmin",
       new ExpressionInfo(classOf[CentroidArgmin].getName, "graft_centroid_argmin"),
       (args: Seq[Expression]) => {
@@ -779,8 +666,10 @@ object GraftExtensions {
         FixedPointSumHL(args(0), scale)
       }))
 
-  /** Idempotent post-hoc registration for sessions built without
-    * extensions (e.g. the driver-owned Verify/Bench sessions).
+  /** Registers [[functions]] on a live session; idempotent (one map put per
+    * function). [[graft.Tables]] is the only caller: `Tables.session`
+    * registers every session graft builds, and `Tables.t` every session a
+    * query scans through, including one graft did not build.
     */
   def register(spark: SparkSession): Unit =
     functions.foreach { case (name, info, builder) =>

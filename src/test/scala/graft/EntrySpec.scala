@@ -17,4 +17,18 @@ class EntrySpec extends SparkSpec {
     val orphans = SparkEntry.oracleSql.keySet -- names
     assert(orphans.isEmpty, s"oracles without queries: $orphans")
   }
+
+  test("every query builds and analyzes on a session graft did not register") {
+    // a fresh session has none of the runtime-registered graft_* functions,
+    // like a session the driver builds itself; only Tables.t registers them
+    // there, so a build that reaches a graft_* call before its first scan
+    // fails to analyze
+    val fresh = spark.newSession()
+    assert(!fresh.catalog.functionExists("graft_is_kpl"))
+    val failed = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, build) =>
+      try { build(fresh, "/root/testdata/sf0.001").queryExecution.analyzed; None }
+      catch { case e: Exception => Some(s"$name: ${e.getMessage.linesIterator.next()}") }
+    }
+    assert(failed.isEmpty, failed.mkString("\n"))
+  }
 }

@@ -1,19 +1,19 @@
 package graft
 
 import graft.kpl.KplCodec
-import graft.plans.{GraftExtensions, ZlibOps}
+import graft.plans.ZlibOps
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 import java.nio.charset.StandardCharsets
 
-/** Native-expression suite: registration, correctness vs the UDF path, and
-  * the codegen/fold properties that motivate the expression form.
+/** Native-expression suite: correctness against reference formulations
+  * (KplCodec, Spark's own sketch library, independent text-hash and
+  * decimal forms) and the codegen/fold properties that motivate the
+  * expression form. The functions come from [[Tables.session]].
   */
 class GraftExpressionsSpec extends SparkSpec {
 
   private def b(s: String) = s.getBytes(StandardCharsets.UTF_8)
-
-  private lazy val registered: Unit = GraftExtensions.register(spark)
 
   private def df(rows: Seq[Array[Byte]]) =
     spark.createDataFrame(
@@ -21,33 +21,15 @@ class GraftExpressionsSpec extends SparkSpec {
       StructType(Seq(StructField("data", BinaryType))))
 
   test("graft_is_kpl matches KplCodec semantics incl. null") {
-    registered
     val rows = Seq(b("plain"), KplCodec.Magic ++ b("x"), null)
     val out = df(rows).selectExpr("graft_is_kpl(data) AS agg")
       .collect().map(r => if (r.isNullAt(0)) null else r.getBoolean(0))
     assert(out.toSeq == Seq(false, true, null))
   }
 
-  test("graft_inflate_zlib round-trips and passes raw bytes through on error") {
-    registered
-    val payload = ("abc " * 100).getBytes(StandardCharsets.UTF_8)
-    val deflated = {
-      val buf = new java.io.ByteArrayOutputStream()
-      val dos = new java.util.zip.DeflaterOutputStream(buf)
-      dos.write(payload); dos.close(); buf.toByteArray
-    }
-    val raw = b("P:not zlib")
-    val out = df(Seq(deflated, raw))
-      .selectExpr("graft_inflate_zlib(data) AS d")
-      .collect().map(_.getAs[Array[Byte]]("d").toSeq)
-    assert(out(0) == payload.toSeq)
-    assert(out(1) == raw.toSeq)
-  }
-
   test("expressions stay inside whole-stage codegen (no ScalaUDF node)") {
-    registered
     val plan = df(Seq(b("x")))
-      .selectExpr("graft_is_kpl(data)", "graft_inflate_zlib(data)")
+      .selectExpr("graft_is_kpl(data)")
       .queryExecution.executedPlan
     val s = plan.toString
     assert(!s.contains("ScalaUDF"), s)
@@ -56,24 +38,49 @@ class GraftExpressionsSpec extends SparkSpec {
   }
 
   test("literal input constant-folds at plan time") {
-    registered
     val optimized = spark.sql("SELECT graft_is_kpl(X'F3899AC2AB') AS v")
       .queryExecution.optimizedPlan
     // after constant folding the expression is gone, only the literal remains
     assert(!optimized.toString.contains("graft_is_kpl"), optimized.toString)
   }
 
-  test("graft_bloom_contains matches mightContainString, propagates null, codegens") {
-    registered
-    import org.apache.spark.sql.functions.{call_function, col, lit}
+  // the name's graft_cms_estimate computed Spark's estimateCount(String),
+  // so the probe is checked against that directly
+  test("CmsProbe (broadcast handle) is bit-identical to graft_cms_estimate and codegens") {
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.graftbridge.ColumnBridge
+    val cms = org.apache.spark.util.sketch.CountMinSketch.create(0.001, 0.999, 42)
+    cms.addString("alpha beta", 7); cms.addString("gamma", 3)
+    val in = spark.createDataFrame(
+      spark.sparkContext.parallelize(Seq(Row("alpha beta"), Row("gamma"), Row("zeta"), Row(null)), 2),
+      StructType(Seq(StructField("s", StringType))))
+    val probed = in.select(
+      ColumnBridge.column(graft.plans.CmsProbe(spark.sparkContext.broadcast(cms),
+        ColumnBridge.expression(col("s")))).as("est"))
+    val out = probed.collect().map(r => if (r.isNullAt(0)) null else r.getLong(0))
+    assert(out.toSeq == Seq(
+      cms.estimateCount("alpha beta"), cms.estimateCount("gamma"),
+      cms.estimateCount("zeta"), null))
+    assert(out(0) == 7L && out(1) == 3L, "CMS est >= exact and exact here (no collisions at this width)")
+    val plan = probed.queryExecution.executedPlan.toString
+    assert(!plan.contains("ScalaUDF"), plan)
+    assert(plan.contains("*(1)"), plan)
+  }
+
+  // the name's graft_bloom_contains computed Spark's mightContainString,
+  // so the probe is checked against that directly
+  test("BloomProbe (broadcast handle) is bit-identical to graft_bloom_contains and codegens") {
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.graftbridge.ColumnBridge
     val bf = org.apache.spark.util.sketch.BloomFilter.create(100, 0.01)
     Seq("alpha beta", "gamma delta").foreach(bf.putString)
-    val bytes = { val o = new java.io.ByteArrayOutputStream(); bf.writeTo(o); o.toByteArray }
     val in = spark.createDataFrame(
       spark.sparkContext.parallelize(
         Seq(Row("alpha beta"), Row("gamma delta"), Row("epsilon"), Row(null)), 2),
       StructType(Seq(StructField("s", StringType))))
-    val probed = in.select(call_function("graft_bloom_contains", lit(bytes), col("s")).as("hit"))
+    val probed = in.select(
+      ColumnBridge.column(graft.plans.BloomProbe(spark.sparkContext.broadcast(bf),
+        ColumnBridge.expression(col("s")))).as("hit"))
     val out = probed.collect().map(r => if (r.isNullAt(0)) null else r.getBoolean(0))
     // one-sided: members MUST hit; the non-member check also validates the
     // probe hashes match putString (a hash mismatch would randomize hits)
@@ -83,76 +90,7 @@ class GraftExpressionsSpec extends SparkSpec {
     assert(plan.contains("*(1)"), plan)
   }
 
-  test("graft_cms_estimate matches estimateCount, propagates null, codegens") {
-    registered
-    import org.apache.spark.sql.functions.{call_function, col, lit}
-    val cms = org.apache.spark.util.sketch.CountMinSketch.create(0.001, 0.999, 42)
-    cms.addString("alpha beta", 7); cms.addString("gamma", 3)
-    val bytes = { val o = new java.io.ByteArrayOutputStream(); cms.writeTo(o); o.toByteArray }
-    val in = spark.createDataFrame(
-      spark.sparkContext.parallelize(Seq(Row("alpha beta"), Row("gamma"), Row("zeta"), Row(null)), 2),
-      StructType(Seq(StructField("s", StringType))))
-    val probed = in.select(call_function("graft_cms_estimate", lit(bytes), col("s")).as("est"))
-    val out = probed.collect().map(r => if (r.isNullAt(0)) null else r.getLong(0))
-    assert(out.toSeq == Seq(
-      cms.estimateCount("alpha beta"), cms.estimateCount("gamma"),
-      cms.estimateCount("zeta"), null))
-    assert(out(0) == 7L && out(1) == 3L, "CMS est >= exact and exact here (no collisions at this width)")
-    val plan = probed.queryExecution.executedPlan.toString
-    assert(!plan.contains("ScalaUDF"), plan)
-  }
-
-  test("CmsProbe (broadcast handle) is bit-identical to graft_cms_estimate and codegens") {
-    registered
-    import org.apache.spark.sql.functions.{call_function, col, lit}
-    import org.apache.spark.sql.graftbridge.ColumnBridge
-    val cms = org.apache.spark.util.sketch.CountMinSketch.create(0.001, 0.999, 42)
-    cms.addString("alpha beta", 7); cms.addString("gamma", 3)
-    val bytes = { val o = new java.io.ByteArrayOutputStream(); cms.writeTo(o); o.toByteArray }
-    val in = spark.createDataFrame(
-      spark.sparkContext.parallelize(Seq(Row("alpha beta"), Row("gamma"), Row("zeta"), Row(null)), 2),
-      StructType(Seq(StructField("s", StringType))))
-    val bc = spark.sparkContext.broadcast(cms)
-    val probed = in.select(
-      ColumnBridge.column(graft.plans.CmsProbe(bc,
-        ColumnBridge.expression(col("s")))).as("est_bc"),
-      call_function("graft_cms_estimate", lit(bytes), col("s")).as("est_lit"))
-    val rows = probed.collect()
-    rows.foreach { r =>
-      assert(r.isNullAt(0) == r.isNullAt(1))
-      if (!r.isNullAt(0)) assert(r.getLong(0) == r.getLong(1))
-    }
-    val plan = probed.queryExecution.executedPlan.toString
-    assert(!plan.contains("ScalaUDF"), plan)
-    assert(plan.contains("*(1)"), plan)
-  }
-
-  test("BloomProbe (broadcast handle) is bit-identical to graft_bloom_contains and codegens") {
-    registered
-    import org.apache.spark.sql.functions.{call_function, col, lit}
-    import org.apache.spark.sql.graftbridge.ColumnBridge
-    val bf = org.apache.spark.util.sketch.BloomFilter.create(100, 0.01)
-    Seq("alpha beta", "gamma delta").foreach(bf.putString)
-    val bytes = { val o = new java.io.ByteArrayOutputStream(); bf.writeTo(o); o.toByteArray }
-    val in = spark.createDataFrame(
-      spark.sparkContext.parallelize(
-        Seq(Row("alpha beta"), Row("gamma delta"), Row("epsilon"), Row(null)), 2),
-      StructType(Seq(StructField("s", StringType))))
-    val bc = spark.sparkContext.broadcast(bf)
-    val probed = in.select(
-      ColumnBridge.column(graft.plans.BloomProbe(bc,
-        ColumnBridge.expression(col("s")))).as("hit_bc"),
-      call_function("graft_bloom_contains", lit(bytes), col("s")).as("hit_lit"))
-    probed.collect().foreach { r =>
-      assert(r.isNullAt(0) == r.isNullAt(1))
-      if (!r.isNullAt(0)) assert(r.getBoolean(0) == r.getBoolean(1))
-    }
-    val plan = probed.queryExecution.executedPlan.toString
-    assert(!plan.contains("ScalaUDF"), plan)
-  }
-
   test("BloomProbe over BIGINT probes mightContainLong") {
-    registered
     import org.apache.spark.sql.functions.col
     import org.apache.spark.sql.graftbridge.ColumnBridge
     val bf = org.apache.spark.util.sketch.BloomFilter.create(100, 0.01)
@@ -170,7 +108,6 @@ class GraftExpressionsSpec extends SparkSpec {
   }
 
   test("graft_vector_dot equals the left-fold dot product, bit-exact") {
-    registered
     val df = spark.sql(
       "SELECT graft_vector_dot(array(1.5D, -2.0D, 0.25D), array(4.0D, 0.5D, 8.0D)) AS d, " +
         "graft_vector_dot(CAST(NULL AS ARRAY<DOUBLE>), array(1.0D)) IS NULL AS n")
@@ -227,7 +164,6 @@ class GraftExpressionsSpec extends SparkSpec {
   }
 
   test("text-hash kernels match reference formulations on random inputs (property)") {
-    registered
     import org.scalacheck.{Gen, Prop, Test => SCTest}
     // tokens include empties (double/trailing spaces) and multi-byte UTF-8
     val token = Gen.oneOf(
@@ -301,7 +237,6 @@ class GraftExpressionsSpec extends SparkSpec {
 
   test("graft_gram_stats: one-pass gram statistics, empty-token fidelity, null for short docs") {
     import spark.implicits._
-    graft.plans.GraftExtensions.register(spark)
     // doubled space => an EMPTY token, a real token on both engines'
     // split semantics; the kernel must count it like any other
     val rows = Seq(
@@ -325,7 +260,6 @@ class GraftExpressionsSpec extends SparkSpec {
 
   test("graft_token_tf counts multiplicities, keeps empty tokens, first-occurrence order") {
     import spark.implicits._
-    graft.plans.GraftExtensions.register(spark)
     val got = Seq((1L, "b a b  b"), (2L, "x")).toDF("doc_id", "text")
       .selectExpr("doc_id", "explode(graft_token_tf(text)) AS t")
       .selectExpr("doc_id", "t.token", "t.tf")
@@ -339,7 +273,6 @@ class GraftExpressionsSpec extends SparkSpec {
   test("graft_fixed_sum_hl equals the decimal sum on fixed-point data, SUM null semantics") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    graft.plans.GraftExtensions.register(spark)
     // 2-dp fixed-point values incl. negatives and nulls; group c is
     // all-null and must yield NULL like SUM
     val rows = Seq(

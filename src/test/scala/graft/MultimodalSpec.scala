@@ -1,44 +1,19 @@
 package graft
 
 import graft.operators.Multimodal
-import graft.operators.Multimodal.{BlobCodec, FakeDecoder, ImageCodec, MmIn}
+import graft.operators.Multimodal.{ImageCodec, MmIn}
 import java.awt.image.BufferedImage
 import java.io.ByteArrayOutputStream
 import java.nio.charset.StandardCharsets
 import javax.imageio.ImageIO
 
-/** Blob container codec + fake decoder determinism + the batch-kernel
-  * contract of the featurization path.
+/** The real image path behind q60/q61/q109: `javax.imageio` PNG/BMP
+  * decode against hand-built and generated rasters, the nearest-neighbor
+  * half resize, and the drop posture of the batched Dataset operators.
   */
 class MultimodalSpec extends SparkSpec {
 
   private def b(s: String) = s.getBytes(StandardCharsets.UTF_8)
-
-  test("blob header round trip") {
-    val blob = BlobCodec.encode(640, 480, 3, b("payload"))
-    val m = BlobCodec.decodeMeta(blob)
-    assert(m == BlobCodec.Meta("GFT0", 640, 480, 3, 7))
-  }
-
-  test("16-bit dimensions survive the byte split") {
-    val m = BlobCodec.decodeMeta(BlobCodec.encode(65535, 257, 255, Array.emptyByteArray))
-    assert(m.width == 65535 && m.height == 257 && m.channels == 255 && m.payload_len == 0)
-  }
-
-  test("foreign or truncated blobs decode to null (drop posture)") {
-    assert(BlobCodec.decodeMeta(b("JPEG not ours")) == null)
-    assert(BlobCodec.decodeMeta(b("GFT")) == null)
-    assert(BlobCodec.decodeMeta(null) == null)
-  }
-
-  test("fake features are deterministic, dim-sized, in [0,1]") {
-    val Seq(f1, other) = FakeDecoder.features(Seq(b("same payload"), b("other payload")), 8)
-    val Seq(f2) = FakeDecoder.features(Seq(b("same payload")), 8)
-    assert(f1 == f2)
-    assert(f1.size == 8)
-    assert(f1.forall(x => x >= 0.0 && x <= 1.0))
-    assert(other != f1)
-  }
 
   test("real decode: a known 2x2 gray PNG round-trips bit-exactly") {
     // Hand-built image, pixels [[1,2],[3,4]] — the decoded stats must be
@@ -119,18 +94,5 @@ class MultimodalSpec extends SparkSpec {
     val out = Multimodal.decodeImages(rows.toDS().repartition(1)).collect()
     assert(out.map(_.doc_id).toSeq == Seq(5L))
     assert(out.head.width == w && out.head.height == h && out.head.channels == c)
-  }
-
-  test("featurize invokes the decoder exactly once per 64-record batch") {
-    import spark.implicits._
-    val rows = (0 until 200).map(i => MmIn(i.toLong, b(s"payload-$i")))
-    val ds = spark.createDataset(rows).repartition(1)
-    FakeDecoder.invocations.set(0)
-    val out = Multimodal.featurize(ds, 4).collect()
-    assert(out.length == 200)
-    assert(out.forall(_.features.size == 4))
-    // 200 rows in one partition at batchSize 64 → 64+64+64+8 = 4 calls
-    assert(FakeDecoder.invocations.get() == 4,
-      s"expected 4 batch invocations, got ${FakeDecoder.invocations.get()}")
   }
 }

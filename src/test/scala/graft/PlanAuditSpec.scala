@@ -41,7 +41,7 @@ class PlanAuditSpec extends SparkSpec {
     flatten(df.queryExecution.executedPlan)
   }
 
-  /** Every `.scala` file under src/main/scala/graft with its lines, for
+  /** Every `.scala` file under src/main/scala with its lines, for
     * the source audits.
     */
   private def mainSources: Seq[(java.io.File, Vector[String])] = {
@@ -49,7 +49,7 @@ class PlanAuditSpec extends SparkSpec {
       d.listFiles().toSeq.flatMap(f =>
         if (f.isDirectory) walk(f)
         else if (f.getName.endsWith(".scala")) Seq(f) else Nil)
-    val root = new java.io.File("src/main/scala/graft")
+    val root = new java.io.File("src/main/scala")
     assert(root.isDirectory, s"expected ${root.getAbsolutePath}")
     walk(root).map { f =>
       val src = scala.io.Source.fromFile(f, "UTF-8")
@@ -328,7 +328,6 @@ class PlanAuditSpec extends SparkSpec {
 
   test("q123 candidate stage: map-only assignment, ONE cluster-id exchange reused across the pair self-join") {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-    graft.plans.GraftExtensions.register(spark)
     val base = spark.range(64).selectExpr("id AS vec_id",
       "transform(sequence(0, 63), i -> CAST(id % 7 + i AS DOUBLE)) AS v")
       .selectExpr("vec_id", "v", "sqrt(graft_vector_dot(v, v)) AS nrm")
@@ -682,20 +681,34 @@ class PlanAuditSpec extends SparkSpec {
         offenders.mkString("\n"))
   }
 
+  /** `file:line: text` of every src/main line outside Tables.scala that
+    * contains `needle`.
+    */
+  private def outsideTables(needle: String): Seq[String] =
+    mainSources.filter(_._1.getName != "Tables.scala").flatMap { case (f, lines) =>
+      lines.zipWithIndex.collect {
+        case (l, i) if l.contains(needle) => s"${f.getName}:${i + 1}: ${l.trim}"
+      }
+    }
+
   test("one session builder: src/main builds a SparkSession only in Tables.session") {
     // sessionConf (UTC, nanosAsLong, the java.nio checkpoint manager) and
     // staticConf (codegen cache, artifact isolation) reach a session only
     // through the builder that applies them; a second builder is a copy
     // that can drift
-    val sites = mainSources.filter(_._1.getName != "Tables.scala").flatMap { case (f, lines) =>
-      lines.zipWithIndex.collect {
-        case (l, i) if l.contains("SparkSession.builder") =>
-          s"${f.getName}:${i + 1}: ${l.trim}"
-      }
-    }
+    val sites = outsideTables("SparkSession.builder")
     assert(sites.isEmpty,
       "SparkSession.builder outside Tables.scala (use Tables.session):\n" +
         sites.mkString("\n"))
+  }
+
+  test("one function registry: src/main registers graft's SQL functions only in Tables") {
+    // Tables.session registers every session graft builds and Tables.t
+    // every session a query scans; a call anywhere else hides a build
+    // that would fail on a session graft did not register
+    val sites = outsideTables("GraftExtensions.register")
+    assert(sites.isEmpty,
+      "GraftExtensions.register outside Tables.scala:\n" + sites.mkString("\n"))
   }
 
   test("q140 JL audit is map-only: literal matrix folds, no join, one group exchange") {

@@ -205,7 +205,6 @@ class VectorSpec extends SparkSpec {
 
   test("q117 keeps the highest-quality cluster member, not the min id") {
     import spark.implicits._
-    graft.plans.GraftExtensions.register(spark)
     // controlled corpus: vectors 1 and 2 are parallel (cosine = 1.0 — a
     // guaranteed LSH near-dup pair) but 2 is SCALED UP, so its L2 norm —
     // the quality score — is strictly higher; vec 7 is orthogonal noise.
@@ -535,7 +534,6 @@ class VectorSpec extends SparkSpec {
   }
 
   test("q123 under the driver cap takes its corpus-derived k from the fetch, not a count job") {
-    graft.plans.GraftExtensions.register(spark)
     val vq = operators.VectorQueries
     val base = kmRandom(500, 29).selectExpr("vec_id",
       "transform(embedding, x -> CAST(x AS double)) AS v")
@@ -549,7 +547,6 @@ class VectorSpec extends SparkSpec {
 
   test("q123 keeps the highest-quality member of each within-cell semantic group") {
     import spark.implicits._
-    graft.plans.GraftExtensions.register(spark)
     // md5 order over {1,2,7} is 7 < 1 < 2, so k=2 seeds are {7, 1}:
     // vector 2 (parallel to 1, scaled up — cosine 1.0, higher norm) joins
     // seed 1's cell, the orthogonal noise vector 7 sits alone. The
@@ -635,7 +632,6 @@ class VectorSpec extends SparkSpec {
 
   test("q123 bounded mode re-splits over-cap cells before the pair kernel (VERDICT r17 ask #3)") {
     import spark.implicits._
-    graft.plans.GraftExtensions.register(spark)
     // md5 order over {1,2,3,7} is 7 < 1 < 2 < 3, so k=2 seeds are {7, 1}:
     // the three parallel vectors {1,2,3} share seed-1's cell, orthogonal
     // 7 sits alone. maxCell=2 splits the hot cell into {1,2} and {3}: the
@@ -670,7 +666,6 @@ class VectorSpec extends SparkSpec {
 
   test("q128 picks lowest-cosine positive / highest-cosine negative, ties to min id") {
     import spark.implicits._
-    graft.plans.GraftExtensions.register(spark)
     val emb = Seq(
       (0L, 0, Seq(1.0, 0.0)),  // anchor
       (1L, 2, Seq(1.0, 1.0)),  // anchor with NO same-label peer → dropped
