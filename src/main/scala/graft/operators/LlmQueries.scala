@@ -98,7 +98,7 @@ object LlmQueries {
     (j: String) => s"""array_join(transform(sequence(0, $j - 1),
         i -> concat('jk', CAST(doc_id AS STRING), 'x', i)), ' ')"""
   /** The planted-chain corpus is FIXTURE data, not operator work — three
-    * of its consumers (q87, q103, the DedupMetrics probes) would each
+    * of its consumers (q87, q103, the specs) would each
     * regenerate the same junk-token expansion per run (~2 s of q103's
     * sf1 time was corpus generation). Memoize one eagerly-checkpointed
     * copy per (session, dir): the checkpoint pins only the small
@@ -1513,8 +1513,8 @@ object LlmQueries {
     // fixed-eps CMS variant measured 47× reduction at sf0.1 but only
     // 1.09× at sf2). The oracle is q92's UNFILTERED exact computation,
     // so the driver's hash-equality row IS the no-false-negative audit —
-    // stronger than an in-band boolean. DedupMetrics reports the
-    // pre-filter's candidate reduction per scale.
+    // stronger than an in-band boolean. DedupSpec pins the
+    // pre-filter's candidate reduction through [[decontamReduction]].
     Q("q113_decontaminate_bloom", Some(s"""
       WITH corpus AS (
         SELECT doc_id, text FROM documents
@@ -2449,16 +2449,7 @@ object LlmQueries {
         string_agg(CASE WHEN kept = 1 THEN chunk_text END,
                    ' ' ORDER BY chunk_id) AS scrubbed_text
       FROM fl GROUP BY doc_id""")) { (s, dir) =>
-      // SPARK_GRAFT_Q142_DUP_CAP (bench-only knob, round 20, VERDICT r19
-      // ask #4): forces the production Bloom fallback in a measured run
-      // (cap=0 -> every dup-hash count exceeds it) so the scale path has
-      // a benchmarked price, not just its parity spec. Unset everywhere
-      // else — Verify and the oracle always exercise the default path,
-      // and TextPipelineSpec pins the two paths bit-identical.
-      sys.env.get("SPARK_GRAFT_Q142_DUP_CAP").map(_.toLong) match {
-        case Some(cap) => chunkScrub(dupCorpus(s, dir), broadcastDupCap = cap)
-        case None      => chunkScrub(dupCorpus(s, dir))
-      }
+      chunkScrub(dupCorpus(s, dir))
     },
 
     // --------------------------------------------------------------- Q143
@@ -3124,12 +3115,12 @@ object LlmQueries {
       expr("bool_and(uni_ok)").as("cms_uni_ok")))
   }
 
-  /** q150's scale evidence for DEDUP_CANDIDATES: (count-table rows the
-    * exact form must keep joinable, serialized six-pack bytes — CONSTANT
-    * by construction, the whole point — and audit violations, which must
-    * be 0 at every scale for the substitution contract to hold).
+  /** q150's scale evidence, pinned by TextPipelineSpec: (count-table rows
+    * the exact form must keep joinable, serialized six-pack bytes —
+    * CONSTANT by construction, the whole point — and audit violations,
+    * which must be 0 at every scale for the substitution contract to hold).
     */
-  def sbCmsReduction(docs: DataFrame, eps: Double = 2e-4,
+  private[graft] def sbCmsReduction(docs: DataFrame, eps: Double = 2e-4,
       confidence: Double = 0.999, seed: Int = 42): (Long, Long, Long) = {
     val spark = docs.sparkSession
     val p = sbParts(docs)
@@ -3360,29 +3351,39 @@ object LlmQueries {
           |     ELSE CAST(0 AS BIGINT) END AS cc_micro""".stripMargin)
   }
 
-  /** q137 kernel — 3 rounds of distributed BPE-style merge learning (see
-    * the Q entry for the double-space rendering contract). Per round:
-    * ONE vocab-exchanged pair-count aggregate over the exploded adjacent
-    * pairs (partial map-side combine), a TakeOrdered-1 argmax to the
-    * driver (count DESC, w1, w2), then a map-only literal `replace`
-    * rewrite whose per-doc length delta IS the applied count (each
-    * replacement shortens the text by exactly 1). The rewritten corpus
-    * localCheckpoints each round so the next round's count, the delta
-    * aggregate, and the next rewrite share one materialization and the
-    * loop's lineage stays constant-depth (the pagerank lesson). Only the
-    * pair-count table and one argmax row ever move; the corpus itself is
-    * never shuffled.
+  /** q137 kernel — 3 rounds of distributed BPE-style merge learning
+    * ([[bpeLearn]]), reported per round.
     */
   def bpeMerges(docs: DataFrame, nMerges: Int = 3): DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
+    bpeLearn(docs, Nil, nMerges, "q137")._2
+      .toDF("merge_rank", "w1", "w2", "pair_count", "n_applied")
+  }
+
+  /** The merge-learning loop q137 and q141 share (see the q137 Q entry
+    * for the double-space rendering contract): `docs`' `text` renders
+    * into `t`, and the `carry` columns ride every rewrite unchanged.
+    * Per round: ONE vocab-exchanged pair-count aggregate over the
+    * exploded adjacent pairs (partial map-side combine), a TakeOrdered-1
+    * argmax to the driver (count DESC, w1, w2), then a map-only literal
+    * `replace` rewrite whose per-doc length delta IS the applied count
+    * (each replacement shortens the text by exactly 1). The rewritten
+    * corpus localCheckpoints each round so the next round's count, the
+    * delta aggregate, and the next rewrite share one materialization and
+    * the loop's lineage stays constant-depth (the pagerank lesson). Only
+    * the pair-count table and one argmax row ever move; the corpus itself
+    * is never shuffled. Returns the rewritten corpus (`carry` plus `t`)
+    * and (merge_rank, w1, w2, pair_count, n_applied) per round.
+    */
+  private def bpeLearn(docs: DataFrame, carry: Seq[Column], nMerges: Int,
+      label: String): (DataFrame, Seq[(Int, String, String, Long, Long)]) = {
     var cur = docs
-      .select(concat(lit("  "),
-        expr("replace(text, ' ', '  ')"), lit("  ")).as("t"))
+      .select(carry :+ concat(lit("  "),
+        expr("replace(text, ' ', '  ')"), lit("  ")).as("t"): _*)
       .localCheckpoint(true)
-    val out = scala.collection.mutable.ArrayBuffer
-      .empty[(Int, String, String, Long, Long)]
-    for (rank <- 1 to nMerges) {
+    val kept = cur.columns.filter(_ != "t").map(col).toSeq
+    val rounds = for (rank <- 1 to nMerges) yield {
       val best = cur
         .select(expr("filter(split(t, '  '), x -> x != '')").as("tk"))
         .filter(expr("size(tk) >= 2"))
@@ -3394,7 +3395,7 @@ object LlmQueries {
         .agg(count(lit(1)).as("c"))
         .orderBy(col("c").desc, col("w1"), col("w2"))
         .limit(1)
-      val bestRow = graft.Bounded.one(best, s"q137 merge-round $rank argmax")
+      val bestRow = graft.Bounded.one(best, s"$label merge-round $rank argmax")
       val (w1, w2, c) = (bestRow.getString(0), bestRow.getString(1), bestRow.getLong(2))
       val pat = lit(s" $w1  $w2 ")
       val rep = lit(s" ${w1}_$w2 ")
@@ -3402,25 +3403,25 @@ object LlmQueries {
       // (round 20 — the CC loop's CollectMetrics idiom): the old separate
       // sum(delta) aggregate was one extra driver job per merge round over
       // rows the checkpoint had just materialized anyway
-      val obs = Observation(s"q137_merge_$rank")
+      val obs = Observation(s"${label}_merge_$rank")
       val next = cur
-        .select(expr("t").as("t0"))
-        .select(call_function("replace", col("t0"), pat, rep).as("t"),
+        .select(kept :+ col("t").as("t0"): _*)
+        .select(kept ++ Seq(call_function("replace", col("t0"), pat, rep).as("t"),
           (length(col("t0"))
             - length(call_function("replace", col("t0"), pat, rep)))
-            .cast("long").as("delta"))
+            .cast("long").as("delta")): _*)
         .observe(obs, coalesce(sum(col("delta")), lit(0L)).as("applied"))
         .localCheckpoint(true)
       val applied = obs.get.get("applied") match {
         case Some(l: java.lang.Long) => l.longValue
         // fail loudly (ADVICE r20): a missing/mistyped metric silently
         // emitting n_applied=0 would mask a wrong result until the oracle
-        case m => sys.error(s"q137 merge-$rank observation missing or mistyped: $m")
+        case m => sys.error(s"$label merge-$rank observation missing or mistyped: $m")
       }
-      out += ((rank, w1, w2, c, applied))
-      cur = next.select("t")
+      cur = next.drop("delta")
+      (rank, w1, w2, c, applied)
     }
-    out.toSeq.toDF("merge_rank", "w1", "w2", "pair_count", "n_applied")
+    (cur, rounds)
   }
 
   /** Flat (no-group) MG aggregation: buffer and output are the summary
@@ -4006,11 +4007,11 @@ object LlmQueries {
         org.apache.spark.sql.graftbridge.ColumnBridge.expression(key)))
 
   /** (corpus shingle rows, rows surviving the Bloom pre-filter) — the
-    * q113 candidate-reduction measurement shared by DedupMetrics and the
-    * saturation pin in DedupSpec. Because the filter is sized from the
-    * eval cardinality, survivors ≈ true hits + fpp·rows at every scale.
+    * q113 candidate-reduction measurement behind DedupSpec's saturation
+    * pin. Because the filter is sized from the eval cardinality,
+    * survivors ≈ true hits + fpp·rows at every scale.
     */
-  def decontamReduction(docs: DataFrame, fpp: Double = 0.01): (Long, Long) = {
+  private[graft] def decontamReduction(docs: DataFrame, fpp: Double = 0.01): (Long, Long) = {
     val (sh, ev) = decontamShingles(docs)
     val corpusSh = sh.filter(col("doc_id") % 50 =!= 0)
     val probe = bloomProbe(docs.sparkSession, evalBloom(ev, fpp), col("sh"))
@@ -4509,200 +4510,16 @@ object LlmQueries {
     (out, round)
   }
 
-  /** Pre-verification candidate-set sizes for the dedup family — the
-    * empirical answer to "does candidate generation stay near-linear in
-    * corpus size, or is a bucket quietly going quadratic?" Each count is
-    * the row count of the SAME candidate generator the named query feeds
-    * into its verify stage (no verification applied — we are measuring the
-    * join fan-out the BucketCap guard is supposed to bound). Reported
-    * alongside per-query corpus sizes so growth can be normalized as
-    * pairs/doc across scale factors (see BASELINE.md's sf0.1 vs sf1
-    * table).
-    */
-  def candidateCounts(s: SparkSession, dir: String): Seq[(String, Long)] = {
-    val docs = Tables.t(s, dir, "documents").select(col("doc_id"), col("text"))
-    // q42: LSH candidate pairs over the near-dup corpus
-    val q42 = candidatePairs(nearCorpus(s, dir)).count()
-    // q83: bucket-neighbor rows feeding the 1-hop min (self-join, pre-agg)
-    val capped83 = cappedBands(nearCorpus(s, dir))
-    val q83 = capped83.select(col("doc_id"), col("bk64"))
-      .hint("merge")
-      .join(capped83.select(col("doc_id").as("nbr_id"), col("bk64").as("bk64b")),
-        col("bk64") === col("bk64b")).count()
-    // q87: distinct undirected star edges (member ↔ bucket-min) feeding
-    // label propagation — the generator connectedComponents actually runs
-    val capped87 = cappedBands(chainCorpus(s, dir))
-    val q87 = capped87.withColumn("bmin",
-        min(col("doc_id")).over(Window.partitionBy(col("bk64"))))
-      .filter(col("doc_id") =!= col("bmin"))
-      .select(col("doc_id").as("src"), col("bmin").as("dst"))
-      .distinct().count()
-    // q96: delta-bands x index-bands candidates
-    val delta = docs.filter(col("doc_id") % 10 === 0)
-      .select((col("doc_id") + 10000).as("doc_id"),
-        concat(col("text"), lit(" xtr tok end")).as("text"))
-    val q96 = cappedBands(delta).select(col("doc_id").as("delta_id"),
-        col("bk64").as("bk64d"))
-      .hint("merge")
-      .join(cappedBands(docs).select(col("doc_id").as("index_id"), col("bk64")),
-        col("bk64d") === col("bk64"))
-      .select("delta_id", "index_id").distinct().count()
-    // q97: distinct doc pairs sharing a below-cap 20-token shingle
-    val corpus97 = docs.unionByName(
-      docs.filter(col("doc_id") % 20 === 0 && size(split(col("text"), " ")) >= 25)
-        .select((col("doc_id") + 50000).as("doc_id"),
-          concat(lit("ctxa ctxb ctxc "),
-            array_join(slice(split(col("text"), " "), 1, 25), " "),
-            lit(" ctxd ctxe")).as("text")))
-    val sh97 = corpus97
-      .selectExpr("doc_id", "explode(graft_shingles(text, 20)) AS sh")
-      .select(col("doc_id"), xxhash64(col("sh")).as("sh64"))
-      .withColumn("df", count(lit(1)).over(Window.partitionBy(col("sh64"))))
-      .filter(col("df") <= BucketCap)
-      .select("doc_id", "sh64")
-    val q97 = sh97.select(col("doc_id").as("doc_id1"), col("sh64"))
-      .hint("merge")
-      .join(sh97.select(col("doc_id").as("doc_id2"), col("sh64").as("sh64b")),
-        col("sh64") === col("sh64b") && col("doc_id1") < col("doc_id2"))
-      .select("doc_id1", "doc_id2").distinct().count()
-    // q113: corpus shingle rows entering the decontamination join,
-    // before vs after the Bloom membership pre-filter — the reduction
-    // factor is what the broadcast filter buys at shuffle time, and
-    // because the filter is sized from the eval cardinality it should
-    // hold (survivors ≈ hits + 1% of rows) at every scale
-    val (q113Total, q113Kept) = decontamReduction(docs)
-    // q115: size of the corpus-frequent (docfreq >= 2) shingle set — the
-    // table the boilerplate join builds its hash side from. On this
-    // synthetic bounded-vocabulary corpus chance 5-gram collisions make
-    // the threshold-2 set grow with the corpus (real deployments raise
-    // the threshold or use a df FRACTION); the plan has no cliff either
-    // way — when the set outgrows the broadcast ceiling AQE plans the
-    // same left join as a shuffle join on the 8-byte keys.
-    val shingleDf = docs
-      .selectExpr("doc_id", "explode(graft_shingles(text, 5)) AS sh")
-      .select(xxhash64(col("sh")).as("k"))
-      .groupBy("k").agg(count(lit(1)).as("df"))
-      .persist()
-    val q115Frequent = shingleDf.filter(col("df") >= 2).count()
-    // fraction mode (the production knob): threshold = max(2,
-    // ceil(0.001 * docs)) — "boilerplate = appears in >= 0.1% of the
-    // corpus". Unlike the absolute-2 set, this one must NOT grow
-    // superlinearly: as the corpus scales the threshold rises with it,
-    // so chance collisions fall back OUT of the frequent set.
-    val nDocs = docs.count()
-    val fracThreshold = math.max(2L, math.ceil(0.001 * nDocs).toLong)
-    val q115FrequentFrac = shingleDf.filter(col("df") >= fracThreshold).count()
-    shingleDf.unpersist()
-    // q133: distinct doc pairs sharing a below-cap 5-shingle — the
-    // containment generator's fan-out (same cap rule as the LSH family)
-    val post133 = docs
-      .selectExpr("doc_id", "graft_shingles64(text, 5) AS sh")
-      .filter(size(col("sh")) > 0)
-      .select(col("doc_id"), explode(col("sh")).as("h"))
-      .withColumn("df", count(lit(1)).over(Window.partitionBy(col("h"))))
-      .filter(col("df") <= BucketCap)
-      .select("doc_id", "h")
-    val q133 = post133.select(col("doc_id").as("doc_id1"), col("h"))
-      .hint("merge")
-      .join(post133.select(col("doc_id").as("doc_id2"), col("h").as("hb")),
-        col("h") === col("hb") && col("doc_id1") < col("doc_id2"))
-      .select("doc_id1", "doc_id2").distinct().count()
-    // q133 cap adjudication (round 20, VERDICT r19 ask #3): the distinct
-    // pair count above is the suite's only superlinear candidate family
-    // (3.8x pairs for the 2x sf5->sf10 step) while wall-time stays
-    // in-bars because fan-out is bounded at n*cap. These columns show
-    // WHERE the `df <= BucketCap` window starts binding: total postings,
-    // postings dropped by the cap (and their ppm share), shingles over
-    // the cap, the generated (pre-distinct) pair mass sum df*(df-1)/2
-    // over KEPT shingles, and the kept_postings*(cap-1)/2 bound the cap
-    // enforces on that mass. Growth flattens once the dropped share
-    // rises; until then pairs track the corpus's true 5-shingle
-    // collision curve.
-    val m133 = docs
-      .selectExpr("doc_id", "graft_shingles64(text, 5) AS sh")
-      .filter(size(col("sh")) > 0)
-      .select(explode(col("sh")).as("h"))
-      .groupBy("h").agg(count(lit(1)).as("df"))
-      .agg(
-        sum(col("df")).as("postings"),
-        sum(when(col("df") > BucketCap, col("df")).otherwise(0L))
-          .as("dropped"),
-        count(when(col("df") > BucketCap, true)).as("capped_shingles"),
-        sum(when(col("df") <= BucketCap,
-          expr("df * (df - 1) div 2")).otherwise(0L)).as("gen_pairs"))
-    val m133Row = graft.Bounded.one(m133, "q133 cap-adjudication aggregate")
-    val q133Postings = m133Row.getLong(0)
-    val q133Dropped = m133Row.getLong(1)
-    val q133CappedShingles = m133Row.getLong(2)
-    val q133GenPairs = m133Row.getLong(3)
-    // q138: duplicated 32-token chunks in the planted-exact-dup corpus —
-    // the paragraph-dedup audit's working mass (must be non-zero and
-    // scale-stable; a vacuous-0 audit knob is the q115-fraction lesson)
-    val q138 = tokenChunks(dupCorpus(s, dir), window = 32, stride = 32)
-      .groupBy(md5(col("chunk_text").cast("binary")).as("h"))
-      .agg(count(lit(1)).as("freq")).filter(col("freq") >= 2).count()
-    // q150: the CMS substitution's scale triple — exact count-table rows
-    // (grows with the corpus), six-pack bytes (constant), and audit
-    // violations (must be 0 at every scale or the substitution contract
-    // is broken where the oracle can't see it)
-    val (q150Rows, q150Bytes, q150Viol) =
-      sbCmsReduction(Tables.t(s, dir, "documents"))
-    Seq("docs" -> nDocs,
-      "q42_pairs" -> q42, "q83_neighbor_rows" -> q83, "q87_edges" -> q87,
-      "q96_pairs" -> q96, "q97_pairs" -> q97, "q133_pairs" -> q133,
-      "q133_postings" -> q133Postings,
-      "q133_postings_dropped" -> q133Dropped,
-      "q133_capped_shingle_frac_ppm" ->
-        (q133Dropped * 1000000L) / math.max(q133Postings, 1L),
-      "q133_capped_shingles" -> q133CappedShingles,
-      "q133_gen_pairs" -> q133GenPairs,
-      "q133_pair_bound" ->
-        (q133Postings - q133Dropped) * (BucketCap - 1L) / 2L,
-      "q113_shingle_rows" -> q113Total, "q113_bloom_kept" -> q113Kept,
-      "q115_frequent_shingles" -> q115Frequent,
-      "q115_frequent_frac_threshold" -> fracThreshold,
-      "q115_frequent_shingles_frac" -> q115FrequentFrac,
-      "q138_dup_chunks" -> q138,
-      "q150_count_rows" -> q150Rows, "q150_cms_bytes" -> q150Bytes,
-      "q150_audit_violations" -> q150Viol)
-  }
-
-  /** q141 kernel — q137's learn loop re-run with the rewrite carrying the
-    * encode outputs (source, pre-encode token count) instead of the
-    * per-round delta, then one ≤|sources| aggregate of exact token sums.
-    * Per round the same budget as [[bpeMerges]]: one vocab-sized
-    * pair-count exchange, a 1-row argmax collect, a map-only replace;
-    * the corpus localCheckpoints so each round's count and rewrite share
-    * one materialization. The final token count re-tokenizes the
-    * double-spaced rendering ONCE (map-side) — merged pairs count as a
-    * single token, exactly how the inference tokenizer would see them.
+  /** q141 kernel — q137's learn loop ([[bpeLearn]]) with the encode
+    * outputs (source, pre-encode token count) carried through every
+    * rewrite, then one ≤|sources| aggregate of exact token sums. The
+    * final token count re-tokenizes the double-spaced rendering ONCE
+    * (map-side) — merged pairs count as a single token, exactly how the
+    * inference tokenizer would see them.
     */
   def bpeEncode(docs: DataFrame, nMerges: Int = 3): DataFrame = {
-    var cur = docs
-      .select(col("source"),
-        size(split(col("text"), " ")).cast("long").as("n_before"),
-        concat(lit("  "), expr("replace(text, ' ', '  ')"), lit("  ")).as("t"))
-      .localCheckpoint(true)
-    for (_ <- 1 to nMerges) {
-      val best = cur
-        .select(expr("filter(split(t, '  '), x -> x != '')").as("tk"))
-        .filter(expr("size(tk) >= 2"))
-        .select(explode(expr(
-          """transform(sequence(0, size(tk) - 2),
-            |  j -> struct(tk[j] AS w1, tk[j + 1] AS w2))""".stripMargin))
-          .as("p"))
-        .groupBy(col("p.w1").as("w1"), col("p.w2").as("w2"))
-        .agg(count(lit(1)).as("c"))
-        .orderBy(col("c").desc, col("w1"), col("w2"))
-        .limit(1)
-      val bestRow = graft.Bounded.one(best, s"q141 merge-round argmax")
-      val (w1, w2) = (bestRow.getString(0), bestRow.getString(1))
-      cur = cur
-        .select(col("source"), col("n_before"),
-          call_function("replace", col("t"),
-            lit(s" $w1  $w2 "), lit(s" ${w1}_$w2 ")).as("t"))
-        .localCheckpoint(true)
-    }
+    val (cur, _) = bpeLearn(docs, Seq(col("source"),
+      size(split(col("text"), " ")).cast("long").as("n_before")), nMerges, "q141")
     cur
       .select(col("source"), col("n_before"),
         expr("CAST(size(filter(split(t, '  '), x -> x != '')) AS BIGINT)")
@@ -5025,8 +4842,8 @@ object LlmQueries {
     * kept = 1 — bit-identical output on both paths (TextPipelineSpec
     * pins the forced-Bloom path against the broadcast path).
     *
-    * Measured fallback price (round 20, VERDICT r19 ask #4 — forced via
-    * the bench-only SPARK_GRAFT_Q142_DUP_CAP knob in clean windows,
+    * Measured fallback price (round 20, VERDICT r19 ask #4 — forced with
+    * `broadcastDupCap = 0` in clean windows,
     * `AB_q142bloom_r20_{sf5,sf10}_{bcast,bloom}.json`): broadcast
     * 2.68 / 3.82 s vs forced Bloom 4.29 / 4.44 s at sf5 / sf10 — a
     * 1.16–1.60x premium covering the Bloom build, the split, and the

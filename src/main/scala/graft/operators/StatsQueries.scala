@@ -36,8 +36,7 @@ object StatsQueries {
     * to the (first-token, length-band) key. The per-block count is a
     * window over the same key the candidate join shuffles on, so the cap
     * adds no extra exchange. Public so EditDedupSpec can plant a
-    * hot-first-token corpus and [[graft.DedupMetrics]] can measure pair
-    * growth across scale points.
+    * hot-first-token corpus.
     */
   def editBlocks(docs: DataFrame, cap: Int = LlmQueries.BucketCap): DataFrame =
     docs
@@ -75,11 +74,6 @@ object StatsQueries {
       .select(col("left_id"), col("right_id"),
         levenshtein(col("lt"), col("rt"), 25).as("edit_dist"))
       .where(col("edit_dist") >= 0)
-
-  /** Candidate-growth probe rows for [[graft.DedupMetrics]]. */
-  def candidateCounts(s: SparkSession, dir: String): Seq[(String, Long)] =
-    Seq("q75_pairs" ->
-      editCandidates(Tables.t(s, dir, "documents")).count())
 
   /** Exact moment sums as SCALED-INTEGER aggregation (q70).
     *

@@ -1130,12 +1130,9 @@ object VectorQueries {
     * sqrt-balanced corpus-derived value (a fixed k=8 measured 203 s at
     * sf5 — ~14k-vector cells made the pair join quadratic; the adaptive
     * k keeps assignment cost n·k·d·iters and pair cost n·(n/k)·d/2 in
-    * balance). Production at 100 TB bounds CELL SIZE, not k: pass
-    * `maxCell` and over-cap cells re-split by rank before the pair
-    * kernel ([[boundCells]] — spec-pinned, measured across scales in
-    * DEDUP_CANDIDATES' q123_bounded_* columns), so the quadratic term
-    * stays ≤ maxCell²/2 per cell past the k=512 clamp (~1.6 M vectors)
-    * where the sqrt-balanced k alone turns quadratic. Both engines here
+    * balance). k clamps at 512, so past about 1.6 M vectors the cells
+    * outgrow the balance and the within-cell pair term grows
+    * quadratically; there is no cell-size bound. Both engines here
     * derive the same k from the same COUNT, the [[hyperplaneBandBits]]
     * pattern. Output adds the k-means cluster id
     * (`km_cluster`) to q117's schema — every semantic group lives inside
@@ -1143,7 +1140,7 @@ object VectorQueries {
     * two-level structure auditable.
     */
   def kmeansSemDedup(corpus: DataFrame, k: Option[Int] = None, iters: Int = 3,
-      tau: Double = 0.9, maxCell: Option[Int] = None): DataFrame = {
+      tau: Double = 0.9): DataFrame = {
     // the kernel is a chain of ~8 driver-sequenced jobs (seed collect,
     // per-pass mean collects, pairs, CC rounds, final reduce) and EVERY
     // one re-reads the corpus; uncached, each re-ran the 3-scan
@@ -1155,15 +1152,7 @@ object VectorQueries {
     val corpusP = corpus.persist()
     val kOf: Long => Int = k.fold(semDedupK _)(kk => _ => kk)
     val asg = argminAssign(corpusP, kmeansCentroidsSized(corpusP, kOf, iters)).persist()
-    // production cell-size posture (round 18, VERDICT r17 ask #3): with
-    // maxCell set, over-cap cells re-split before the pair kernel, so the
-    // quadratic within-cell term stays <= maxCell² per cell at ANY corpus
-    // size — the tested form of the "k ∝ n at 100 TB" scaladoc sentence.
-    // The registered q123 oracle runs maxCell = None (exact published
-    // recipe, k clamped at 512); the bounded mode trades the cross-subcell
-    // pairs away, the same recall contract as every capped generator.
-    val pairsAsg = maxCell.map(boundCells(asg, _)).getOrElse(asg)
-    val sims = kmeansPairs(pairsAsg, tau)
+    val sims = kmeansPairs(asg, tau)
     val edges = sims.select(explode(array(
         struct(col("vec_id1").as("src"), col("vec_id2").as("dst")),
         struct(col("vec_id2").as("src"), col("vec_id1").as("dst")))).as("e"))
@@ -1227,57 +1216,6 @@ object VectorQueries {
     * (java.math.BigDecimal.valueOf + HALF_UP — the codegen formula), so
     * the oracle's DuckDB round stays bit-compatible.
     */
-  /** Bits reserved for the subcell index inside a bounded cell id:
-    * cluster ids (seed vec_ids) shift left 20 bits, so the composite
-    * stays collision-free for any cluster id < 2^43 and up to 2^20
-    * subcells per cluster (= 10^9 rows per cell at maxCell 1024 —
-    * beyond any single cluster this engine will see; [[boundCells]]
-    * enforces both bounds with per-row raise_error guards, ADVICE r18).
-    */
-  private[operators] val SubcellSpan = 1L << 20
-
-  /** Cell-size-bounded re-split of a k-means assignment (round 18,
-    * VERDICT r17 ask #3): every output cell holds AT MOST `maxCell`
-    * members, so [[kmeansPairs]]' within-cell quadratic term is bounded
-    * by maxCell²/2 per cell — linear total pair cost n·maxCell/2 at ANY
-    * corpus size, where the sqrt-balanced k's 512 clamp turns quadratic
-    * beyond ~1.6 M vectors. Members split by RANK within their cluster
-    * (row_number over vec_id, div maxCell): exact bound (a hash split
-    * only bounds in expectation — a hot hash bucket could exceed the cap
-    * it exists to enforce), deterministic across runs, and the rank
-    * window is O(cell) linear work on the same cluster key the pair
-    * kernel shuffles on. The recall trade is the standard capped-
-    * generator contract: a near-dup pair straddling a subcell boundary
-    * goes unseen, exactly like an LSH pair split across band buckets.
-    * Cluster identity stays recoverable: `cell div 2^20 = cluster`.
-    */
-  def boundCells(asg: DataFrame, maxCell: Int): DataFrame = {
-    require(maxCell > 0, s"maxCell must be positive: $maxCell")
-    // Runtime guard (ADVICE r18): the composite id is collision-free only
-    // for cluster ids in [0, 2^43) with < 2^20 subcells per cluster. A
-    // violation must fail the job loudly — an unguarded overflow would
-    // silently spill subcell indices into a NEIGHBOR cluster's id space
-    // and merge unrelated cells. Both guards are integer compares in the
-    // same projection as the packing; the raise_error branches are never
-    // taken on valid data, so they cost nothing in the hot path
-    // (VectorSpec pins both failure modes).
-    asg
-      .withColumn("rn0", row_number().over(
-        Window.partitionBy(col("cluster")).orderBy(col("vec_id"))) - 1)
-      .withColumn("cluster", expr(
-        s"""CASE
-              WHEN cluster < 0 OR cluster >= ${1L << 43}
-                THEN CAST(raise_error(concat(
-                  'boundCells: cluster id out of [0, 2^43): ', cluster)) AS BIGINT)
-              WHEN CAST(rn0 AS BIGINT) div $maxCell >= $SubcellSpan
-                THEN CAST(raise_error(concat(
-                  'boundCells: cluster ', cluster,
-                  ' exceeds 2^20 subcells at maxCell $maxCell')) AS BIGINT)
-              ELSE cluster * $SubcellSpan + CAST(rn0 AS BIGINT) div $maxCell
-            END"""))
-      .drop("rn0")
-  }
-
   def kmeansPairs(asg: DataFrame, tau: Double = 0.9): DataFrame = {
     val s = asg.sparkSession
     import s.implicits._
@@ -1495,8 +1433,7 @@ object VectorQueries {
 
   /** Signature table (vec_id, sig: 128-char bit string) → capped band
     * buckets (vec_id, bk64), band width from [[hyperplaneBandBits]] —
-    * shared by q108 and [[candidateCounts]] so the measured candidate set
-    * is exactly the query's.
+    * q108's candidate generator.
     */
   def hyperplaneBands(sigs: DataFrame, n: Long,
                       cap: Int = graft.operators.LlmQueries.BucketCap): DataFrame = {
@@ -1511,78 +1448,6 @@ object VectorQueries {
       .filter(col("bucket_n") <= cap)
       .select("vec_id", "bk64")
   }
-
-  /** Pre-verification candidate-pair counts for the embedding near-dup
-    * pair: q46's within-cell all-pairs vs q108's hyperplane buckets — the
-    * embedding-side twin of [[LlmQueries.candidateCounts]]. Measured at
-    * sf0.1 vs sf1 this shows WHY q108 exists: fixed coarse cells make
-    * q46's candidate set quadratic in corpus size, while sign-pattern
-    * buckets keep q108's near-linear.
-    */
-  def candidateCounts(s: SparkSession, dir: String): Seq[(String, Long)] = {
-    val off = variantOffset(s, dir)
-    val e = Tables.t(s, dir, "embeddings")
-      .selectExpr("vec_id", "label", "transform(embedding, x -> CAST(x AS double)) AS v")
-    val planted = e.filter(col("vec_id") % 20 === 0)
-      .selectExpr(s"vec_id + ${off}L AS vec_id", "label",
-        "transform(v, (x, i) -> CASE WHEN i = 0 THEN 0D ELSE x END) AS v")
-    val base = e.unionByName(planted)
-    // q46 candidates: same-cell pairs over the SAMPLED anchor base — the
-    // generator the query actually runs since r11 (bounded ≈ budget²/cells
-    // at every corpus size; the r10 unsampled form grew 4× per 2×)
-    val anchor = anchorBase(s, dir)
-    val q46 = anchor.select(col("vec_id").as("id1"), col("label"))
-      .join(anchor.select(col("vec_id").as("id2"), col("label").as("l2")),
-        col("label") === col("l2") && col("id1") < col("id2")).count()
-    // q108 candidates: capped hyperplane-band bucket pairs, pre-cosine —
-    // the SAME generator as the query (width knob included)
-    val bands = hyperplaneBands(
-      base.selectExpr("vec_id", "graft_hyperplane_sig(v) AS sig"), base.count())
-    val q108 = bands.select(col("vec_id").as("id1"), col("bk64"))
-      .join(bands.select(col("vec_id").as("id2"), col("bk64").as("bk64b")),
-        col("bk64") === col("bk64b") && col("id1") < col("id2"))
-      .select("id1", "id2").distinct().count()
-    // q123 candidates: same-k-means-cell pairs, pre-cosine — the pair
-    // join the adaptive sqrt-balanced k is supposed to keep near
-    // n·sqrt(n)-bounded (a fixed k=8 measured quadratic growth)
-    val sem = semCorpus(s, dir)
-    val k123 = semDedupK(sem.count())
-    val asg123 = kmeansAssign(sem, k123, iters = 3).persist()
-    def cellPairs(a: DataFrame): Long =
-      a.select(col("vec_id").as("id1"), col("cluster"))
-        .hint("merge")
-        .join(a.select(col("vec_id").as("id2"), col("cluster").as("cl2")),
-          col("cluster") === col("cl2") && col("id1") < col("id2")).count()
-    def maxCellOf(a: DataFrame): Long = graft.Bounded.collect(
-      a.groupBy("cluster").count().agg(max(col("count")).as("mx")),
-      cap = 1, what = "q123 max cell size (1-row aggregate)")
-      .headOption.map(_.getLong(0)).getOrElse(0L)
-    val q123 = cellPairs(asg123)
-    // the bounded-mode columns (round 18, VERDICT r17 ask #3): with the
-    // production cap the max cell size is CONSTANT across scales — the
-    // measurable form of "pair cost stays n·maxCell/2 past the k clamp" —
-    // while the unbounded max cell grows with the corpus
-    val q123MaxCell = maxCellOf(asg123)
-    // persisted: the rank window otherwise re-evaluates for the max-cell
-    // aggregate and BOTH legs of the pair self-join
-    val boundedAsg = boundCells(asg123, BoundedCellCap).persist()
-    val q123BMaxCell = maxCellOf(boundedAsg)
-    val q123BPairs = cellPairs(boundedAsg)
-    boundedAsg.unpersist()
-    asg123.unpersist()
-    Seq("vectors" -> base.count(), "q46_pairs" -> q46, "q108_pairs" -> q108,
-      "q123_k" -> k123.toLong, "q123_pairs" -> q123,
-      "q123_max_cell" -> q123MaxCell,
-      "q123_bounded_cap" -> BoundedCellCap.toLong,
-      "q123_bounded_max_cell" -> q123BMaxCell,
-      "q123_bounded_pairs" -> q123BPairs)
-  }
-
-  /** The production cell cap [[candidateCounts]] measures the bounded
-    * mode at: pairs per cell ≤ cap²/2 ≈ 524k, total pair cost
-    * n·cap/2 — linear in the corpus.
-    */
-  val BoundedCellCap = 1024
 
   /** IVF multi-probe candidate scores, probe count as a parameter: each
     * query scores every vector in its HOME cell plus its `probes - 1`

@@ -48,11 +48,8 @@ object ShardSpoolSink {
 
   /** MD5-mod shard assignment: stable for a key across runs and engines
     * (NOT Kinesis's contiguous hash-range split — see class scaladoc).
-    * Per-row callers should reuse a digest via [[shardForWith]].
+    * Per-row callers reuse one `md5` digest across keys.
     */
-  def shardFor(key: String, shardCount: Int): String =
-    shardForWith(MessageDigest.getInstance("MD5"), key, shardCount)
-
   def shardForWith(md5: MessageDigest, key: String, shardCount: Int): String = {
     md5.reset()
     val d = md5.digest(key.getBytes(StandardCharsets.UTF_8))

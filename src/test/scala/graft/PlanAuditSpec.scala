@@ -711,6 +711,23 @@ class PlanAuditSpec extends SparkSpec {
       "GraftExtensions.register outside Tables.scala:\n" + sites.mkString("\n"))
   }
 
+  test("no env-gated hooks: operator and streaming code reads no environment variable") {
+    // a query's result and plan follow from its inputs and the session
+    // conf; an env read there is a hidden mode that Verify and the oracle
+    // never run. Tooling mains (Bench, Tables.cpus) are out of scope.
+    val libDirs = Seq("operators", "functions", "plans", "streaming", "sources", "kpl")
+      .map(d => s"src/main/scala/graft/$d/")
+    val lib = mainSources.filter { case (f, _) => libDirs.exists(f.getPath.contains) }
+    assert(lib.size > 20, s"library walk found only ${lib.size} files")
+    val sites = lib.flatMap { case (f, lines) =>
+      lines.zipWithIndex.collect {
+        case (l, i) if l.contains("sys.env") || l.contains("System.getenv") =>
+          s"${f.getName}:${i + 1}: ${l.trim}"
+      }
+    }
+    assert(sites.isEmpty, "environment reads in library code:\n" + sites.mkString("\n"))
+  }
+
   test("q140 JL audit is map-only: literal matrix folds, no join, one group exchange") {
     val all = executed("q140_jl_projection")
     assert(!all.exists(_.nodeName.contains("Join")),

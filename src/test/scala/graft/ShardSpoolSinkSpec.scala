@@ -3,6 +3,7 @@ package graft
 import graft.sources.ShardSpoolSink
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
+import java.security.MessageDigest
 
 /** Native DSv2 write path: PutRecord-shaped batch writes route by
   * MD5(partitionKey), sequence per shard, and round-trip through the
@@ -50,7 +51,8 @@ class ShardSpoolSinkSpec extends SparkSpec {
     // each key maps to exactly one shard, and it is the MD5-ring shard
     assert(keyShards.length == 7)
     keyShards.foreach { case (k, s) =>
-      assert(s == ShardSpoolSink.shardFor(k, 3), s"key $k landed on $s")
+      assert(s == ShardSpoolSink.shardForWith(MessageDigest.getInstance("MD5"), k, 3),
+        s"key $k landed on $s")
     }
   }
 

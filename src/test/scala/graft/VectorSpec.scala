@@ -571,99 +571,6 @@ class VectorSpec extends SparkSpec {
     assert(keep7 == 7L && n7 == 1L && km7 == 7L)
   }
 
-  test("boundCells re-splits over-cap cells to an EXACT bound, deterministically, inside their cluster") {
-    import spark.implicits._
-    // 25 members in cluster 100, 3 in cluster 200, cap 8: the rank split
-    // must give exactly 8/8/8/1 (a hash split only bounds in expectation)
-    // and leave the under-cap cluster whole
-    val asg = ((0 until 25).map(i => (i.toLong, 100L)) ++
-      Seq((100L, 200L), (101L, 200L), (102L, 200L)))
-      .toDF("vec_id", "cluster")
-    val b = operators.VectorQueries.boundCells(asg, 8)
-    val sizes = b.groupBy("cluster").count().collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(sizes.values.max <= 8, s"cap violated: $sizes")
-    assert(sizes.values.sum == 28, "re-split must not drop or duplicate rows")
-    // cluster identity stays recoverable from the composite cell id
-    val c100 = sizes.collect { case (c, n) if (c >> 20) == 100L => n }.toSeq.sorted
-    assert(c100 == Seq(1L, 8L, 8L, 8L), s"cluster-100 split: $c100")
-    assert(sizes.count { case (c, _) => (c >> 20) == 200L } == 1,
-      "an under-cap cluster must keep a single cell")
-    assert(sizes.keySet.forall(c => (c >> 20) == 100L || (c >> 20) == 200L))
-    // deterministic: the same input re-splits identically
-    val once = b.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val again = operators.VectorQueries.boundCells(asg, 8)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(once == again)
-  }
-
-  test("boundCells fails loudly on its documented preconditions instead of " +
-    "silently merging cells (ADVICE r18)") {
-    import spark.implicits._
-    // cluster id >= 2^43 would overflow cluster * 2^20 into another
-    // cluster's composite-id space: must raise, not wrap
-    val bigCluster = Seq((1L, 1L << 43), (2L, 1L << 43)).toDF("vec_id", "cluster")
-    val e1 = intercept[Exception] {
-      operators.VectorQueries.boundCells(bigCluster, 8).collect()
-    }
-    assert(e1.getMessage.contains("cluster id out of [0, 2^43)"),
-      s"wrong failure: ${e1.getMessage}")
-    // negative cluster ids are equally out of the packing's domain
-    val negCluster = Seq((1L, -1L)).toDF("vec_id", "cluster")
-    val e2 = intercept[Exception] {
-      operators.VectorQueries.boundCells(negCluster, 8).collect()
-    }
-    assert(e2.getMessage.contains("cluster id out of [0, 2^43)"),
-      s"wrong failure: ${e2.getMessage}")
-    // > 2^20 subcells in one cluster would spill into the next cluster's
-    // id space: 2^20 * maxCell + 1 members at maxCell = 1 must raise
-    val over = spark.range((1L << 20) + 1)
-      .selectExpr("id AS vec_id", "CAST(5 AS BIGINT) AS cluster")
-    val e3 = intercept[Exception] {
-      operators.VectorQueries.boundCells(over, 1).collect()
-    }
-    assert(e3.getMessage.contains("exceeds 2^20 subcells"),
-      s"wrong failure: ${e3.getMessage}")
-    // the guard is free on valid data: same composite ids as before
-    val ok = operators.VectorQueries.boundCells(
-      Seq((1L, (1L << 43) - 1)).toDF("vec_id", "cluster"), 8).collect()
-    assert(ok.head.getLong(1) == ((1L << 43) - 1) * (1L << 20))
-  }
-
-  test("q123 bounded mode re-splits over-cap cells before the pair kernel (VERDICT r17 ask #3)") {
-    import spark.implicits._
-    // md5 order over {1,2,3,7} is 7 < 1 < 2 < 3, so k=2 seeds are {7, 1}:
-    // the three parallel vectors {1,2,3} share seed-1's cell, orthogonal
-    // 7 sits alone. maxCell=2 splits the hot cell into {1,2} and {3}: the
-    // within-subcell dup (1,2) still closes (keeper 2, the argmax), the
-    // cross-subcell pairs are traded away so 3 becomes its own keeper —
-    // the standard capped-generator recall contract. The DEFAULT mode
-    // (the oracle-pinned q123) closes all three into one group.
-    val base = Seq(
-      (1L, Array.fill(64)(0.5)),
-      (2L, Array.fill(64)(0.6)),
-      (3L, Array.fill(64)(0.7)),
-      (7L, Array.tabulate(64)(i => if (i % 2 == 0) 0.5 else -0.5)))
-      .toDF("vec_id", "v")
-      .selectExpr("vec_id", "v", "sqrt(graft_vector_dot(v, v)) AS nrm")
-    val bounded = operators.VectorQueries
-      .kmeansSemDedup(base, k = Some(2), iters = 3, maxCell = Some(2))
-      .collect()
-      .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(4))))
-      .toMap
-    assert(bounded.keySet == Set(1L, 3L, 7L), s"bounded groups: ${bounded.keySet}")
-    assert(bounded(1L) == ((1L, 2L, 2L)),
-      s"within-subcell dup must still close to the argmax keeper: ${bounded(1L)}")
-    assert(bounded(3L) == ((1L, 3L, 1L)),
-      "a cross-subcell near-dup is traded away under the cap")
-    assert(bounded(7L)._3 == 1L)
-    val full = operators.VectorQueries
-      .kmeansSemDedup(base, k = Some(2), iters = 3)
-      .collect().map(r => r.getLong(0) -> r.getLong(4)).toMap
-    assert(full == Map(1L -> 3L, 7L -> 1L),
-      s"default mode (the registered oracle) must be unchanged: $full")
-  }
-
   test("q128 picks lowest-cosine positive / highest-cosine negative, ties to min id") {
     import spark.implicits._
     val emb = Seq(
