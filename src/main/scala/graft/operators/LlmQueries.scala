@@ -84,6 +84,24 @@ object LlmQueries {
        UNION ALL SELECT doc_id + 10000, text || ' xtr tok end'
        FROM documents WHERE doc_id % 10 = 0"""
 
+  /** Leaked eval copies (q92's plant): each eval doc (doc_id%50==0)
+    * re-keyed +30001 with its full text wrapped in new context — the
+    * "benchmark pasted into a web page" case. [[leakCorpus]] is a
+    * (doc_id, text) frame plus its copies; [[funnelCorpus]] plants the
+    * copies among its other families.
+    */
+  private def leakCopies(d: DataFrame): DataFrame =
+    d.filter(col("doc_id") % 50 === 0)
+      .select((col("doc_id") + 30001).as("doc_id"),
+        concat(lit("leak ctx pre "), col("text"), lit(" post trail")).as("text"))
+  private val leakCopiesSql =
+    """SELECT doc_id + 30001, 'leak ctx pre ' || text || ' post trail'
+       FROM documents WHERE doc_id % 50 = 0"""
+  private def leakCorpus(d: DataFrame): DataFrame = d.unionByName(leakCopies(d))
+  private val leakCorpusSql =
+    s"""SELECT doc_id, text FROM documents
+       UNION ALL $leakCopiesSql"""
+
   /** documents + planted TRANSITIVE near-dup chains (doc_id%10==0):
     * B(+10000) = A + ceil(n/3) doc-specific junk tokens, C(+20000) = A +
     * ceil(7n/9) junk tokens with B's junk as a prefix. Adjacent shingle
@@ -295,6 +313,210 @@ object LlmQueries {
       sig[4*j + 3]::VARCHAR || ':' || sig[4*j + 4]::VARCHAR AS band_key
     FROM sigs, (SELECT unnest([0, 1, 2, 3]) AS j) t"""
 
+  /** Oracle-side twin of [[candidatePairs]] over [[nearCorpus]], as CTEs:
+    * `bands`, `capped`, the distinct capped-bucket pairs `cand`
+    * (doc_id1 < doc_id2), and the `corpus` they come from.
+    */
+  private val nearCandSql = s"""
+      bands AS (${bandTableSql(nearCorpusSql)}),
+      capped AS (${cappedSql("bands")}),
+      cand AS (SELECT DISTINCT a.doc_id AS doc_id1, b.doc_id AS doc_id2
+               FROM capped a JOIN capped b
+                 ON a.band = b.band AND a.band_key = b.band_key
+                  AND a.doc_id < b.doc_id),
+      corpus AS ($nearCorpusSql)"""
+
+  /** Oracle-side twin of [[connectedComponents]], as CTEs (under WITH
+    * RECURSIVE): the capped-bucket `edges` of `corpus` — all pairs per
+    * bucket where the kernel keeps a star, the same components — and
+    * their closure `reach(src, dst)` from every doc_id of `nodes`.
+    * `nodesCte` defines `nodes` when no earlier CTE does.
+    */
+  private def reachSql(corpus: String, nodes: String, nodesCte: String): String = s"""
+      bands AS (${bandTableSql(corpus)}),
+      capped AS (${cappedSql("bands")}),
+      edges AS (SELECT DISTINCT a.doc_id AS src, b.doc_id AS dst
+                FROM capped a JOIN capped b
+                  ON a.band = b.band AND a.band_key = b.band_key),
+      $nodesCte
+      reach(src, dst) AS (
+        SELECT doc_id, doc_id FROM $nodes
+        UNION
+        SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src)"""
+
+  /** [[reachSql]] over the planted-chain corpus, from a `docs` CTE that
+    * selects `cols` of it.
+    */
+  private def chainReachSql(cols: String): String =
+    reachSql(chainCorpusSql, "docs", s"docs AS (SELECT $cols FROM ($chainCorpusSql)),")
+
+  /** Oracle for q45's exact cosine top-k over the vec_id < 10 query set
+    * and q66's IVF form of it, where a query ranks only its own cell
+    * (`sameCell`): similarity rounded to 6 dp, then neighbor id.
+    */
+  private def cosineTopKSql(sameCell: Boolean, k: Int): String = {
+    val (label, cell) = if (sameCell) ("label, ", "q.label = c.label AND ") else ("", "")
+    s"""
+      WITH n AS (SELECT vec_id, ${label}embedding::DOUBLE[] AS v,
+                   sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
+                 FROM embeddings)
+      SELECT * FROM (
+        SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+          round(list_dot_product(q.v, c.v) / (q.nrm * c.nrm), 6) AS sim,
+          CAST(row_number() OVER (PARTITION BY q.vec_id
+            ORDER BY round(list_dot_product(q.v, c.v) / (q.nrm * c.nrm), 6) DESC,
+                     c.vec_id) AS INT) AS rk
+        FROM n q JOIN n c ON ${cell}q.vec_id < 10 AND c.vec_id <> q.vec_id) t
+      WHERE rk <= $k"""
+  }
+
+  /** The literal-TRUE audit columns a scale path's oracle appends to its
+    * exact anchor's select list (the q74 within-bound pattern).
+    */
+  private def trueCols(cols: Seq[String]): String =
+    cols.map(c => s", TRUE AS $c").mkString
+
+  /** q111's exact bigram-LM oracle; q112, its CMS scale path, adds the
+    * audit columns `okCols` as literal TRUEs.
+    */
+  private def bigramLmSql(okCols: String*): String = s"""
+      WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
+      bg0 AS (SELECT doc_id,
+                unnest([ struct_pack(w1 := t[i], w2 := t[i + 1])
+                         for i in range(1, len(t)) ]) AS b
+              FROM toks WHERE len(t) >= 2),
+      bg AS (SELECT doc_id, b.w1 AS w1, b.w2 AS w2 FROM bg0),
+      v AS (SELECT COUNT(DISTINCT tok) AS vs
+            FROM (SELECT unnest(t) AS tok FROM toks)),
+      bc AS (SELECT w1, w2, COUNT(*) AS c12 FROM bg GROUP BY 1, 2),
+      uc AS (SELECT w1, COUNT(*) AS c1 FROM bg GROUP BY 1),
+      terms AS (SELECT bg.doc_id,
+                  ((bc.c12 + 1) * 1000000) // (uc.c1 + v.vs) AS term
+                FROM bg JOIN bc USING (w1, w2) JOIN uc USING (w1), v)
+      SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_bigrams,
+        CAST(SUM(term) // COUNT(*) AS BIGINT) AS lm_score_micro${trueCols(okCols)}
+      FROM terms GROUP BY doc_id"""
+
+  /** q131's exact leave-one-source-out Stupid Backoff oracle; q150, its
+    * CMS scale path, adds the audit columns `okCols` as literal TRUEs.
+    */
+  private def stupidBackoffSql(okCols: String*): String = s"""
+      WITH toks AS (SELECT doc_id, source, string_split(text, ' ') AS t
+                    FROM documents),
+      tg0 AS (SELECT doc_id, source,
+                unnest([ struct_pack(w1 := t[i], w2 := t[i + 1], w3 := t[i + 2])
+                         for i in range(1, len(t) - 1) ]) AS g
+              FROM toks WHERE len(t) >= 3),
+      tg AS (SELECT doc_id, source, g.w1 AS w1, g.w2 AS w2, g.w3 AS w3 FROM tg0),
+      bg0 AS (SELECT source,
+                unnest([ struct_pack(b1 := t[i], b2 := t[i + 1])
+                         for i in range(1, len(t)) ]) AS b
+              FROM toks WHERE len(t) >= 2),
+      bg AS (SELECT source, b.b1 AS b1, b.b2 AS b2 FROM bg0),
+      ug AS (SELECT source, unnest(t) AS u FROM toks),
+      tc  AS (SELECT w1, w2, w3, COUNT(*) AS c FROM tg GROUP BY 1, 2, 3),
+      tcs AS (SELECT w1, w2, w3, source, COUNT(*) AS c FROM tg GROUP BY 1, 2, 3, 4),
+      bc  AS (SELECT b1, b2, COUNT(*) AS c FROM bg GROUP BY 1, 2),
+      bcs AS (SELECT b1, b2, source, COUNT(*) AS c FROM bg GROUP BY 1, 2, 3),
+      uc  AS (SELECT u, COUNT(*) AS c FROM ug GROUP BY 1),
+      ucs AS (SELECT u, source, COUNT(*) AS c FROM ug GROUP BY 1, 2),
+      ns  AS (SELECT source, COUNT(*) AS n_src FROM ug GROUP BY 1),
+      nt  AS (SELECT COUNT(*) AS n_tot FROM ug),
+      terms AS (
+        SELECT s.doc_id,
+          tc.c - COALESCE(tco.c, 0) AS c123x,
+          b12.c - COALESCE(b12o.c, 0) AS c12x,
+          b23.c - COALESCE(b23o.c, 0) AS c23x,
+          u2.c - COALESCE(u2o.c, 0) AS c2x,
+          u3.c - COALESCE(u3o.c, 0) AS c3x,
+          nt.n_tot - ns.n_src AS nx
+        FROM tg s
+        JOIN tc USING (w1, w2, w3)
+        LEFT JOIN tcs tco ON tco.w1 = s.w1 AND tco.w2 = s.w2
+          AND tco.w3 = s.w3 AND tco.source = s.source
+        JOIN bc b12 ON b12.b1 = s.w1 AND b12.b2 = s.w2
+        LEFT JOIN bcs b12o ON b12o.b1 = s.w1 AND b12o.b2 = s.w2
+          AND b12o.source = s.source
+        JOIN bc b23 ON b23.b1 = s.w2 AND b23.b2 = s.w3
+        LEFT JOIN bcs b23o ON b23o.b1 = s.w2 AND b23o.b2 = s.w3
+          AND b23o.source = s.source
+        JOIN uc u2 ON u2.u = s.w2
+        LEFT JOIN ucs u2o ON u2o.u = s.w2 AND u2o.source = s.source
+        JOIN uc u3 ON u3.u = s.w3
+        LEFT JOIN ucs u3o ON u3o.u = s.w3 AND u3o.source = s.source
+        JOIN ns ON ns.source = s.source, nt),
+      scored AS (
+        SELECT doc_id,
+          CASE WHEN c123x > 0 THEN (c123x * 1000000) // c12x
+               WHEN c23x > 0 THEN (c23x * 400000) // c2x
+               WHEN c3x > 0 THEN (c3x * 160000) // nx
+               ELSE 0 END AS term,
+          CASE WHEN c123x > 0 THEN 3 WHEN c23x > 0 THEN 2
+               WHEN c3x > 0 THEN 1 ELSE 0 END AS lvl
+        FROM terms)
+      SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_trigrams,
+        CAST(SUM(term) // COUNT(*) AS BIGINT) AS sb_score_micro,
+        CAST(SUM(CASE WHEN lvl = 3 THEN 1 ELSE 0 END) AS BIGINT) AS n_tri_hit,
+        CAST(SUM(CASE WHEN lvl = 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_big_hit,
+        CAST(SUM(CASE WHEN lvl = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_uni_hit,
+        CAST(SUM(CASE WHEN lvl = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_oov${trueCols(okCols)}
+      FROM scored GROUP BY doc_id"""
+
+  /** q92's exact decontamination oracle, which is q113's as well: the
+    * Bloom pre-filter must return exactly q92's rows.
+    */
+  private val decontamSql = s"""
+      WITH corpus AS (
+        $leakCorpusSql),
+      tok AS (SELECT doc_id, string_split(text, ' ') AS toks FROM corpus),
+      sh AS (SELECT doc_id, unnest(${shingleSetSql(5)}) AS sh,
+             len(${shingleSetSql(5)}) AS n_sh
+           FROM tok),
+      ev AS (SELECT DISTINCT sh FROM sh WHERE doc_id % 50 = 0)
+      SELECT s.doc_id, COUNT(*) AS n_hits,
+        round(COUNT(*) / MAX(s.n_sh), 6) AS contaminated_frac
+      FROM sh s JOIN ev USING (sh)
+      WHERE s.doc_id % 50 <> 0
+      GROUP BY s.doc_id"""
+
+  /** q95's per-language sampling-rate table, which q100 applies:
+    * (lang, toks, total, rate). The per-lang token totals checkpoint
+    * ONCE (one corpus aggregation job); the corpus-wide denominator is a
+    * driver-side sum over the ≤|langs| rows, injected as a BIGINT
+    * literal — a `SUM(toks) OVER ()` computes the same value but plans a
+    * single-partition WindowExec (VERDICT r14 #7). Same exact integer,
+    * zero window.
+    */
+  private def mixtureRates(docs: DataFrame): DataFrame = {
+    val t = docs.groupBy("lang")
+      .agg(sum(expr("CAST(size(split(text, ' ')) AS BIGINT)")).as("toks"))
+      .localCheckpoint(true)
+    // null-guarded like the SUM(toks) OVER () this replaced (which skips
+    // nulls): a lang whose docs all have null text sums to a null cell
+    val total = graft.Bounded.collect(t, cap = 64,
+      what = "per-lang token totals")
+      .map(r => if (r.isNullAt(1)) 0L else r.getLong(1)).sum
+    t.selectExpr("lang", "toks",
+        s"CAST($total AS BIGINT) AS total",
+        """CASE WHEN lang = 'en' THEN CAST(0.4 AS DOUBLE)
+           ELSE CAST(0.15 AS DOUBLE) END AS target""")
+      .selectExpr("lang", "toks", "total",
+        "round(least(CAST(1.0 AS DOUBLE), target * total / toks), 6) AS rate")
+  }
+
+  /** [[mixtureRates]]' oracle CTEs, ending in `r` = (lang, `keep`, rate). */
+  private def mixtureRatesSql(keep: Seq[String]): String = s"""
+      t AS (SELECT lang,
+          CAST(SUM(CAST(len(string_split(text, ' ')) AS BIGINT)) AS BIGINT) AS toks
+        FROM documents GROUP BY lang),
+      w AS (SELECT lang, toks, CAST(SUM(toks) OVER () AS BIGINT) AS total,
+          CASE WHEN lang = 'en' THEN CAST(0.4 AS DOUBLE)
+               ELSE CAST(0.15 AS DOUBLE) END AS target
+        FROM t),
+      r AS (SELECT lang, ${keep.map(_ + ", ").mkString}
+          round(least(CAST(1.0 AS DOUBLE), target * total / toks), 6) AS rate
+        FROM w)"""
+
   val all: Seq[Q] = Seq(
 
     // ---------------------------------------------------------------- Q40
@@ -323,13 +545,7 @@ object LlmQueries {
     // unbounded hot bucket; see BucketCap/cappedBands) verified by true
     // token-3-gram Jaccard >= 0.5. Finds the planted near-duplicates.
     Q("q42_lsh_neardup", Some(s"""
-      WITH bands AS (${bandTableSql(nearCorpusSql)}),
-      capped AS (${cappedSql("bands")}),
-      cand AS (SELECT DISTINCT a.doc_id AS doc_id1, b.doc_id AS doc_id2
-               FROM capped a JOIN capped b
-                 ON a.band = b.band AND a.band_key = b.band_key
-                  AND a.doc_id < b.doc_id),
-      corpus AS ($nearCorpusSql),
+      WITH $nearCandSql,
       tok AS (SELECT doc_id, string_split(text, ' ') AS toks FROM corpus),
       shs AS (SELECT doc_id, list_distinct($shinglesSql) AS sh FROM tok)
       SELECT doc_id1, doc_id2,
@@ -484,18 +700,7 @@ object LlmQueries {
     // Brute-force cosine top-10 for a bounded query set (vec_id < 10): the
     // exact-ANN baseline. Query side broadcast, corpus side a linear scan;
     // similarity rounded to 6 dp BEFORE ranking so order is deterministic.
-    Q("q45_cosine_topk", Some("""
-      WITH n AS (SELECT vec_id, embedding::DOUBLE[] AS v,
-                   sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
-                 FROM embeddings)
-      SELECT * FROM (
-        SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-          round(list_dot_product(q.v, c.v) / (q.nrm * c.nrm), 6) AS sim,
-          CAST(row_number() OVER (PARTITION BY q.vec_id
-            ORDER BY round(list_dot_product(q.v, c.v) / (q.nrm * c.nrm), 6) DESC,
-                     c.vec_id) AS INT) AS rk
-        FROM n q JOIN n c ON q.vec_id < 10 AND c.vec_id <> q.vec_id) t
-      WHERE rk <= 10""")) { (s, dir) =>
+    Q("q45_cosine_topk", Some(cosineTopKSql(sameCell = false, k = 10))) { (s, dir) =>
       val n = Tables.t(s, dir, "embeddings")
         .selectExpr("vec_id", "transform(embedding, x -> CAST(x AS double)) AS v")
         .select(col("vec_id"), col("v"),
@@ -564,19 +769,7 @@ object LlmQueries {
     // ONLY its own coarse cell (label), so per-query work is cell-sized,
     // not corpus-sized; recall is traded for the 1/#cells cost cut. One
     // shuffle on the cell id; candidate lists never leave their cell.
-    Q("q66_ivf_topk", Some("""
-      WITH n AS (SELECT vec_id, label, embedding::DOUBLE[] AS v,
-                   sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
-                 FROM embeddings)
-      SELECT * FROM (
-        SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-          round(list_dot_product(q.v, c.v) / (q.nrm * c.nrm), 6) AS sim,
-          CAST(row_number() OVER (PARTITION BY q.vec_id
-            ORDER BY round(list_dot_product(q.v, c.v) / (q.nrm * c.nrm), 6) DESC,
-                     c.vec_id) AS INT) AS rk
-        FROM n q JOIN n c ON q.label = c.label AND q.vec_id < 10
-                          AND c.vec_id <> q.vec_id) t
-      WHERE rk <= 5""")) { (s, dir) =>
+    Q("q66_ivf_topk", Some(cosineTopKSql(sameCell = true, k = 5))) { (s, dir) =>
       val n = Tables.t(s, dir, "embeddings")
         .selectExpr("vec_id", "label", "transform(embedding, x -> CAST(x AS double)) AS v")
         .select(col("vec_id"), col("label"), col("v"),
@@ -779,25 +972,9 @@ object LlmQueries {
     // At 100 TB: the eval shingle set is tiny and BROADCASTS; the corpus
     // side is one narrow explode + broadcast-join + per-doc
     // re-aggregation — no corpus-wide shuffle.
-    Q("q92_decontaminate", Some(s"""
-      WITH corpus AS (
-        SELECT doc_id, text FROM documents
-        UNION ALL SELECT doc_id + 30001, 'leak ctx pre ' || text || ' post trail'
-        FROM documents WHERE doc_id % 50 = 0),
-      tok AS (SELECT doc_id, string_split(text, ' ') AS toks FROM corpus),
-      sh AS (SELECT doc_id, unnest(${shingleSetSql(5)}) AS sh,
-             len(${shingleSetSql(5)}) AS n_sh
-           FROM tok),
-      ev AS (SELECT DISTINCT sh FROM sh WHERE doc_id % 50 = 0)
-      SELECT s.doc_id, COUNT(*) AS n_hits,
-        round(COUNT(*) / MAX(s.n_sh), 6) AS contaminated_frac
-      FROM sh s JOIN ev USING (sh)
-      WHERE s.doc_id % 50 <> 0
-      GROUP BY s.doc_id""")) { (s, dir) =>
-      val d = Tables.t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val corpus = d.unionByName(d.filter(col("doc_id") % 50 === 0)
-        .select((col("doc_id") + 30001).as("doc_id"),
-          concat(lit("leak ctx pre "), col("text"), lit(" post trail")).as("text")))
+    Q("q92_decontaminate", Some(decontamSql)) { (s, dir) =>
+      val corpus = leakCorpus(
+        Tables.t(s, dir, "documents").select(col("doc_id"), col("text")))
       val sh = corpus
         .selectExpr("doc_id", "graft_shingles(text, 5) AS shs")
         .selectExpr("doc_id", "size(shs) AS n_sh", "explode(shs) AS sh")
@@ -935,16 +1112,8 @@ object LlmQueries {
     // counts are exact on both engines because md5 is. At 100 TB: the
     // rate table is |langs| rows broadcast onto a narrow scan — the
     // keep/drop decision never shuffles the corpus.
-    Q("q100_mixture_apply", Some("""
-      WITH t AS (SELECT lang,
-          CAST(SUM(CAST(len(string_split(text, ' ')) AS BIGINT)) AS BIGINT) AS toks
-        FROM documents GROUP BY lang),
-      w AS (SELECT lang, toks, CAST(SUM(toks) OVER () AS BIGINT) AS total,
-          CASE WHEN lang = 'en' THEN CAST(0.4 AS DOUBLE)
-               ELSE CAST(0.15 AS DOUBLE) END AS target
-        FROM t),
-      r AS (SELECT lang, round(least(CAST(1.0 AS DOUBLE), target * total / toks), 6) AS rate
-        FROM w)
+    Q("q100_mixture_apply", Some(s"""
+      WITH ${mixtureRatesSql(Nil)}
       SELECT d.lang, r.rate, COUNT(*) AS n_docs,
         CAST(SUM(CASE WHEN r.rate >= 1.0
               OR substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 8)
@@ -953,23 +1122,7 @@ object LlmQueries {
       FROM documents d JOIN r USING (lang)
       GROUP BY d.lang, r.rate""")) { (s, dir) =>
       val docs = Tables.t(s, dir, "documents")
-      // q95's no-window idiom: checkpointed per-lang aggregate + driver
-      // total as a literal (≤|langs| rows) instead of `SUM(toks) OVER ()`
-      val t100 = docs.groupBy("lang")
-        .agg(sum(expr("CAST(size(split(text, ' ')) AS BIGINT)")).as("toks"))
-        .localCheckpoint(true)
-      // null-guarded like the SUM(toks) OVER () this replaced (which skips
-      // nulls): a lang whose docs all have null text sums to a null cell
-      val total100 = graft.Bounded.collect(t100, cap = 64,
-        what = "q100 per-lang token totals")
-        .map(r => if (r.isNullAt(1)) 0L else r.getLong(1)).sum
-      val rates = t100
-        .selectExpr("lang", "toks",
-          s"CAST($total100 AS BIGINT) AS total",
-          """CASE WHEN lang = 'en' THEN CAST(0.4 AS DOUBLE)
-             ELSE CAST(0.15 AS DOUBLE) END AS target""")
-        .selectExpr("lang",
-          "round(least(CAST(1.0 AS DOUBLE), target * total / toks), 6) AS rate")
+      val rates = mixtureRates(docs).select("lang", "rate")
       docs.join(broadcast(rates), "lang")
         .groupBy("lang", "rate")
         .agg(count(lit(1)).as("n_docs"),
@@ -1064,48 +1217,19 @@ object LlmQueries {
     // exactly the table a q85-style stratified sampler consumes as its
     // per-stratum thresholds. One hash aggregation; the corpus-wide token
     // denominator is a driver-side sum over the checkpointed ≤|langs|-row
-    // aggregate (no window — see the build's comment).
+    // aggregate (no window — see [[mixtureRates]]).
     // Parity discipline: the target literals are CAST to DOUBLE on BOTH
     // sides (Spark parses bare 0.4 as DECIMAL and DuckDB's decimal/bigint
     // division yields DOUBLE — mixed types put the two engines one ulp
     // apart at integer floor() boundaries), and the budget floors the
     // 6-dp-ROUNDED rate, never the raw quotient.
-    Q("q95_mixture_rebalance", Some("""
-      WITH t AS (SELECT lang,
-          CAST(SUM(CAST(len(string_split(text, ' ')) AS BIGINT)) AS BIGINT) AS toks
-        FROM documents GROUP BY lang),
-      w AS (SELECT lang, toks, CAST(SUM(toks) OVER () AS BIGINT) AS total,
-          CASE WHEN lang = 'en' THEN CAST(0.4 AS DOUBLE)
-               ELSE CAST(0.15 AS DOUBLE) END AS target
-        FROM t),
-      r AS (SELECT lang, toks, total,
-          round(least(CAST(1.0 AS DOUBLE), target * total / toks), 6) AS rate
-        FROM w)
+    Q("q95_mixture_rebalance", Some(s"""
+      WITH ${mixtureRatesSql(Seq("toks", "total"))}
       SELECT lang, toks AS lang_tokens,
         round(toks / total, 6) AS share, rate,
         CAST(floor(toks * rate) AS BIGINT) AS sampled_tokens
       FROM r""")) { (s, dir) =>
-      // per-lang totals checkpoint ONCE (one corpus aggregation job); the
-      // corpus-wide denominator is a driver-side sum over the ≤|langs|
-      // rows, injected as a BIGINT literal — the previous
-      // `SUM(toks) OVER ()` computed the same value but planned a
-      // single-partition WindowExec whose warning spammed every bench log
-      // (VERDICT r14 #7). Same exact integer, zero window.
-      val t = Tables.t(s, dir, "documents")
-        .groupBy("lang")
-        .agg(sum(expr("CAST(size(split(text, ' ')) AS BIGINT)")).as("toks"))
-        .localCheckpoint(true)
-      // null-guarded like the SUM(toks) OVER () this replaced (which skips
-      // nulls): a lang whose docs all have null text sums to a null cell
-      val total = graft.Bounded.collect(t, cap = 64,
-        what = "q95 per-lang token totals")
-        .map(r => if (r.isNullAt(1)) 0L else r.getLong(1)).sum
-      t.selectExpr("lang", "toks",
-          s"CAST($total AS BIGINT) AS total",
-          """CASE WHEN lang = 'en' THEN CAST(0.4 AS DOUBLE)
-             ELSE CAST(0.15 AS DOUBLE) END AS target""")
-        .selectExpr("lang", "toks", "total",
-          "round(least(CAST(1.0 AS DOUBLE), target * total / toks), 6) AS rate")
+      mixtureRates(Tables.t(s, dir, "documents"))
         .selectExpr("lang", "toks AS lang_tokens",
           "round(toks / total, 6) AS share", "rate",
           "CAST(floor(toks * rate) AS BIGINT) AS sampled_tokens")
@@ -1285,16 +1409,7 @@ object LlmQueries {
     // driver. Both paths give the same min-id labels. The oracle is
     // DuckDB's recursive transitive closure over the same edge set.
     Q("q87_dedup_cc", Some(s"""
-      WITH RECURSIVE bands AS (${bandTableSql(chainCorpusSql)}),
-      capped AS (${cappedSql("bands")}),
-      edges AS (SELECT DISTINCT a.doc_id AS src, b.doc_id AS dst
-                FROM capped a JOIN capped b
-                  ON a.band = b.band AND a.band_key = b.band_key),
-      docs AS (SELECT doc_id FROM ($chainCorpusSql)),
-      reach(src, dst) AS (
-        SELECT doc_id, doc_id FROM docs
-        UNION
-        SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src)
+      WITH RECURSIVE ${chainReachSql("doc_id")}
       SELECT src AS doc_id, MIN(dst) AS canonical,
              src = MIN(dst) AS kept
       FROM reach GROUP BY src""")) { (s, dir) =>
@@ -1313,16 +1428,7 @@ object LlmQueries {
     // pass; tie on quality resolves to min doc_id via the negated id in
     // the struct. ONE shuffle on canonical beyond the CC pass itself.
     Q("q103_quality_keep", Some(s"""
-      WITH RECURSIVE bands AS (${bandTableSql(chainCorpusSql)}),
-      capped AS (${cappedSql("bands")}),
-      edges AS (SELECT DISTINCT a.doc_id AS src, b.doc_id AS dst
-                FROM capped a JOIN capped b
-                  ON a.band = b.band AND a.band_key = b.band_key),
-      docs AS (SELECT doc_id, text FROM ($chainCorpusSql)),
-      reach(src, dst) AS (
-        SELECT doc_id, doc_id FROM docs
-        UNION
-        SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
+      WITH RECURSIVE ${chainReachSql("doc_id, text")},
       cc AS (SELECT src AS doc_id, MIN(dst) AS canonical FROM reach GROUP BY src),
       qual AS (SELECT doc_id, $qualityDuckSql AS quality
                FROM (SELECT doc_id, text, string_split(text, ' ') AS toks FROM docs) t),
@@ -1445,23 +1551,7 @@ object LlmQueries {
     // per-doc aggregation. At open-web scale the exact count tables give
     // way to a count-min sketch — the same generator-vs-scale-path split
     // as q46/q108 — but the exact form IS the oracle anchor.
-    Q("q111_bigram_lm_score", Some("""
-      WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-      bg0 AS (SELECT doc_id,
-                unnest([ struct_pack(w1 := t[i], w2 := t[i + 1])
-                         for i in range(1, len(t)) ]) AS b
-              FROM toks WHERE len(t) >= 2),
-      bg AS (SELECT doc_id, b.w1 AS w1, b.w2 AS w2 FROM bg0),
-      v AS (SELECT COUNT(DISTINCT tok) AS vs
-            FROM (SELECT unnest(t) AS tok FROM toks)),
-      bc AS (SELECT w1, w2, COUNT(*) AS c12 FROM bg GROUP BY 1, 2),
-      uc AS (SELECT w1, COUNT(*) AS c1 FROM bg GROUP BY 1),
-      terms AS (SELECT bg.doc_id,
-                  ((bc.c12 + 1) * 1000000) // (uc.c1 + v.vs) AS term
-                FROM bg JOIN bc USING (w1, w2) JOIN uc USING (w1), v)
-      SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_bigrams,
-        CAST(SUM(term) // COUNT(*) AS BIGINT) AS lm_score_micro
-      FROM terms GROUP BY doc_id""")) { (s, dir) =>
+    Q("q111_bigram_lm_score", Some(bigramLmSql())) { (s, dir) =>
       bigramLmScore(Tables.t(s, dir, "documents"))
     },
 
@@ -1474,24 +1564,7 @@ object LlmQueries {
     // (est ≥ exact, overcount ≤ eps·N), reduced per doc. The oracle
     // emits literal TRUEs for the audit booleans — the q74 within-bound
     // pattern. See [[bigramLmCms]].
-    Q("q112_bigram_lm_cms", Some("""
-      WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-      bg0 AS (SELECT doc_id,
-                unnest([ struct_pack(w1 := t[i], w2 := t[i + 1])
-                         for i in range(1, len(t)) ]) AS b
-              FROM toks WHERE len(t) >= 2),
-      bg AS (SELECT doc_id, b.w1 AS w1, b.w2 AS w2 FROM bg0),
-      v AS (SELECT COUNT(DISTINCT tok) AS vs
-            FROM (SELECT unnest(t) AS tok FROM toks)),
-      bc AS (SELECT w1, w2, COUNT(*) AS c12 FROM bg GROUP BY 1, 2),
-      uc AS (SELECT w1, COUNT(*) AS c1 FROM bg GROUP BY 1),
-      terms AS (SELECT bg.doc_id,
-                  ((bc.c12 + 1) * 1000000) // (uc.c1 + v.vs) AS term
-                FROM bg JOIN bc USING (w1, w2) JOIN uc USING (w1), v)
-      SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_bigrams,
-        CAST(SUM(term) // COUNT(*) AS BIGINT) AS lm_score_micro,
-        TRUE AS cms12_ok, TRUE AS cms1_ok
-      FROM terms GROUP BY doc_id""")) { (s, dir) =>
+    Q("q112_bigram_lm_cms", Some(bigramLmSql("cms12_ok", "cms1_ok"))) { (s, dir) =>
       bigramLmCms(Tables.t(s, dir, "documents"))
     },
 
@@ -1515,21 +1588,7 @@ object LlmQueries {
     // so the driver's hash-equality row IS the no-false-negative audit —
     // stronger than an in-band boolean. DedupSpec pins the
     // pre-filter's candidate reduction through [[decontamReduction]].
-    Q("q113_decontaminate_bloom", Some(s"""
-      WITH corpus AS (
-        SELECT doc_id, text FROM documents
-        UNION ALL SELECT doc_id + 30001, 'leak ctx pre ' || text || ' post trail'
-        FROM documents WHERE doc_id % 50 = 0),
-      tok AS (SELECT doc_id, string_split(text, ' ') AS toks FROM corpus),
-      sh AS (SELECT doc_id, unnest(${shingleSetSql(5)}) AS sh,
-             len(${shingleSetSql(5)}) AS n_sh
-           FROM tok),
-      ev AS (SELECT DISTINCT sh FROM sh WHERE doc_id % 50 = 0)
-      SELECT s.doc_id, COUNT(*) AS n_hits,
-        round(COUNT(*) / MAX(s.n_sh), 6) AS contaminated_frac
-      FROM sh s JOIN ev USING (sh)
-      WHERE s.doc_id % 50 <> 0
-      GROUP BY s.doc_id""")) { (s, dir) =>
+    Q("q113_decontaminate_bloom", Some(decontamSql)) { (s, dir) =>
       decontaminateBloom(Tables.t(s, dir, "documents"))
     },
 
@@ -1720,18 +1779,10 @@ object LlmQueries {
     // Composes q87's transitive components with two BOUNDED aggregates:
     // labels → per-cluster size (shuffle on canonical, partial
     // map-side), sizes → histogram (≤ max-cluster-size groups). The
-    // oracle replays q87's recursive closure and the same two GROUP BYs.
+    // oracle is q87's recursive closure ([[chainReachSql]]) and the same
+    // two GROUP BYs.
     Q("q125_cluster_size_histogram", Some(s"""
-      WITH RECURSIVE bands AS (${bandTableSql(chainCorpusSql)}),
-      capped AS (${cappedSql("bands")}),
-      edges AS (SELECT DISTINCT a.doc_id AS src, b.doc_id AS dst
-                FROM capped a JOIN capped b
-                  ON a.band = b.band AND a.band_key = b.band_key),
-      docs AS (SELECT doc_id FROM ($chainCorpusSql)),
-      reach(src, dst) AS (
-        SELECT doc_id, doc_id FROM docs
-        UNION
-        SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
+      WITH RECURSIVE ${chainReachSql("doc_id")},
       cc AS (SELECT src AS doc_id, MIN(dst) AS canonical FROM reach GROUP BY src),
       sz AS (SELECT canonical, COUNT(*) AS cluster_size FROM cc GROUP BY canonical)
       SELECT cluster_size, COUNT(*) AS n_clusters,
@@ -1918,67 +1969,7 @@ object LlmQueries {
     // doc aggregate. At open-web vocabulary the exact count tables stop
     // fitting and q112's CMS substitution is the scale path; this exact
     // form is its oracle anchor, the q111→q112 split.
-    Q("q131_stupid_backoff", Some("""
-      WITH toks AS (SELECT doc_id, source, string_split(text, ' ') AS t
-                    FROM documents),
-      tg0 AS (SELECT doc_id, source,
-                unnest([ struct_pack(w1 := t[i], w2 := t[i + 1], w3 := t[i + 2])
-                         for i in range(1, len(t) - 1) ]) AS g
-              FROM toks WHERE len(t) >= 3),
-      tg AS (SELECT doc_id, source, g.w1 AS w1, g.w2 AS w2, g.w3 AS w3 FROM tg0),
-      bg0 AS (SELECT source,
-                unnest([ struct_pack(b1 := t[i], b2 := t[i + 1])
-                         for i in range(1, len(t)) ]) AS b
-              FROM toks WHERE len(t) >= 2),
-      bg AS (SELECT source, b.b1 AS b1, b.b2 AS b2 FROM bg0),
-      ug AS (SELECT source, unnest(t) AS u FROM toks),
-      tc  AS (SELECT w1, w2, w3, COUNT(*) AS c FROM tg GROUP BY 1, 2, 3),
-      tcs AS (SELECT w1, w2, w3, source, COUNT(*) AS c FROM tg GROUP BY 1, 2, 3, 4),
-      bc  AS (SELECT b1, b2, COUNT(*) AS c FROM bg GROUP BY 1, 2),
-      bcs AS (SELECT b1, b2, source, COUNT(*) AS c FROM bg GROUP BY 1, 2, 3),
-      uc  AS (SELECT u, COUNT(*) AS c FROM ug GROUP BY 1),
-      ucs AS (SELECT u, source, COUNT(*) AS c FROM ug GROUP BY 1, 2),
-      ns  AS (SELECT source, COUNT(*) AS n_src FROM ug GROUP BY 1),
-      nt  AS (SELECT COUNT(*) AS n_tot FROM ug),
-      terms AS (
-        SELECT s.doc_id,
-          tc.c - COALESCE(tco.c, 0) AS c123x,
-          b12.c - COALESCE(b12o.c, 0) AS c12x,
-          b23.c - COALESCE(b23o.c, 0) AS c23x,
-          u2.c - COALESCE(u2o.c, 0) AS c2x,
-          u3.c - COALESCE(u3o.c, 0) AS c3x,
-          nt.n_tot - ns.n_src AS nx
-        FROM tg s
-        JOIN tc USING (w1, w2, w3)
-        LEFT JOIN tcs tco ON tco.w1 = s.w1 AND tco.w2 = s.w2
-          AND tco.w3 = s.w3 AND tco.source = s.source
-        JOIN bc b12 ON b12.b1 = s.w1 AND b12.b2 = s.w2
-        LEFT JOIN bcs b12o ON b12o.b1 = s.w1 AND b12o.b2 = s.w2
-          AND b12o.source = s.source
-        JOIN bc b23 ON b23.b1 = s.w2 AND b23.b2 = s.w3
-        LEFT JOIN bcs b23o ON b23o.b1 = s.w2 AND b23o.b2 = s.w3
-          AND b23o.source = s.source
-        JOIN uc u2 ON u2.u = s.w2
-        LEFT JOIN ucs u2o ON u2o.u = s.w2 AND u2o.source = s.source
-        JOIN uc u3 ON u3.u = s.w3
-        LEFT JOIN ucs u3o ON u3o.u = s.w3 AND u3o.source = s.source
-        JOIN ns ON ns.source = s.source, nt),
-      scored AS (
-        SELECT doc_id,
-          CASE WHEN c123x > 0 THEN (c123x * 1000000) // c12x
-               WHEN c23x > 0 THEN (c23x * 400000) // c2x
-               WHEN c3x > 0 THEN (c3x * 160000) // nx
-               ELSE 0 END AS term,
-          CASE WHEN c123x > 0 THEN 3 WHEN c23x > 0 THEN 2
-               WHEN c3x > 0 THEN 1 ELSE 0 END AS lvl
-        FROM terms)
-      SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_trigrams,
-        CAST(SUM(term) // COUNT(*) AS BIGINT) AS sb_score_micro,
-        CAST(SUM(CASE WHEN lvl = 3 THEN 1 ELSE 0 END) AS BIGINT) AS n_tri_hit,
-        CAST(SUM(CASE WHEN lvl = 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_big_hit,
-        CAST(SUM(CASE WHEN lvl = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_uni_hit,
-        CAST(SUM(CASE WHEN lvl = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_oov
-      FROM scored GROUP BY doc_id""")) { (s, dir) =>
+    Q("q131_stupid_backoff", Some(stupidBackoffSql())) { (s, dir) =>
       stupidBackoff(Tables.t(s, dir, "documents"))
     },
 
@@ -1998,68 +1989,8 @@ object LlmQueries {
     // six-pack stays a CONSTANT 4.8 MB (4,800,600 bytes at every measured
     // scale, sf0.1 through sf10), with zero audit violations at every
     // scale.
-    Q("q150_stupid_backoff_cms", Some("""
-      WITH toks AS (SELECT doc_id, source, string_split(text, ' ') AS t
-                    FROM documents),
-      tg0 AS (SELECT doc_id, source,
-                unnest([ struct_pack(w1 := t[i], w2 := t[i + 1], w3 := t[i + 2])
-                         for i in range(1, len(t) - 1) ]) AS g
-              FROM toks WHERE len(t) >= 3),
-      tg AS (SELECT doc_id, source, g.w1 AS w1, g.w2 AS w2, g.w3 AS w3 FROM tg0),
-      bg0 AS (SELECT source,
-                unnest([ struct_pack(b1 := t[i], b2 := t[i + 1])
-                         for i in range(1, len(t)) ]) AS b
-              FROM toks WHERE len(t) >= 2),
-      bg AS (SELECT source, b.b1 AS b1, b.b2 AS b2 FROM bg0),
-      ug AS (SELECT source, unnest(t) AS u FROM toks),
-      tc  AS (SELECT w1, w2, w3, COUNT(*) AS c FROM tg GROUP BY 1, 2, 3),
-      tcs AS (SELECT w1, w2, w3, source, COUNT(*) AS c FROM tg GROUP BY 1, 2, 3, 4),
-      bc  AS (SELECT b1, b2, COUNT(*) AS c FROM bg GROUP BY 1, 2),
-      bcs AS (SELECT b1, b2, source, COUNT(*) AS c FROM bg GROUP BY 1, 2, 3),
-      uc  AS (SELECT u, COUNT(*) AS c FROM ug GROUP BY 1),
-      ucs AS (SELECT u, source, COUNT(*) AS c FROM ug GROUP BY 1, 2),
-      ns  AS (SELECT source, COUNT(*) AS n_src FROM ug GROUP BY 1),
-      nt  AS (SELECT COUNT(*) AS n_tot FROM ug),
-      terms AS (
-        SELECT s.doc_id,
-          tc.c - COALESCE(tco.c, 0) AS c123x,
-          b12.c - COALESCE(b12o.c, 0) AS c12x,
-          b23.c - COALESCE(b23o.c, 0) AS c23x,
-          u2.c - COALESCE(u2o.c, 0) AS c2x,
-          u3.c - COALESCE(u3o.c, 0) AS c3x,
-          nt.n_tot - ns.n_src AS nx
-        FROM tg s
-        JOIN tc USING (w1, w2, w3)
-        LEFT JOIN tcs tco ON tco.w1 = s.w1 AND tco.w2 = s.w2
-          AND tco.w3 = s.w3 AND tco.source = s.source
-        JOIN bc b12 ON b12.b1 = s.w1 AND b12.b2 = s.w2
-        LEFT JOIN bcs b12o ON b12o.b1 = s.w1 AND b12o.b2 = s.w2
-          AND b12o.source = s.source
-        JOIN bc b23 ON b23.b1 = s.w2 AND b23.b2 = s.w3
-        LEFT JOIN bcs b23o ON b23o.b1 = s.w2 AND b23o.b2 = s.w3
-          AND b23o.source = s.source
-        JOIN uc u2 ON u2.u = s.w2
-        LEFT JOIN ucs u2o ON u2o.u = s.w2 AND u2o.source = s.source
-        JOIN uc u3 ON u3.u = s.w3
-        LEFT JOIN ucs u3o ON u3o.u = s.w3 AND u3o.source = s.source
-        JOIN ns ON ns.source = s.source, nt),
-      scored AS (
-        SELECT doc_id,
-          CASE WHEN c123x > 0 THEN (c123x * 1000000) // c12x
-               WHEN c23x > 0 THEN (c23x * 400000) // c2x
-               WHEN c3x > 0 THEN (c3x * 160000) // nx
-               ELSE 0 END AS term,
-          CASE WHEN c123x > 0 THEN 3 WHEN c23x > 0 THEN 2
-               WHEN c3x > 0 THEN 1 ELSE 0 END AS lvl
-        FROM terms)
-      SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_trigrams,
-        CAST(SUM(term) // COUNT(*) AS BIGINT) AS sb_score_micro,
-        CAST(SUM(CASE WHEN lvl = 3 THEN 1 ELSE 0 END) AS BIGINT) AS n_tri_hit,
-        CAST(SUM(CASE WHEN lvl = 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_big_hit,
-        CAST(SUM(CASE WHEN lvl = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_uni_hit,
-        CAST(SUM(CASE WHEN lvl = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_oov,
-        TRUE AS cms_tri_ok, TRUE AS cms_big_ok, TRUE AS cms_uni_ok
-      FROM scored GROUP BY doc_id""")) { (s, dir) =>
+    Q("q150_stupid_backoff_cms",
+      Some(stupidBackoffSql("cms_tri_ok", "cms_big_ok", "cms_uni_ok"))) { (s, dir) =>
       stupidBackoffCms(Tables.t(s, dir, "documents"))
     },
 
@@ -2146,13 +2077,7 @@ object LlmQueries {
     // no convergence-epsilon ambiguity, a FIXED 3 passes, the q120
     // iterated-k-means oracle idiom on a graph.
     Q("q134_dup_pagerank", Some(s"""
-      WITH bands AS (${bandTableSql(nearCorpusSql)}),
-      capped AS (${cappedSql("bands")}),
-      cand AS (SELECT DISTINCT a.doc_id AS doc_id1, b.doc_id AS doc_id2
-               FROM capped a JOIN capped b
-                 ON a.band = b.band AND a.band_key = b.band_key
-                  AND a.doc_id < b.doc_id),
-      corpus AS ($nearCorpusSql),
+      WITH $nearCandSql,
       edges AS (SELECT doc_id1 AS src, doc_id2 AS dst FROM cand
                 UNION ALL
                 SELECT doc_id2 AS src, doc_id1 AS dst FROM cand),
@@ -2200,13 +2125,7 @@ object LlmQueries {
     // BucketCap'd degree (≤ 4 bands × (cap−1)). Coefficient as integer
     // micro-units with floor division: 2T·10⁶ div deg(deg−1).
     Q("q136_dup_triangles", Some(s"""
-      WITH bands AS (${bandTableSql(nearCorpusSql)}),
-      capped AS (${cappedSql("bands")}),
-      cand AS (SELECT DISTINCT a.doc_id AS doc_id1, b.doc_id AS doc_id2
-               FROM capped a JOIN capped b
-                 ON a.band = b.band AND a.band_key = b.band_key
-                  AND a.doc_id < b.doc_id),
-      corpus AS ($nearCorpusSql),
+      WITH $nearCandSql,
       tri AS (SELECT e1.doc_id1 AS a, e1.doc_id2 AS b, e2.doc_id2 AS c
               FROM cand e1 JOIN cand e2 ON e2.doc_id1 = e1.doc_id2
               JOIN cand e3 ON e3.doc_id1 = e1.doc_id1
@@ -2331,13 +2250,7 @@ object LlmQueries {
     // is 17 rows. At 100 TB this is the cheap periodic health check that
     // tells you when boilerplate drift has degraded banding recall.
     Q("q139_minhash_calibration", Some(s"""
-      WITH bands AS (${bandTableSql(nearCorpusSql)}),
-      capped AS (${cappedSql("bands")}),
-      cand AS (SELECT DISTINCT a.doc_id AS doc_id1, b.doc_id AS doc_id2
-               FROM capped a JOIN capped b
-                 ON a.band = b.band AND a.band_key = b.band_key
-                  AND a.doc_id < b.doc_id),
-      corpus AS ($nearCorpusSql),
+      WITH $nearCandSql,
       tok AS (SELECT doc_id, string_split(text, ' ') AS toks FROM corpus),
       shg AS (SELECT doc_id, $shinglesSql AS sh FROM tok),
       hsh AS (SELECT doc_id, sh, $hashListSql AS hs FROM shg),
@@ -2519,15 +2432,7 @@ object LlmQueries {
       WITH RECURSIVE s0 AS (SELECT doc_id, text FROM ($funnelCorpusSql) fc),
       k1 AS (SELECT MIN(doc_id) AS doc_id FROM s0 GROUP BY md5(text)),
       s1 AS (SELECT s0.doc_id, s0.text FROM s0 JOIN k1 USING (doc_id)),
-      bands AS (${bandTableSql("SELECT doc_id, text FROM s1")}),
-      capped AS (${cappedSql("bands")}),
-      edges AS (SELECT DISTINCT a.doc_id AS src, b.doc_id AS dst
-                FROM capped a JOIN capped b
-                  ON a.band = b.band AND a.band_key = b.band_key),
-      reach(src, dst) AS (
-        SELECT doc_id, doc_id FROM s1
-        UNION
-        SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
+      ${reachSql("SELECT doc_id, text FROM s1", "s1", "")},
       cc AS (SELECT src AS doc_id, MIN(dst) AS canonical FROM reach GROUP BY src),
       qual AS (SELECT doc_id, $qualityDuckSql AS quality
                FROM (SELECT doc_id, text, string_split(text, ' ') AS toks
@@ -2630,9 +2535,7 @@ object LlmQueries {
     // match implies a 5-gram match on the same span).
     Q("q146_decontam_sweep", Some(s"""
       WITH corpus AS (
-        SELECT doc_id, text FROM documents
-        UNION ALL SELECT doc_id + 30001, 'leak ctx pre ' || text || ' post trail'
-        FROM documents WHERE doc_id % 50 = 0),
+        $leakCorpusSql),
       tok AS (SELECT doc_id, string_split(text, ' ') AS toks FROM corpus),
       ${Seq(5, 8, 13).map { n => s"""
       sh$n AS (SELECT doc_id, unnest(${shingleSetSql(n)}) AS sh FROM tok),
@@ -2658,13 +2561,7 @@ object LlmQueries {
     // 10·i ≥ t·u). Choosing the dedup threshold trades recall against
     // false merges; this is the one-scan audit that prices each choice.
     Q("q147_neardup_threshold_sweep", Some(s"""
-      WITH bands AS (${bandTableSql(nearCorpusSql)}),
-      capped AS (${cappedSql("bands")}),
-      cand AS (SELECT DISTINCT a.doc_id AS doc_id1, b.doc_id AS doc_id2
-               FROM capped a JOIN capped b
-                 ON a.band = b.band AND a.band_key = b.band_key
-                  AND a.doc_id < b.doc_id),
-      corpus AS ($nearCorpusSql),
+      WITH $nearCandSql,
       tok AS (SELECT doc_id, string_split(text, ' ') AS toks FROM corpus),
       shs AS (SELECT doc_id, list_distinct($shinglesSql) AS sh FROM tok),
       pp AS (SELECT doc_id1, doc_id2,
@@ -3021,7 +2918,7 @@ object LlmQueries {
     val mergeParts = math.max(1, spark.sparkContext.defaultParallelism / 4)
     val bytes = graft.Bounded.one(
       unioned.coalesce(mergeParts).as[(Int, String, String, Long)]
-        .select(new SixCmsAgg(eps, confidence, seed).toColumn),
+        .select(new CmsPairsAgg(3, eps, confidence, seed).toColumn),
       "q150 merged CMS six-pack")
     val in = new java.io.ByteArrayInputStream(bytes)
     (unioned, Array.fill(6)(CountMinSketch.readFrom(in)))
@@ -3081,7 +2978,7 @@ object LlmQueries {
     val b12Key = concat_ws(" ", col("w1"), col("w2"))
     val b23Key = concat_ws(" ", col("w2"), col("w3"))
     def own(key: Column) = concat_ws(" ", key, col("source"))
-    // sketch index: 2·tag (total) / 2·tag+1 (own) — see SixCmsAgg. Each
+    // sketch index: 2·tag (total) / 2·tag+1 (own) — see CmsPairsAgg. Each
     // of the 10 estimates a row needs is PROJECTED once, then the bound
     // booleans compare by attribute reference — inlining the probe into
     // `est >= c && est <= c + s` would evaluate every sketch probe twice
@@ -3150,15 +3047,19 @@ object LlmQueries {
     (unioned.count(), sk.map(sketchBytes(_).length.toLong).sum, violations)
   }
 
-  /** All six q150 sketches in one pass (the [[TwoCmsAgg]] idiom widened):
-    * rows are (tag ∈ {0 tri, 1 big, 2 uni}, total-key, own-key, count);
-    * sketch 2·tag gets the total key, 2·tag+1 the own key, both weighted
-    * by the row's count.
+  /** `pairs` pairs of count-min sketches built in ONE aggregation pass —
+    * q112's pair (bigram, w1) and q150's three (trigram, bigram, unigram;
+    * total and own key each). Input rows are (tag < pairs, key0, key1,
+    * count): sketch 2·tag gets key0, 2·tag+1 key1, both weighted by the
+    * row's count. Spark's own `count_min_sketch` aggregate can't weight
+    * rows and `df.stat` runs one driver job per sketch, which is why
+    * this exists. The result is the sketches' serialized bytes in index
+    * order.
     */
-  private class SixCmsAgg(eps: Double, confidence: Double, seed: Int)
+  private class CmsPairsAgg(pairs: Int, eps: Double, confidence: Double, seed: Int)
       extends Aggregator[(Int, String, String, Long), Array[CountMinSketch], Array[Byte]] {
     def zero: Array[CountMinSketch] =
-      Array.fill(6)(CountMinSketch.create(eps, confidence, seed))
+      Array.fill(2 * pairs)(CountMinSketch.create(eps, confidence, seed))
     def reduce(b: Array[CountMinSketch],
         r: (Int, String, String, Long)): Array[CountMinSketch] = {
       b(2 * r._1).addString(r._2, r._4)
@@ -3870,10 +3771,10 @@ object LlmQueries {
     val mergeParts = math.max(1, spark.sparkContext.defaultParallelism / 4)
     val bytes = graft.Bounded.one(
       counts
-        .select(concat_ws(" ", col("w1"), col("w2")), col("w1"), col("c12"))
+        .select(lit(0), concat_ws(" ", col("w1"), col("w2")), col("w1"), col("c12"))
         .coalesce(mergeParts)
-        .as[(String, String, Long)]
-        .select(new TwoCmsAgg(eps, confidence, seed).toColumn),
+        .as[(Int, String, String, Long)]
+        .select(new CmsPairsAgg(1, eps, confidence, seed).toColumn),
       "q112 merged CMS pair")
     val in = new java.io.ByteArrayInputStream(bytes)
     val cms12 = CountMinSketch.readFrom(in)
@@ -3943,11 +3844,7 @@ object LlmQueries {
     * read — the exact join — likewise materializes it in place).
     */
   private def decontamShingles(docs: DataFrame): (DataFrame, DataFrame) = {
-    val d = docs.select(col("doc_id"), col("text"))
-    val corpus = d.unionByName(d.filter(col("doc_id") % 50 === 0)
-      .select((col("doc_id") + 30001).as("doc_id"),
-        concat(lit("leak ctx pre "), col("text"), lit(" post trail")).as("text")))
-    val sh = corpus
+    val sh = leakCorpus(docs.select(col("doc_id"), col("text")))
       .selectExpr("doc_id", "graft_shingles(text, 5) AS shs")
       .selectExpr("doc_id", "size(shs) AS n_sh", "explode(shs) AS sh")
     val ev = sh.filter(col("doc_id") % 50 === 0).select("sh").distinct()
@@ -4016,37 +3913,6 @@ object LlmQueries {
     val corpusSh = sh.filter(col("doc_id") % 50 =!= 0)
     val probe = bloomProbe(docs.sparkSession, evalBloom(ev, fpp), col("sh"))
     (corpusSh.count(), corpusSh.filter(probe).count())
-  }
-
-  /** Both q112 sketches in one aggregation pass (see [[bigramLmCms]]):
-    * input rows are (bigram, w1, cnt), the buffer is the sketch pair, and
-    * every add is weighted by the row's occurrence count. Spark's own
-    * `count_min_sketch` aggregate can't weight rows and `df.stat` runs
-    * one driver job per sketch, which is why this exists.
-    */
-  private class TwoCmsAgg(eps: Double, confidence: Double, seed: Int)
-      extends Aggregator[(String, String, Long), Array[CountMinSketch], Array[Byte]] {
-    def zero: Array[CountMinSketch] = Array(
-      CountMinSketch.create(eps, confidence, seed),
-      CountMinSketch.create(eps, confidence, seed))
-    def reduce(b: Array[CountMinSketch],
-        r: (String, String, Long)): Array[CountMinSketch] = {
-      b(0).addString(r._1, r._3)
-      b(1).addString(r._2, r._3)
-      b
-    }
-    def merge(a: Array[CountMinSketch],
-        b: Array[CountMinSketch]): Array[CountMinSketch] = {
-      a(0).mergeInPlace(b(0)); a(1).mergeInPlace(b(1)); a
-    }
-    def finish(b: Array[CountMinSketch]): Array[Byte] = {
-      val bos = new java.io.ByteArrayOutputStream()
-      b(0).writeTo(bos); b(1).writeTo(bos)
-      bos.toByteArray
-    }
-    def bufferEncoder: Encoder[Array[CountMinSketch]] =
-      Encoders.javaSerialization[Array[CountMinSketch]]
-    def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
   }
 
   /** q103 kernel: q87 transitive clusters joined with the q47 quality
@@ -4627,11 +4493,8 @@ object LlmQueries {
     * hit contains an m-gram hit for every m < n.
     */
   def decontamSweep(s: SparkSession, dir: String): DataFrame = {
-    val d = Tables.t(s, dir, "documents").select(col("doc_id"), col("text"))
-    val corpus = d.unionByName(d.filter(col("doc_id") % 50 === 0)
-        .select((col("doc_id") + 30001).as("doc_id"),
-          concat(lit("leak ctx pre "), col("text"), lit(" post trail"))
-            .as("text")))
+    val corpus = leakCorpus(
+        Tables.t(s, dir, "documents").select(col("doc_id"), col("text")))
       .localCheckpoint(true)
     Seq(5, 8, 13).map { n =>
       val sh = corpus.selectExpr("doc_id",
@@ -4683,12 +4546,11 @@ object LlmQueries {
     * measured against an empty set.
     */
   private lazy val funnelCorpusSql =
-    """SELECT doc_id, text FROM documents
+    s"""SELECT doc_id, text FROM documents
        UNION ALL SELECT doc_id + 10000, text FROM documents WHERE doc_id % 7 = 0
        UNION ALL SELECT doc_id + 20000, text || ' xtr tok end'
        FROM documents WHERE doc_id % 10 = 0
-       UNION ALL SELECT doc_id + 30001, 'leak ctx pre ' || text || ' post trail'
-       FROM documents WHERE doc_id % 50 = 0
+       UNION ALL $leakCopiesSql
        UNION ALL SELECT doc_id + 40000,
          rtrim(repeat('buy now ', 20)) || ' id' || CAST(doc_id AS VARCHAR)
        FROM documents WHERE doc_id % 25 = 0"""
@@ -4700,9 +4562,7 @@ object LlmQueries {
       .unionByName(d.filter(col("doc_id") % 10 === 0)
         .select((col("doc_id") + 20000).as("doc_id"),
           concat(col("text"), lit(" xtr tok end")).as("text")))
-      .unionByName(d.filter(col("doc_id") % 50 === 0)
-        .select((col("doc_id") + 30001).as("doc_id"),
-          concat(lit("leak ctx pre "), col("text"), lit(" post trail")).as("text")))
+      .unionByName(leakCopies(d))
       .unionByName(d.filter(col("doc_id") % 25 === 0)
         .select((col("doc_id") + 40000).as("doc_id"),
           expr("concat(rtrim(repeat('buy now ', 20)), ' id', CAST(doc_id AS STRING))")

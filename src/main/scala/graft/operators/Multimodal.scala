@@ -2,9 +2,9 @@ package graft.operators
 
 import graft.{Q, Tables}
 import org.apache.spark.sql.functions._
-import java.awt.image.BufferedImage
+import java.awt.image.{BufferedImage, Raster}
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
-import javax.imageio.ImageIO
+import javax.imageio.{ImageIO, ImageReader}
 
 /** Multimodal-column operators: opaque binary blobs with typed metadata,
   * decode / feature-extract / resize / frame-sample (BASELINE.json north
@@ -92,45 +92,24 @@ object Multimodal {
       * (no registered reader claims it) — same drop posture as the KPL
       * decoder.
       */
-    def decode(blob: Array[Byte]): Decoded = {
-      if (blob == null) return null
-      val iis = ImageIO.createImageInputStream(new ByteArrayInputStream(blob))
-      try {
-        val readers = ImageIO.getImageReaders(iis)
-        if (!readers.hasNext) return null
-        val reader = readers.next()
-        reader.setInput(iis)
-        try {
-          val fmt = reader.getFormatName.toLowerCase
-          val img = reader.read(0)
-          val raster = img.getRaster
-          val (w, h, c) = (img.getWidth, img.getHeight, raster.getNumBands)
-          var sum = 0L; var min = Int.MaxValue; var max = Int.MinValue
-          var y = 0
-          while (y < h) {
-            var x = 0
-            while (x < w) {
-              var b = 0
-              while (b < c) {
-                val v = raster.getSample(x, y, b)
-                sum += v
-                if (v < min) min = v
-                if (v > max) max = v
-                b += 1
-              }
-              x += 1
-            }
-            y += 1
-          }
-          Decoded(fmt, w, h, c, sum, min, max)
-        } finally reader.dispose()
-      } finally iis.close()
+    def decode(blob: Array[Byte]): Decoded = withReader[Decoded](blob) { reader =>
+      val fmt = reader.getFormatName.toLowerCase
+      val img = reader.read(0)
+      val (w, h, raster) = (img.getWidth, img.getHeight, img.getRaster)
+      val (sum, min, max) = sampleStats(raster, w, h, step = 1)
+      Decoded(fmt, w, h, raster.getNumBands, sum, min, max)
     }
 
     /** Full raster decode for pixel-level ops (resize); null on foreign
       * blobs — same drop posture as [[decode]].
       */
-    def decodeImage(blob: Array[Byte]): BufferedImage = {
+    def decodeImage(blob: Array[Byte]): BufferedImage =
+      withReader[BufferedImage](blob)(_.read(0))
+
+    /** `f` applied to the ImageIO reader that claims `blob`'s container,
+      * or null for a null blob or one no registered reader claims.
+      */
+    private def withReader[T >: Null](blob: Array[Byte])(f: ImageReader => T): T = {
       if (blob == null) return null
       val iis = ImageIO.createImageInputStream(new ByteArrayInputStream(blob))
       try {
@@ -138,8 +117,35 @@ object Multimodal {
         if (!readers.hasNext) return null
         val reader = readers.next()
         reader.setInput(iis)
-        try reader.read(0) finally reader.dispose()
+        try f(reader) finally reader.dispose()
       } finally iis.close()
+    }
+
+    /** (sum, min, max) over every band's sample at pixels (step·x, step·y)
+      * for x < w, y < h — the band-order-invariant stats both the decode
+      * (step 1) and the half resize (step 2) fold.
+      */
+    private[operators] def sampleStats(raster: Raster, w: Int, h: Int,
+        step: Int): (Long, Int, Int) = {
+      val c = raster.getNumBands
+      var sum = 0L; var min = Int.MaxValue; var max = Int.MinValue
+      var y = 0
+      while (y < h) {
+        var x = 0
+        while (x < w) {
+          var b = 0
+          while (b < c) {
+            val v = raster.getSample(step * x, step * y, b)
+            sum += v
+            if (v < min) min = v
+            if (v > max) max = v
+            b += 1
+          }
+          x += 1
+        }
+        y += 1
+      }
+      (sum, min, max)
     }
   }
 
@@ -187,29 +193,11 @@ object Multimodal {
       it.grouped(batchSize).flatMap { batch =>
         batch.flatMap { r =>
           Option(ImageCodec.decodeImage(r.data)).flatMap { img =>
-            val raster = img.getRaster
-            val c = raster.getNumBands
             val rw = img.getWidth / 2
             val rh = img.getHeight / 2
             if (rw == 0 || rh == 0) None
             else {
-              var sum = 0L; var mn = Int.MaxValue; var mx = Int.MinValue
-              var y = 0
-              while (y < rh) {
-                var x = 0
-                while (x < rw) {
-                  var b = 0
-                  while (b < c) {
-                    val v = raster.getSample(2 * x, 2 * y, b)
-                    sum += v
-                    if (v < mn) mn = v
-                    if (v > mx) mx = v
-                    b += 1
-                  }
-                  x += 1
-                }
-                y += 1
-              }
+              val (sum, mn, mx) = ImageCodec.sampleStats(img.getRaster, rw, rh, step = 2)
               Some(ImgResizedStats(r.doc_id, rw, rh, sum, mn, mx))
             }
           }

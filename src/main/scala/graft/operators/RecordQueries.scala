@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.{Q, Tables}
 import graft.kpl.KplCodec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Oracle-checked queries over the record pipeline (SURVEY.md §2 B2–B4,
@@ -16,6 +17,21 @@ object RecordQueries {
   private val aggUdf = udf { (keys: Seq[String], datas: Seq[Array[Byte]]) =>
     KplCodec.aggregate(keys.zip(datas))
   }
+
+  /** q30/q37's KPL frames: the even doc_ids packed 16 to a record
+    * through the proto2 encoder + magic/MD5 framing, each record's
+    * (key, payload) = (doc_id, text). Returns (batch = doc_id div 16,
+    * data).
+    */
+  private def evenDocFrames(docs: DataFrame): DataFrame =
+    docs.filter(col("doc_id") % 2 === 0)
+      .groupBy(expr("doc_id div 16").as("batch"))
+      .agg(collect_list(struct(
+        col("doc_id").cast("string").as("k"),
+        col("text").cast("binary").as("d"))).as("items"))
+      .select(col("batch"),
+        aggUdf(expr("transform(items, x -> x.k)"),
+               expr("transform(items, x -> x.d)")).as("data"))
 
   /** Deterministically invalid KPL frame: magic + 20×0xFF (varint overruns
     * 10 bytes → guaranteed decode error → silent drop, consumer.go:177-179).
@@ -36,15 +52,8 @@ object RecordQueries {
       SELECT CAST(doc_id AS VARCHAR) AS partition_key, text AS message
       FROM documents""")) { (s, dir) =>
       val docs = Tables.t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val aggregated = docs.filter(col("doc_id") % 2 === 0)
-        .groupBy(expr("doc_id div 16").as("batch"))
-        .agg(collect_list(struct(
-          col("doc_id").cast("string").as("k"),
-          col("text").cast("binary").as("d"))).as("items"))
-        .select(
-          lit("parent-key").as("partitionKey"),
-          aggUdf(expr("transform(items, x -> x.k)"),
-                 expr("transform(items, x -> x.d)")).as("data"))
+      val aggregated = evenDocFrames(docs)
+        .select(lit("parent-key").as("partitionKey"), col("data"))
       val plain = docs.filter(col("doc_id") % 2 === 1)
         .select(col("doc_id").cast("string").as("partitionKey"),
           col("text").cast("binary").as("data"))
@@ -74,15 +83,7 @@ object RecordQueries {
       FROM b
       UNION ALL
       SELECT 'tampered-' || CAST(batch AS VARCHAR), FALSE FROM b""")) { (s, dir) =>
-      val frames = Tables.t(s, dir, "documents")
-        .filter(col("doc_id") % 2 === 0)
-        .groupBy(expr("doc_id div 16").as("batch"))
-        .agg(collect_list(struct(
-          col("doc_id").cast("string").as("k"),
-          col("text").cast("binary").as("d"))).as("items"))
-        .select(col("batch"),
-          aggUdf(expr("transform(items, x -> x.k)"),
-                 expr("transform(items, x -> x.d)")).as("data"))
+      val frames = evenDocFrames(Tables.t(s, dir, "documents"))
       val valid = frames.select(
         concat(lit("batch-"), col("batch").cast("string")).as("partition_key"),
         col("data"))

@@ -375,6 +375,38 @@ object StatsQueries {
     */
   def exactGroupPercentiles(df: DataFrame, groupCol: String, valueCol: String,
       ps: Seq[Double]): Map[(String, Double), Double] = {
+    val gv = groupedValues(df, groupCol, valueCol)
+    try {
+      val (picked, _) = rankSelect(gv.base, gv.targets(ps), gv.bounds)
+      interpolate(gv.nByGi, ps, picked)
+        .map { case ((gi, p), v) => (gv.groups(gi), p) -> v }
+    } finally gv.base.unpersist()
+  }
+
+  /** The refinement setup [[exactGroupPercentiles]] and [[robustStats]]
+    * share, over the non-null values of `valueCol` as doubles: `groups`
+    * in sorted order, each group's row count and value bounds from ONE
+    * aggregate over the raw scan (keyed by group index), and `base`, a
+    * persisted primitive-only (gi, x) cache where gi is the group's
+    * index in `groups` (see rankSelect's scaladoc for the measured
+    * string-column cost). The caller unpersists `base`.
+    */
+  private final class GroupedValues(val groups: IndexedSeq[String],
+      val nByGi: Map[Int, Long], val bounds: Map[Int, (Double, Double)],
+      val base: DataFrame) {
+    /** Per group code, the two ranks each quantile in `ps` interpolates
+      * between: floor(p·(n−1)) and the next, clamped to the last row.
+      */
+    def targets(ps: Seq[Double]): Map[Int, Set[Long]] = nByGi.map { case (i, rows) =>
+      i -> ps.flatMap { p =>
+        val k = math.floor(p * (rows - 1)).toLong
+        Seq(k, math.min(k + 1, rows - 1))
+      }.toSet
+    }
+  }
+
+  private def groupedValues(df: DataFrame, groupCol: String,
+      valueCol: String): GroupedValues = {
     val src = df
       .filter(col(valueCol).isNotNull)
       .select(col(groupCol).cast("string").as("g"),
@@ -388,31 +420,16 @@ object StatsQueries {
       src.groupBy("g")
         .agg(count(lit(1)).as("n"),
           min(col("x")).as("mn"), max(col("x")).as("mx")),
-      cap = 4096, what = "exactGroupPercentiles per-group meta (bounded class dim)")
+      cap = 4096, what = s"per-group meta of $groupCol (bounded class dim)")
       .map(r => r.getString(0) -> ((r.getLong(1), r.getDouble(2), r.getDouble(3))))
       .toMap
-    val groups = meta.keys.toSeq.sorted
+    val groups = meta.keys.toIndexedSeq.sorted
     val giCol = groups.zipWithIndex.foldLeft(lit(-1)) { case (acc, (g, i)) =>
       when(col("g") === g, lit(i)).otherwise(acc) }
-    // the cached projection is primitive-only (int code + double value):
-    // see rankSelect's scaladoc for the measured string-column cost
-    val base = src.select(giCol.as("gi"), col("x")).persist()
-    try {
-      val nByG = meta.map { case (g, m) => g -> m._1 }
-      val targets = groups.zipWithIndex.map { case (g, i) =>
-        val n = meta(g)._1
-        i -> ps.flatMap { p =>
-          val pos = p * (n - 1)
-          val k = math.floor(pos).toLong
-          Seq(k, math.min(k + 1, n - 1))
-        }.toSet
-      }.toMap
-      val bounds = groups.zipWithIndex.map { case (g, i) =>
-        i -> ((meta(g)._2, meta(g)._3)) }.toMap
-      val (picked, _) = rankSelect(base, targets, bounds)
-      interpolate(nByG, ps,
-        picked.map { case ((gi, r), v) => (groups(gi), r) -> v })
-    } finally base.unpersist()
+    val gis = groups.indices
+    new GroupedValues(groups, gis.map(i => i -> meta(groups(i))._1).toMap,
+      gis.map(i => i -> ((meta(groups(i))._2, meta(groups(i))._3))).toMap,
+      src.select(giCol.as("gi"), col("x")).persist())
   }
 
   /** q86's FUSED robust-stats kernel: median/IQR and MAD all from
@@ -441,39 +458,14 @@ object StatsQueries {
     val s = df.sparkSession
     import s.implicits._
     val ps = Seq(0.25, 0.5, 0.75)
-    val src = df
-      .filter(col(valueCol).isNotNull)
-      .select(col(groupCol).cast("string").as("g"),
-        col(valueCol).cast("double").as("v"))
-    // group meta from the RAW scan, then a primitive-only (int, double)
-    // cache — the r17 form cached the string group column and paid
-    // UTF8String CASE-chain compares in every refinement pass (rankSelect
-    // scaladoc; the A/B for this change is AB_q86_r18_*.json)
-    val meta = graft.Bounded.collect(
-      src.groupBy("g")
-        .agg(count(lit(1)).as("n"),
-          min(col("v")).as("mn"), max(col("v")).as("mx")),
-      cap = 4096, what = "robustStats per-group meta (bounded class dim)")
-      .map(r => r.getString(0) -> ((r.getLong(1), r.getDouble(2), r.getDouble(3))))
-      .toMap
-    val groups = meta.keys.toSeq.sorted
-    val giCol = groups.zipWithIndex.foldLeft(lit(-1)) { case (acc, (g, i)) =>
-      when(col("g") === g, lit(i)).otherwise(acc) }
-    val base = src.select(giCol.as("gi"), col("v")).persist()
+    // a primitive-only (int, double) cache — the r17 form cached the
+    // string group column and paid UTF8String CASE-chain compares in
+    // every refinement pass (the A/B for this change is AB_q86_r18_*.json)
+    val gv = groupedValues(df, groupCol, valueCol)
+    val (groups, base, nByGi) = (gv.groups, gv.base, gv.nByGi)
     val dev = try {
       val gidx = groups.indices
-      val nByGi = gidx.map(i => i -> meta(groups(i))._1).toMap
-      val vTargets = nByGi.map { case (i, n) =>
-        i -> ps.flatMap { p =>
-          val pos = p * (n - 1)
-          val k = math.floor(pos).toLong
-          Seq(k, math.min(k + 1, n - 1))
-        }.toSet
-      }
-      val vBounds = gidx.map { i =>
-        i -> ((meta(groups(i))._2, meta(groups(i))._3)) }.toMap
-      val (vPicked, _) =
-        rankSelect(base.select(col("gi"), col("v").as("x")), vTargets, vBounds)
+      val (vPicked, _) = rankSelect(base, gv.targets(ps), gv.bounds)
       val pcts = interpolate(nByGi, ps, vPicked)
       // median/fences rounded through Spark's own `round` (a local 3-row
       // plan — constant work) so the deviation expression below subtracts
@@ -495,24 +487,19 @@ object StatsQueries {
           when(col("gi") === i, lit(f(i))).otherwise(acc)
         }
       val dData = base.select(col("gi"),
-        abs(col("v") - perG(i => fences(i)._1)).as("x"), col("v"))
-      val dTargets = nByGi.map { case (i, n) =>
-        val pos = 0.5 * (n - 1)
-        val k = math.floor(pos).toLong
-        i -> Set(k, math.min(k + 1, n - 1))
-      }
+        abs(col("x") - perG(i => fences(i)._1)).as("x"), col("x").as("v"))
       // loose-but-correct deviation bounds from the value extremes: the
       // max deviation is at a value extreme (|v − med| is V-shaped)
       val dBounds = gidx.map { i =>
         val med = fences(i)._1
-        val m = meta(groups(i))
-        i -> ((0.0, math.max(math.abs(m._2 - med), math.abs(m._3 - med))))
+        val (mn, mx) = gv.bounds(i)
+        i -> ((0.0, math.max(math.abs(mn - med), math.abs(mx - med))))
       }.toMap
       val p25c = perG(i => fences(i)._2)
       val p75c = perG(i => fences(i)._3)
       val isOut = col("v") > p75c + (p75c - p25c) * 1.5 ||
         col("v") < p25c - (p75c - p25c) * 1.5
-      val (dPicked, extras) = rankSelect(dData, dTargets, dBounds,
+      val (dPicked, extras) = rankSelect(dData, gv.targets(Seq(0.5)), dBounds,
         Seq(sum(when(isOut, 1L).otherwise(0L)).as("o")))
       val madRaw = interpolate(nByGi, Seq(0.5), dPicked)
       gidx.map(i => (groups(i), pcts((i, 0.5)), pcts((i, 0.25)),

@@ -99,29 +99,9 @@ object VectorQueries {
     // for the oracle: centroid values and distances round to 6 dp before
     // ranking, ties break on label / neighbor id; dot products share fold
     // order across engines.
-    Q("q89_ivf_probe2", Some("""
-      WITH n AS (SELECT vec_id, label, embedding::DOUBLE[] AS v,
-                   sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
-                 FROM embeddings),
-      cent AS (
-        SELECT label, i AS dim,
-          round(CAST(SUM(CAST(v[i + 1] AS DECIMAL(18,9))) AS DOUBLE) / COUNT(*), 6) AS c
-        FROM (SELECT label, embedding::DOUBLE[] AS v FROM embeddings), range(0, 64) t(i)
-        GROUP BY label, i),
-      cvec AS (SELECT label, list(c ORDER BY dim) AS cv FROM cent GROUP BY label),
-      q AS (SELECT vec_id AS query_id, label AS qlabel, v AS qv, nrm AS qn
-            FROM n WHERE vec_id < 10),
-      probe AS (
-        SELECT query_id, qv, qn, qlabel AS label FROM q
-        UNION ALL
-        SELECT query_id, qv, qn, label FROM (
-          SELECT q.query_id, q.qv, q.qn, c.label,
-            CAST(row_number() OVER (PARTITION BY q.query_id
-              ORDER BY round(list_dot_product(q.qv, q.qv)
-                           - 2 * list_dot_product(q.qv, c.cv)
-                           + list_dot_product(c.cv, c.cv), 6), c.label) AS INT) AS cell_rk
-          FROM q JOIN cvec c ON c.label <> q.qlabel) t
-        WHERE cell_rk = 1)
+    Q("q89_ivf_probe2", Some(s"""
+      WITH $ivfHeadSql,
+      ${ivfProbeSql("probe", "= 1")}
       SELECT query_id, neighbor_id, sim, rk FROM (
         SELECT p.query_id, c.vec_id AS neighbor_id,
           round(list_dot_product(p.qv, c.v) / (p.qn * c.nrm), 6) AS sim,
@@ -236,7 +216,7 @@ object VectorQueries {
       val corpus = semCorpus(s, dir)
       LlmQueries
         .labelPropagation(corpus.select(col("vec_id").as("doc_id")),
-          semEdges(corpus))
+          symEdges(lshSimPairs(corpus)))
         ._1
         .select(col("doc_id").as("vec_id"), col("canonical"), col("kept"))
     },
@@ -259,11 +239,7 @@ object VectorQueries {
       WITH RECURSIVE base AS ($semBaseSql),
       $semClosureSql,
       cc AS (SELECT src AS vec_id, MIN(dst) AS canonical FROM reach GROUP BY src),
-      qual AS (SELECT vec_id,
-                 CAST(floor(sqrt(CAST(list_sum(list_transform(v,
-                   x -> CAST(x * x AS DECIMAL(26,12)))) AS DOUBLE)) * 1000000)
-                   AS BIGINT) AS quality
-               FROM base),
+      $semQualSql,
       m AS (SELECT cc.vec_id, cc.canonical, qual.quality
             FROM cc JOIN qual USING (vec_id)),
       mx AS (SELECT canonical, MAX(quality) AS max_quality, COUNT(*) AS n_members
@@ -326,14 +302,7 @@ object VectorQueries {
     // end — no float drift can accumulate across passes.
     Q("q120_kmeans_iterate", Some(s"""
       WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-      seeds AS (SELECT vec_id AS c_id, v AS cv FROM base WHERE v IS NOT NULL
-                ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 8),
-      ${kmAsgSql("base", "seeds", "asg1")},
-      ${kmCentSql("asg1", "cent1")},
-      ${kmListSql("cent1", "cl1")},
-      ${kmAsgSql("base", "cl1", "asg2")},
-      ${kmCentSql("asg2", "cent2")},
-      ${kmListSql("cent2", "cl2")},
+      ${kmTwoPassSql("8")},
       ${kmAsgSql("base", "cl2", "asg3")}
       SELECT c_id AS cluster, CAST(i AS INT) AS dim,
         round(CAST(SUM(CAST(v[i + 1] AS DECIMAL(18,9))) AS DOUBLE) / COUNT(*), 6)
@@ -397,39 +366,22 @@ object VectorQueries {
     // same k-means cell (nearest-centroid is robust to a 1-dim
     // perturbation), and cosine ~0.99 passes the gate. See
     // [[kmeansSemDedup]] for the plan-shape / 100 TB discussion. The
-    // oracle unrolls the identical 3 Lloyd passes as chained CTEs
-    // (q120's kmAsgSql/kmCentSql/kmListSql helpers), then the same
-    // within-cell pair join, recursive closure, and argmax tail as q117.
+    // oracle runs q120's 3 Lloyd passes ([[kmTwoPassSql]] with the
+    // corpus-derived k, then the third assignment), then the within-cell
+    // pair join, recursive closure, and q117's quality-argmax tail.
     Q("q123_kmeans_semdedup", Some(s"""
       WITH RECURSIVE base AS ($semBaseSql),
       n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM base),
-      seeds AS (SELECT vec_id AS c_id, v AS cv FROM base WHERE v IS NOT NULL
-                ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
-                LIMIT ${semDedupKSql("base")}),
-      ${kmAsgSql("base", "seeds", "asg1")},
-      ${kmCentSql("asg1", "cent1")},
-      ${kmListSql("cent1", "cl1")},
-      ${kmAsgSql("base", "cl1", "asg2")},
-      ${kmCentSql("asg2", "cent2")},
-      ${kmListSql("cent2", "cl2")},
+      ${kmTwoPassSql(semDedupKSql("base"))},
       ${kmAsgSql("base", "cl2", "asg3")},
       sims AS (
         SELECT a.vec_id AS vec_id1, b.vec_id AS vec_id2
         FROM asg3 a JOIN asg3 b ON a.c_id = b.c_id AND a.vec_id < b.vec_id
         JOIN n na ON a.vec_id = na.vec_id JOIN n nb ON b.vec_id = nb.vec_id
         WHERE round(list_dot_product(na.v, nb.v) / (na.nrm * nb.nrm), 6) >= 0.9),
-      edges AS (SELECT vec_id1 AS src, vec_id2 AS dst FROM sims
-                UNION SELECT vec_id2, vec_id1 FROM sims),
-      reach(src, dst) AS (
-        SELECT vec_id, vec_id FROM base
-        UNION
-        SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
+      $semReachSql,
       cc AS (SELECT src AS vec_id, MIN(dst) AS canonical FROM reach GROUP BY src),
-      qual AS (SELECT vec_id,
-                 CAST(floor(sqrt(CAST(list_sum(list_transform(v,
-                   x -> CAST(x * x AS DECIMAL(26,12)))) AS DOUBLE)) * 1000000)
-                   AS BIGINT) AS quality
-               FROM base),
+      $semQualSql,
       m AS (SELECT cc.vec_id, cc.canonical, qual.quality, asg3.c_id
             FROM cc JOIN qual USING (vec_id) JOIN asg3 USING (vec_id)),
       mx AS (SELECT canonical, MAX(quality) AS max_quality, COUNT(*) AS n_members,
@@ -486,21 +438,14 @@ object VectorQueries {
     // --------------------------------------------------------------- Q135
     // Centroid-silhouette audit of the q120 k-means clustering — see
     // [[kmeansSilhouette]] for the method, ambiguity semantics, and the
-    // map-only 100 TB shape. The oracle replays the identical 3 Lloyd
-    // passes (q120's chained-CTE helpers), then scores every vector
+    // map-only 100 TB shape. The oracle runs q120's first two Lloyd
+    // passes ([[kmTwoPassSql]]), then scores every vector
     // against the FINAL centroid table with the same rounded-d² /
     // (d², c_id) ranking: rk=1 is the assignment (a), rk=2 the runner-up
     // (b), s = (b − a) / max(a, b) rounded at 6 dp, means decimal-routed.
     Q("q135_kmeans_silhouette", Some(s"""
       WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-      seeds AS (SELECT vec_id AS c_id, v AS cv FROM base WHERE v IS NOT NULL
-                ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 8),
-      ${kmAsgSql("base", "seeds", "asg1")},
-      ${kmCentSql("asg1", "cent1")},
-      ${kmListSql("cent1", "cl1")},
-      ${kmAsgSql("base", "cl1", "asg2")},
-      ${kmCentSql("asg2", "cent2")},
-      ${kmListSql("cent2", "cl2")},
+      ${kmTwoPassSql("8")},
       d AS (SELECT b.vec_id, s.c_id,
               round(list_dot_product(b.v, b.v) - 2 * list_dot_product(b.v, s.cv)
                     + list_dot_product(s.cv, s.cv), 6) AS d2
@@ -686,6 +631,22 @@ object VectorQueries {
   private def kmListSql(cent: String, cl: String): String = s"""
       $cl AS (SELECT c_id, list(c ORDER BY i) AS cv FROM $cent GROUP BY c_id)"""
 
+  /** The oracle's k-means over a `base` CTE of (vec_id, v) up to the
+    * third pass: the `seeds` (the `k` non-null vectors with the smallest
+    * md5(vec_id), vec_id tie-break), then two Lloyd passes ending in the
+    * centroid lists `cl2`. q120 and q123 assign once more against
+    * `cl2`; q135 scores against it.
+    */
+  private def kmTwoPassSql(k: String): String = s"""
+      seeds AS (SELECT vec_id AS c_id, v AS cv FROM base WHERE v IS NOT NULL
+                ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT $k),
+      ${kmAsgSql("base", "seeds", "asg1")},
+      ${kmCentSql("asg1", "cent1")},
+      ${kmListSql("cent1", "cl1")},
+      ${kmAsgSql("base", "cl1", "asg2")},
+      ${kmCentSql("asg2", "cent2")},
+      ${kmListSql("cent2", "cl2")}"""
+
   /** q119 kernel: one exact Lloyd iteration. Seeds = the k non-null
     * corpus vectors with the lexicographically smallest md5(vec_id)
     * (vec_id tie-break) — deterministic, engine-portable, and
@@ -787,13 +748,14 @@ object VectorQueries {
   /** Final-pass Lloyd ASSIGNMENT after `iters` passes over a prepared
     * `base` with `vec_id` and double-array `v` (extra columns ride
     * along): returns `base`'s columns plus `cluster`. This is the
-    * composition seam q123 builds on (with a corpus-derived k) — the
-    * assignment, not just the means, is the useful product of k-means in
-    * a SemDeDup-shaped pipeline. Same arithmetic contract as [[kmeansIterate]]; the
-    * centroids come from [[kmeansCentroids]]'s size dispatch and the
-    * final assignment is always the distributed map-only pass.
+    * composition seam q123 builds on, with k derived from the corpus row
+    * count — the assignment, not just the means, is the useful product
+    * of k-means in a SemDeDup-shaped pipeline. Same arithmetic contract
+    * as [[kmeansIterate]]; the centroids come from [[kmeansCentroids]]'s
+    * size dispatch and the final assignment is always the distributed
+    * map-only pass.
     */
-  def kmeansAssign(base: DataFrame, k: Int = 8, iters: Int = 3): DataFrame =
+  def kmeansAssign(base: DataFrame, k: Long => Int, iters: Int): DataFrame =
     argminAssign(base, kmeansCentroids(base, k, iters))
 
   /** Literal double-array SQL rendering — Double.toString round-trips
@@ -806,19 +768,14 @@ object VectorQueries {
     * seeds = the k non-null corpus vectors with the smallest md5(vec_id)
     * (vec_id tie-break), then `iters − 1` mean updates. Exposed so
     * silhouette/diagnostic passes can score against exactly the
-    * centroids the assignment saw. The same size dispatch as
+    * centroids the assignment saw. `k` maps the corpus row count n to
+    * the number of seeds: the driver finish reads n off its fetch, so
+    * only the loop pays a count. The same size dispatch as
     * [[kmeansIterate]]: a corpus of at most [[KmeansDriverVectors]] rows
     * is fetched once and the updates run on the driver; a larger one
     * runs [[kmeansCentroidsLoop]].
     */
-  private[graft] def kmeansCentroids(base: DataFrame, k: Int,
-      iters: Int): Seq[(Long, Seq[Double])] =
-    kmeansCentroidsSized(base, _ => k, iters)
-
-  /** [[kmeansCentroids]] with k derived from the corpus row count n: the
-    * driver finish reads n off its fetch, so only the loop pays a count.
-    */
-  private def kmeansCentroidsSized(base: DataFrame, k: Long => Int,
+  private[graft] def kmeansCentroids(base: DataFrame, k: Long => Int,
       iters: Int): Seq[(Long, Seq[Double])] =
     kmFetch(base, k) match {
       case Some(c) => c.centroids(iters)
@@ -993,7 +950,7 @@ object VectorQueries {
     */
   def kmeansSilhouette(emb: DataFrame, k: Int = 8, iters: Int = 3): DataFrame = {
     val base = kmBase(emb)
-    val cents = kmeansCentroids(base, k, iters)
+    val cents = kmeansCentroids(base, _ => k, iters)
     require(cents.length >= 2,
       s"silhouette needs >= 2 surviving clusters, got ${cents.length}")
     val structs = cents.map { case (cid, cv) =>
@@ -1083,15 +1040,33 @@ object VectorQueries {
           "transform(v, (x, i) -> CASE WHEN i = 1 THEN 0D ELSE x END) AS v")))
   }
 
-  /** Symmetric CC edge list from [[lshSimPairs]]'s verified near-dup
-    * pairs, both orientations out of one map-side explode (the
-    * [[LlmQueries.labelPropagation]] edge contract).
+  /** Symmetric CC edge list from verified near-dup (vec_id1, vec_id2)
+    * pairs ([[lshSimPairs]]' or [[kmeansPairs]]'), both orientations out
+    * of one map-side explode (the [[LlmQueries.labelPropagation]] edge
+    * contract).
     */
-  private def semEdges(corpus: DataFrame): DataFrame =
-    lshSimPairs(corpus).select(explode(array(
+  private def symEdges(pairs: DataFrame): DataFrame =
+    pairs.select(explode(array(
         struct(col("vec_id1").as("src"), col("vec_id2").as("dst")),
         struct(col("vec_id2").as("src"), col("vec_id1").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
+
+  /** q117/q123's quality, the exact integer L2-norm micro score of `v`
+    * (q106's arithmetic: squared terms routed through DECIMAL, then
+    * floor(sqrt·10⁶)), so both engines agree bit for bit. Spark form.
+    */
+  private def semQuality: String =
+    """CAST(floor(sqrt(CAST(aggregate(v, CAST(0 AS DECIMAL(26,12)),
+      |  (a, x) -> CAST(a + CAST(x * x AS DECIMAL(26,12)) AS DECIMAL(26,12)))
+      |  AS DOUBLE)) * 1000000) AS BIGINT)""".stripMargin
+
+  /** [[semQuality]] as the oracle's `qual` CTE over `base`. */
+  private def semQualSql: String = """
+      qual AS (SELECT vec_id,
+                 CAST(floor(sqrt(CAST(list_sum(list_transform(v,
+                   x -> CAST(x * x AS DECIMAL(26,12)))) AS DOUBLE)) * 1000000)
+                   AS BIGINT) AS quality
+               FROM base)"""
 
   /** q117 kernel over any (vec_id, v, nrm) corpus: LSH-edge transitive
     * clusters ([[LlmQueries.labelPropagation]]) reduced to each cluster's
@@ -1104,12 +1079,9 @@ object VectorQueries {
   def semDedupKeepBest(corpus: DataFrame): DataFrame = {
     val cc = LlmQueries
       .labelPropagation(corpus.select(col("vec_id").as("doc_id")),
-        semEdges(corpus))
+        symEdges(lshSimPairs(corpus)))
       ._1.select("doc_id", "canonical")
-    val qual = corpus.select(col("vec_id").as("doc_id"), expr(
-      """CAST(floor(sqrt(CAST(aggregate(v, CAST(0 AS DECIMAL(26,12)),
-        |  (a, x) -> CAST(a + CAST(x * x AS DECIMAL(26,12)) AS DECIMAL(26,12)))
-        |  AS DOUBLE)) * 1000000) AS BIGINT)""".stripMargin).as("quality"))
+    val qual = corpus.select(col("vec_id").as("doc_id"), expr(semQuality).as("quality"))
     LlmQueries.keepBest(
       cc.join(qual, "doc_id").select("doc_id", "canonical", "quality"))
   }
@@ -1151,21 +1123,14 @@ object VectorQueries {
     // lineage hygiene) so both caches release before returning.
     val corpusP = corpus.persist()
     val kOf: Long => Int = k.fold(semDedupK _)(kk => _ => kk)
-    val asg = argminAssign(corpusP, kmeansCentroidsSized(corpusP, kOf, iters)).persist()
-    val sims = kmeansPairs(asg, tau)
-    val edges = sims.select(explode(array(
-        struct(col("vec_id1").as("src"), col("vec_id2").as("dst")),
-        struct(col("vec_id2").as("src"), col("vec_id1").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
+    val asg = kmeansAssign(corpusP, kOf, iters).persist()
+    val edges = symEdges(kmeansPairs(asg, tau))
     val cc = LlmQueries
       .labelPropagation(corpusP.select(col("vec_id").as("doc_id")), edges)
       ._1.select("doc_id", "canonical")
     // quality and the km cluster ride ONE map-only corpus scan
     val memb = asg.select(col("vec_id").as("doc_id"),
-      col("cluster").as("km"), expr(
-        """CAST(floor(sqrt(CAST(aggregate(v, CAST(0 AS DECIMAL(26,12)),
-          |  (a, x) -> CAST(a + CAST(x * x AS DECIMAL(26,12)) AS DECIMAL(26,12)))
-          |  AS DOUBLE)) * 1000000) AS BIGINT)""".stripMargin).as("quality"))
+      col("cluster").as("km"), expr(semQuality).as("quality"))
     val out = cc.join(memb, "doc_id")
       .groupBy(col("canonical").as("cluster_id"))
       .agg(min(col("km")).as("km_cluster"),
@@ -1266,13 +1231,20 @@ object VectorQueries {
 
   /** Shared oracle CTE chain from `base` through the verified-pair edge
     * set to the exact recursive closure `reach` — the SQL mirror of
-    * [[semEdges]] + transitive closure (q116/q117).
+    * [[lshSimPairs]] + [[symEdges]] + transitive closure (q116/q117).
     */
   private def semClosureSql: String = s"""$lshCandSql,
       sims AS (
         SELECT vec_id1, vec_id2
         FROM cand JOIN n a ON vec_id1 = a.vec_id JOIN n b ON vec_id2 = b.vec_id
         WHERE round(list_dot_product(a.v, b.v) / (a.nrm * b.nrm), 6) >= 0.9),
+      $semReachSql"""
+
+  /** The verified pairs `sims` as symmetric `edges` and their recursive
+    * closure `reach` from every vector of `base` — the SQL mirror of
+    * [[symEdges]] + transitive closure, shared by q116/q117 and q123.
+    */
+  private def semReachSql: String = """
       edges AS (SELECT vec_id1 AS src, vec_id2 AS dst FROM sims
                 UNION SELECT vec_id2, vec_id1 FROM sims),
       reach(src, dst) AS (
@@ -1504,16 +1476,30 @@ object VectorQueries {
       .withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
   }
 
-  // ----------------------------------------------------------- q148 IVF
-  /** Oracle for the recall curve: ONE shared header (vectors, centroids,
-    * anchors, exact top-5) plus a generated probe arm per probe count —
-    * each arm is exactly the q89 CTE chain with `cell_rk <= p-1` (p = 1
-    * degenerates to the home cell alone). Recall counts are integer.
+  /** The IVF oracles' shared CTEs: vectors `n` with their norms, the
+    * per-label centroids `cent`/`cvec` (q77's decimal-routed means), and
+    * the vec_id < 10 query set `q`.
     */
-  private lazy val ivfRecallOracleSql: String = {
-    val k = 5
-    val arms = Seq(1, 2, 3).map { p =>
-      s"""pr$p AS (
+  private def ivfHeadSql: String = """
+      n AS (SELECT vec_id, label, embedding::DOUBLE[] AS v,
+                   sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
+                 FROM embeddings),
+      cent AS (
+        SELECT label, i AS dim,
+          round(CAST(SUM(CAST(v[i + 1] AS DECIMAL(18,9))) AS DOUBLE) / COUNT(*), 6) AS c
+        FROM (SELECT label, embedding::DOUBLE[] AS v FROM embeddings), range(0, 64) t(i)
+        GROUP BY label, i),
+      cvec AS (SELECT label, list(c ORDER BY dim) AS cv FROM cent GROUP BY label),
+      q AS (SELECT vec_id AS query_id, label AS qlabel, v AS qv, nrm AS qn
+            FROM n WHERE vec_id < 10)"""
+
+  /** q89's probe arm as the oracle CTE `name`: each query's home cell
+    * plus every foreign cell whose rank by rounded centroid d² (label
+    * tie-break) satisfies `cellRk` — `= 1` for q89's second probe,
+    * `<= p - 1` for q148's p-probe arm.
+    */
+  private def ivfProbeSql(name: String, cellRk: String): String = s"""
+      $name AS (
         SELECT query_id, qv, qn, qlabel AS label FROM q
         UNION ALL
         SELECT query_id, qv, qn, label FROM (
@@ -1521,10 +1507,19 @@ object VectorQueries {
             CAST(row_number() OVER (PARTITION BY q.query_id
               ORDER BY round(list_dot_product(q.qv, q.qv)
                            - 2 * list_dot_product(q.qv, c.cv)
-                           + list_dot_product(c.cv, c.cv), 6), c.label)
-              AS INT) AS cell_rk
+                           + list_dot_product(c.cv, c.cv), 6), c.label) AS INT) AS cell_rk
           FROM q JOIN cvec c ON c.label <> q.qlabel) t
-        WHERE cell_rk <= ${p - 1}),
+        WHERE cell_rk $cellRk)"""
+
+  // ----------------------------------------------------------- q148 IVF
+  /** Oracle for the recall curve: the IVF header plus the exact top-5,
+    * then one q89 probe arm per probe count with `cell_rk <= p-1` (p = 1
+    * degenerates to the home cell alone). Recall counts are integer.
+    */
+  private lazy val ivfRecallOracleSql: String = {
+    val k = 5
+    val arms = Seq(1, 2, 3).map { p =>
+      s"""${ivfProbeSql(s"pr$p", s"<= ${p - 1}")},
       iv$p AS (SELECT query_id, neighbor_id FROM (
         SELECT p.query_id, c.vec_id AS neighbor_id,
           CAST(row_number() OVER (PARTITION BY p.query_id
@@ -1549,21 +1544,7 @@ object VectorQueries {
         FROM hit$p)"""
     }.mkString(",\n      ")
     s"""
-      WITH n AS (SELECT vec_id, label, embedding::DOUBLE[] AS v,
-          sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]))
-            AS nrm
-        FROM embeddings),
-      cent AS (
-        SELECT label, i AS dim,
-          round(CAST(SUM(CAST(v[i + 1] AS DECIMAL(18,9))) AS DOUBLE)
-            / COUNT(*), 6) AS c
-        FROM (SELECT label, embedding::DOUBLE[] AS v FROM embeddings),
-          range(0, 64) t(i)
-        GROUP BY label, i),
-      cvec AS (SELECT label, list(c ORDER BY dim) AS cv FROM cent
-               GROUP BY label),
-      q AS (SELECT vec_id AS query_id, label AS qlabel, v AS qv, nrm AS qn
-            FROM n WHERE vec_id < 10),
+      WITH $ivfHeadSql,
       ex AS (SELECT query_id, neighbor_id FROM (
         SELECT q.query_id, c.vec_id AS neighbor_id,
           CAST(row_number() OVER (PARTITION BY q.query_id

@@ -331,7 +331,7 @@ class PlanAuditSpec extends SparkSpec {
     val base = spark.range(64).selectExpr("id AS vec_id",
       "transform(sequence(0, 63), i -> CAST(id % 7 + i AS DOUBLE)) AS v")
       .selectExpr("vec_id", "v", "sqrt(graft_vector_dot(v, v)) AS nrm")
-    val asg = operators.VectorQueries.kmeansAssign(base, k = 4, iters = 2)
+    val asg = operators.VectorQueries.kmeansAssign(base, k = _ => 4, iters = 2)
     asg.collect()
     val ap = flatten(asg.queryExecution.executedPlan)
     assert(!ap.exists(_.nodeName.contains("Join")),
@@ -709,6 +709,39 @@ class PlanAuditSpec extends SparkSpec {
     val sites = outsideTables("GraftExtensions.register")
     assert(sites.isEmpty,
       "GraftExtensions.register outside Tables.scala:\n" + sites.mkString("\n"))
+  }
+
+  test("no copied blocks: no 6 consecutive code lines under operators occur twice") {
+    // a scale path, oracle stage or fixture written out twice can be
+    // fixed in one copy and missed in the other, and then a query and its
+    // anchor are checked against different SQL; each repeated computation
+    // gets one name instead. Blank and comment lines drop and whitespace
+    // runs collapse, so re-indenting a copy does not hide it.
+    val window = 6
+    val ops = mainSources
+      .filter(_._1.getPath.contains("src/main/scala/graft/operators/"))
+      .sortBy(_._1.getPath)
+    assert(ops.size >= 8, s"operators walk found only ${ops.size} files")
+    val seen = scala.collection.mutable.Map.empty[Seq[String], String]
+    // one report per run of overlapping repeated windows: its first line
+    val copies = ops.flatMap { case (f, lines) =>
+      val code = lines.zipWithIndex
+        .map { case (l, i) => (l.trim.replaceAll("\\s+", " "), s"${f.getName}:${i + 1}") }
+        .filter { case (l, _) =>
+          l.nonEmpty && !l.startsWith("//") && !l.startsWith("*") && !l.startsWith("/**") }
+      var inRun = false
+      code.sliding(window).filter(_.size == window).flatMap { w =>
+        val (key, at) = (w.map(_._1), w.head._2)
+        val first = seen.get(key)
+        if (first.isEmpty) seen(key) = at
+        val report = first.filter(_ => !inRun).map(prev => s"$at repeats $prev")
+        inRun = first.isDefined
+        report
+      }.toSeq
+    }
+    if (copies.nonEmpty)
+      fail(s"$window-line blocks written twice under operators (give each one name):\n" +
+        copies.mkString("\n"))
   }
 
   test("no env-gated hooks: operator and streaming code reads no environment variable") {

@@ -438,7 +438,7 @@ class VectorSpec extends SparkSpec {
     val base = emb.selectExpr("vec_id",
       "transform(embedding, x -> CAST(x AS double)) AS v")
     for (iters <- Seq(1, 3)) yield {
-      assert(vq.kmeansCentroids(base, k, iters) == vq.kmeansCentroidsLoop(base, k, iters),
+      assert(vq.kmeansCentroids(base, _ => k, iters) == vq.kmeansCentroidsLoop(base, k, iters),
         s"$what, iters=$iters: centroids")
       val (dispatched, jobs) = jobsOf {
         val df = vq.kmeansIterate(emb, k, iters)
@@ -519,7 +519,7 @@ class VectorSpec extends SparkSpec {
     val jobs = kmPathsAgree("null md5-first vector", emb, k = 2)
     assert(jobs.forall(_ == 0), s"null md5-first vector: driver finish expected $jobs")
     val base = emb.selectExpr("vec_id", "transform(embedding, x -> CAST(x AS double)) AS v")
-    assert(operators.VectorQueries.kmeansCentroids(base, 2, 1) ==
+    assert(operators.VectorQueries.kmeansCentroids(base, _ => 2, 1) ==
       Seq(1L -> Seq(0.0, 0.0), 2L -> Seq(10.0, 10.0)))
   }
 
@@ -528,7 +528,7 @@ class VectorSpec extends SparkSpec {
     val base = emb.selectExpr("vec_id", "transform(embedding, x -> CAST(x AS double)) AS v")
     val vq = operators.VectorQueries
     assert(jobsOf(vq.kmeansIterate(emb, 8, 3).collect())._2 == 1)
-    assert(jobsOf(vq.kmeansCentroids(base, 8, 3))._2 == 1)
+    assert(jobsOf(vq.kmeansCentroids(base, _ => 8, 3))._2 == 1)
     // the loop's seed fetch and two mean updates are jobs of their own
     assert(jobsOf(vq.kmeansCentroidsLoop(base, 8, 3))._2 >= 3)
   }
