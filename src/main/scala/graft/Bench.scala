@@ -171,7 +171,9 @@ object Bench {
     // trivial top-k at [2.62 s, 3.26 s] back-to-back that times at 0.20 s
     // minutes later. Pass-separating the samples puts ~minutes between
     // them at zero extra cost, so one stall can no longer manufacture a
-    // phantom plan regression.
+    // phantom plan regression. q87, q103 and q125 share a chain corpus
+    // generated once per (session, dir) (LlmQueries.chainCorpus): every
+    // later call, timed or not, reads its truncated copy.
     val startedMs = scala.collection.mutable.Map.empty[String, Long]
     val runsBy = scala.collection.mutable.Map.empty[String, List[Double]]
     val lasBy = scala.collection.mutable.Map.empty[String, List[Double]]

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, Tables}
+import graft.{Lineage, Q, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1098,8 +1098,8 @@ object VectorQueries {
     * chain), and q117's single-argmax quality keep. 100 TB posture: the
     * corpus shuffles ONCE (on cluster id, both join sides reused); the
     * quadratic term is bounded per cluster, which is exactly the
-    * published recipe's point. k defaults to [[semDedupK]]'s
-    * sqrt-balanced corpus-derived value (a fixed k=8 measured 203 s at
+    * published recipe's point. k is [[semDedupK]]'s sqrt-balanced
+    * corpus-derived value (a fixed k=8 measured 203 s at
     * sf5 — ~14k-vector cells made the pair join quadratic; the adaptive
     * k keeps assignment cost n·k·d·iters and pair cost n·(n/k)·d/2 in
     * balance). k clamps at 512, so past about 1.6 M vectors the cells
@@ -1111,7 +1111,7 @@ object VectorQueries {
     * one k-means cluster by construction, and exposing it makes the
     * two-level structure auditable.
     */
-  def kmeansSemDedup(corpus: DataFrame, k: Option[Int] = None, iters: Int = 3,
+  def kmeansSemDedup(corpus: DataFrame, iters: Int = 3,
       tau: Double = 0.9): DataFrame = {
     // the kernel is a chain of ~8 driver-sequenced jobs (seed collect,
     // per-pass mean collects, pairs, CC rounds, final reduce) and EVERY
@@ -1122,8 +1122,7 @@ object VectorQueries {
     // result is materialized (the CC kernel does this anyway for its own
     // lineage hygiene) so both caches release before returning.
     val corpusP = corpus.persist()
-    val kOf: Long => Int = k.fold(semDedupK _)(kk => _ => kk)
-    val asg = kmeansAssign(corpusP, kOf, iters).persist()
+    val asg = kmeansAssign(corpusP, semDedupK, iters).persist()
     val edges = symEdges(kmeansPairs(asg, tau))
     val cc = LlmQueries
       .labelPropagation(corpusP.select(col("vec_id").as("doc_id")), edges)
@@ -1139,7 +1138,7 @@ object VectorQueries {
       .select(col("cluster_id"), col("km_cluster"),
         (-col("best.nid")).as("keep_id"),
         col("best.quality").as("max_quality"), col("n_members"))
-    val outM = out.localCheckpoint(true)
+    val outM = Lineage.truncate(out)
     asg.unpersist()
     corpusP.unpersist()
     outM
@@ -1573,13 +1572,12 @@ object VectorQueries {
         col("nrm").as("qn"))
     val w = Window.partitionBy("query_id")
       .orderBy(col("sim").desc, col("neighbor_id"))
-    val ex = n.join(broadcast(q), col("vec_id") =!= col("query_id"))
+    val ex = Lineage.truncate(n.join(broadcast(q), col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         round(expr("graft_vector_dot(qv, v)") / (col("qn") * col("nrm")), 6)
           .as("sim"))
       .withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
-      .select("query_id", "neighbor_id")
-      .localCheckpoint(true)
+      .select("query_id", "neighbor_id"))
     val anchors = q.select("query_id")
     Seq(1, 2, 3).map { p =>
       val iv = ivfTopK(s, dir, probes = p, k = k)

@@ -88,10 +88,9 @@ class DedupSpec extends SparkSpec {
   private def loop(docs: org.apache.spark.sql.DataFrame,
       edges: org.apache.spark.sql.DataFrame,
       broadcastChaseBelow: Long = operators.LlmQueries.DriverRows,
-      checkpointDir: Option[String] = None,
       roundStats: (Int, Long, Long) => Unit = (_, _, _) => ()) =
     operators.LlmQueries.withEdgeCache(edges)(operators.LlmQueries
-      .labelPropagationLoop(docs, _, broadcastChaseBelow, checkpointDir, roundStats))
+      .labelPropagationLoop(docs, _, broadcastChaseBelow, roundStats))
 
   /** Symmetric path graph 0—1—…—d (no self-edges) plus its isolated docs. */
   private def chainGraph(d: Int) = {
@@ -207,32 +206,33 @@ class DedupSpec extends SparkSpec {
   }
 
   test("labelPropagation: reliable checkpoint dir yields identical labels and rounds") {
-    // cluster fault-tolerance option: a reliable checkpoint dir swaps the
-    // per-round localCheckpoint (executor-block storage, lost on executor
-    // death) for DFS checkpoints. Pin that the mode switch changes ONLY
-    // durability: labels and round counts identical on a chain.
+    // a checkpoint directory on the context swaps every truncation's
+    // executor blocks (lost with their executor) for files under it
+    // (graft.Lineage). Pin that the kind changes ONLY durability: labels,
+    // round counts and the per-round observed sizes identical on a chain.
     val (docs, edges) = chainGraph(32)
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
     val statsLocal = scala.collection.mutable.ListBuffer.empty[(Int, Long, Long)]
     val statsRel = scala.collection.mutable.ListBuffer.empty[(Int, Long, Long)]
     val (lb, rb) = loop(docs, edges,
       roundStats = (r, f, d) => statsLocal += ((r, f, d)))
-    val (lc, rc) = loop(docs, edges,
-      checkpointDir = Some(dir),
-      roundStats = (r, f, d) => statsRel += ((r, f, d)))
-    assert(rb == rc, s"rounds differ local=$rb reliable=$rc")
     val mb = lb.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val mc = lc.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(mb == mc, "labels differ between checkpoint modes")
+    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    val sc = spark.sparkContext
+    val (rc, mc) =
+      try {
+        sc.setCheckpointDir(dir)
+        val (lc, rc) = loop(docs, edges,
+          roundStats = (r, f, d) => statsRel += ((r, f, d)))
+        (rc, lc.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
+      } finally sc.setCheckpointDir(null)
+    assert(sc.getCheckpointDir.isEmpty, "the checkpoint directory must clear")
+    assert(rb == rc, s"rounds differ local=$rb reliable=$rc")
+    assert(mb == mc, "labels differ between checkpoint kinds")
     assert(new java.io.File(dir).listFiles.nonEmpty,
-      "reliable mode must actually write checkpoint files")
-    // ADVICE r13: reliable df.checkpoint() re-runs the plan for the
-    // checkpoint-write job, so riding CollectMetrics through it double-
-    // counted (~2x frontierN/deltaN). Reliable mode now recomputes the
-    // sizes from the checkpointed result (ground truth by construction);
-    // local mode keeps the observe. The loops are deterministic, so the
-    // per-round sizes must agree EXACTLY between modes — a resurfaced 2x
-    // channel on either side fails this immediately.
+      "the reliable kind must actually write checkpoint files")
+    // both kinds run each round's plan once for its truncation, so the
+    // observed sizes count each row once; the loops are deterministic,
+    // so a size counted twice on either side fails this immediately
     assert(statsLocal.toList == statsRel.toList,
       s"per-round (frontierN, deltaN) diverged:\n local=$statsLocal\n rel=$statsRel")
     assert(statsLocal.last._2 == 0L, "final round must observe an empty change-set")

@@ -711,6 +711,26 @@ class PlanAuditSpec extends SparkSpec {
       "GraftExtensions.register outside Tables.scala:\n" + sites.mkString("\n"))
   }
 
+  test("one truncation seam: src/main checkpoints only in graft/Lineage.scala") {
+    // which kind of checkpoint a truncation takes (executor blocks, or
+    // files under the context's checkpoint directory) is one policy in
+    // graft.Lineage; a direct call elsewhere pins its site to one kind,
+    // and a setCheckpointDir changes the context for every later query
+    val call = """\.(localCheckpoint|checkpoint)\(|setCheckpointDir""".r
+    val sites = mainSources
+      .filterNot(_._1.getPath.endsWith("src/main/scala/graft/Lineage.scala"))
+      .flatMap { case (f, lines) =>
+        lines.zipWithIndex.collect {
+          case (l, i) if call.findFirstIn(l).isDefined &&
+            !l.trim.startsWith("//") && !l.trim.startsWith("*") &&
+            !l.trim.startsWith("/**") => s"${f.getName}:${i + 1}: ${l.trim}"
+        }
+      }
+    assert(sites.isEmpty,
+      "checkpoint calls outside graft/Lineage.scala (use Lineage.truncate):\n" +
+        sites.mkString("\n"))
+  }
+
   test("no copied blocks: no 6 consecutive code lines under operators occur twice") {
     // a scale path, oracle stage or fixture written out twice can be
     // fixed in one copy and missed in the other, and then a query and its

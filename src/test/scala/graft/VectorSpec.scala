@@ -538,31 +538,36 @@ class VectorSpec extends SparkSpec {
     val base = kmRandom(500, 29).selectExpr("vec_id",
       "transform(embedding, x -> CAST(x AS double)) AS v")
       .selectExpr("vec_id", "v", "sqrt(graft_vector_dot(v, v)) AS nrm")
-    def run(k: Option[Int]) = jobsOf(vq.kmeansSemDedup(base, k).collect().map(_.toString).sorted.toSeq)
-    val (derived, derivedJobs) = run(None)
-    val (given, givenJobs) = run(Some(vq.semDedupK(500)))
-    assert(derived == given && derived.nonEmpty)
-    assert(derivedJobs == givenJobs, s"derived k ran $derivedJobs jobs, given k $givenJobs")
+    val (rows, jobs) = jobsOf(vq.kmeansSemDedup(base).collect())
+    assert(rows.nonEmpty)
+    // the corpus fetch and the CC edge-list fetch, two broadcasts, two
+    // shuffle stages, the CC expand's and the keep aggregate's
+    // truncations, and the collect; a count to derive k would be a tenth
+    assert(jobs == 9, s"q123 over 500 vectors ran $jobs jobs")
   }
 
   test("q123 keeps the highest-quality member of each within-cell semantic group") {
     import spark.implicits._
-    // md5 order over {1,2,7} is 7 < 1 < 2, so k=2 seeds are {7, 1}:
-    // vector 2 (parallel to 1, scaled up — cosine 1.0, higher norm) joins
-    // seed 1's cell, the orthogonal noise vector 7 sits alone. The
+    // nine vectors derive k = 8, and vector 2 has the largest md5 of the
+    // nine ids, so the seeds are the other eight. Vector 2 (parallel to 1,
+    // scaled up — cosine 1.0, higher norm) joins seed 1's cell; the other
+    // seven are distinct ±0.5 Walsh rows, orthogonal to each other and to
+    // 1, each alone in its cell (7 is the alternating row). The
     // within-cell pair (1,2) must close into one group whose keeper is 2
     // — the argmax-quality member, not the min id.
-    val base = Seq(
-      (1L, Array.fill(64)(0.5)),
-      (2L, Array.fill(64)(0.6)),
-      (7L, Array.tabulate(64)(i => if (i % 2 == 0) 0.5 else -0.5)))
+    val walsh = Seq(4L, 6L, 7L, 9L, 11L, 12L, 13L).zip(Seq(2, 3, 1, 4, 5, 6, 7))
+      .map { case (id, row) =>
+        (id, Array.tabulate(64)(i => if (Integer.bitCount(i & row) % 2 == 0) 0.5 else -0.5))
+      }
+    val base = (Seq((1L, Array.fill(64)(0.5)), (2L, Array.fill(64)(0.6))) ++ walsh)
       .toDF("vec_id", "v")
       .selectExpr("vec_id", "v", "sqrt(graft_vector_dot(v, v)) AS nrm")
-    val out = operators.VectorQueries.kmeansSemDedup(base, k = Some(2), iters = 3)
+    assert(operators.VectorQueries.semDedupK(9) == 8)
+    val out = operators.VectorQueries.kmeansSemDedup(base, iters = 3)
       .collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))))
       .toMap
-    assert(out.keySet == Set(1L, 7L), s"clusters: ${out.keySet}")
+    assert(out.keySet == Set(1L, 4L, 6L, 7L, 9L, 11L, 12L, 13L), s"clusters: ${out.keySet}")
     val (km1, keep1, q1, n1) = out(1L)
     assert(keep1 == 2L, s"argmax must override min-id: kept $keep1")
     assert(n1 == 2L && km1 == 1L)
