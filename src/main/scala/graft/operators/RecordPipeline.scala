@@ -32,7 +32,11 @@ object RecordPipeline {
     * One native [[graft.plans.KplDeaggregate]] Generate node (round 21):
     * the r7 form paid two ScalaUDF crossings per frame plus a
     * reflection-encoded child array that `explode` then re-walked; the
-    * generator emits child InternalRows directly.
+    * generator emits child InternalRows directly, from
+    * [[graft.kpl.KplCodec.children]]'s one linear pass over the frame
+    * bytes. The decoder it replaced held the key table in a `List` and
+    * indexed it once per child, quadratic in the frame's child count
+    * (182 ms → 10 ms single-threaded over 100k children at 500 per frame).
     */
   def deaggregate(df: DataFrame): DataFrame = {
     val parentCols = df.columns.filterNot(c => c == "data" || c == "partitionKey")

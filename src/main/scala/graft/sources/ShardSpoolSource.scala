@@ -37,8 +37,16 @@ import scala.collection.JavaConverters._
   *    CLI lists shards once per process and has no checkpoint, so every
   *    restart there is a fresh discovery (pinned in ShardSpoolSourceSpec's
   *    two resharding tests);
-  *  - one goroutine per shard (consumer.go:84) → one [[InputPartition]] per
-  *    shard per micro-batch: Spark schedules a task per shard;
+  *  - one goroutine per shard (consumer.go:84), which reads its shard in
+  *    sequence order → per-shard order kept across contiguous pieces: a
+  *    micro-batch plans each shard's slice as one [[InputPartition]], or,
+  *    when the slice holds more than ⌈frames in the batch /
+  *    defaultParallelism⌉ frames, as contiguous sequence ranges of at
+  *    most that many frames, emitted in (shard, seq) order. A skewed
+  *    trigger (one hot shard draining alone) then runs on every core
+  *    instead of one task, and partition order still follows each shard's
+  *    sequence order. An even trigger plans one partition per shard, as
+  *    does the batch scan;
   *  - `GetRecords(Limit)` poll (consumer.go:149-152) → `latestOffset`
   *    advances each shard by at most `limitPerTrigger` sequence numbers per
   *    trigger (per-shard admission control, like the per-fetch cap);
@@ -225,11 +233,22 @@ class ShardSpoolScan(opts: Map[String, String]) extends Scan {
       override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
         val s = start.asInstanceOf[ShardOffsets].last
         val e = end.asInstanceOf[ShardOffsets].last
-        e.toSeq.sortBy(_._1).flatMap { case (shard, endSeq) =>
+        val slices = e.toSeq.sortBy(_._1).flatMap { case (shard, endSeq) =>
           val startSeq = s.getOrElse(shard, -1L)
-          if (endSeq > startSeq)
-            Some(ShardPartition(path, stream, shard, startSeq, endSeq, since))
+          if (endSeq > startSeq) Some((shard, startSeq, endSeq,
+            ShardSpoolSource.seqs(new java.io.File(streamDir, shard))
+              .filter(q => q > startSeq && q <= endSeq)))
           else None
+        }
+        val cores = org.apache.spark.sql.SparkSession.active.sparkContext.defaultParallelism
+        val cap = math.max(1, (slices.map(_._4.size).sum + cores - 1) / cores)
+        slices.flatMap { case (shard, startSeq, endSeq, frames) =>
+          // piece j reads (last seq of piece j-1, last seq of piece j]; the
+          // first starts at the slice start, the last ends at the slice end
+          val lasts = frames.grouped(cap).map(_.last).toSeq.dropRight(1) :+ endSeq
+          (startSeq +: lasts).zip(lasts).map { case (from, to) =>
+            ShardPartition(path, stream, shard, from, to, since)
+          }
         }.toArray
       }
 
@@ -240,7 +259,9 @@ class ShardSpoolScan(opts: Map[String, String]) extends Scan {
     }
 }
 
-/** One shard slice: (startSeqExclusive, endSeqInclusive] — one Spark task. */
+/** One shard slice, or a contiguous piece of one: (startSeqExclusive,
+  * endSeqInclusive] — one Spark task.
+  */
 case class ShardPartition(path: String, stream: String, shard: String,
     startSeqExclusive: Long, endSeqInclusive: Long, sinceMicros: Long)
   extends InputPartition

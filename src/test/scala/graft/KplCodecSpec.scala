@@ -137,6 +137,68 @@ class KplCodecSpec extends AnyFunSuite {
     assert(!KplCodec.md5Ok(badMd5) && KplCodec.deaggregate(badMd5).nonEmpty)
   }
 
+  // ---- large frames: the decoder is one linear pass, whatever the size
+  private val bigKeys = (0 until 40).map(k => f"pk-$k%05d")
+  private def bigChild(i: Int): Array[Byte] = Array.tabulate(i % 300)(j => ((i * 31 + j * 7) & 0xFF).toByte)
+  private val bigRecords = (0 until 2000).map(i =>
+    KplCodec.SubRecord(i % 40, None, bigChild(i), Nil))
+  /** The 2,000-child body over a 40-entry key table; `last` (a Record
+    * message body under 128 bytes) replaces its last record when given.
+    */
+  private def bigBody(last: Option[Array[Byte]] = None): Array[Byte] = last match {
+    case None => KplCodec.encodeBody(KplCodec.AggregatedRecord(bigKeys, Nil, bigRecords))
+    case Some(rec) =>
+      KplCodec.encodeBody(KplCodec.AggregatedRecord(bigKeys, Nil, bigRecords.init)) ++
+        Array[Byte](0x1A, rec.length.toByte) ++ rec
+  }
+
+  test("a 2,000-child frame with 40 repeated keys round-trips positionally") {
+    val input = (0 until 2000).map(i => bigKeys(i % 40) -> bigChild(i))
+    val out = KplCodec.deaggregate(KplCodec.aggregate(input))
+    assert(out.map(_._1) == input.map(_._1))
+    assert(out.map(_._2.toSeq) == input.map(_._2.toSeq))
+    val viaTable = KplCodec.deaggregate(KplCodec.frame(bigBody()))
+    assert(viaTable.map(_._1) == input.map(_._1))
+    assert(viaTable.map(_._2.toSeq) == input.map(_._2.toSeq))
+  }
+
+  test("a 2,000-child frame drops whole when its last child is bad") {
+    val d = b("d")
+    // records[1999] = { partition_key_index = 40 (table has 40), data = "d" }
+    val outOfRange = Array[Byte](0x08, 40, 0x1A, 0x01) ++ d
+    // data claims 5 bytes, 2 remain in the record
+    val truncatedData = Array[Byte](0x08, 0x00, 0x1A, 0x05) ++ b("ab")
+    // one Tag holding only a value (Tag.key is required)
+    val keylessTag = Array[Byte](0x08, 0x00, 0x1A, 0x01) ++ d ++ Array[Byte](0x22, 0x03, 0x12, 0x01) ++ b("v")
+    val valid = Array[Byte](0x08, 0x00, 0x1A, 0x01) ++ d
+    assert(KplCodec.deaggregate(KplCodec.frame(bigBody(Some(valid)))).size == 2000)
+    for ((what, last) <- Seq("out-of-range key index" -> outOfRange,
+        "truncated data" -> truncatedData, "Tag without a key" -> keylessTag))
+      assert(KplCodec.deaggregate(KplCodec.frame(bigBody(Some(last)))) == Nil, what)
+  }
+
+  test("an unknown top-level field between records is skipped") {
+    val first = KplCodec.encodeBody(KplCodec.AggregatedRecord(bigKeys, Nil, bigRecords.take(1000)))
+    val rest = KplCodec.encodeBody(KplCodec.AggregatedRecord(Nil, Nil, bigRecords.drop(1000)))
+    val unknown = Array[Byte](0x4A, 0x03) ++ b("xyz") ++ // field 9, length-delimited
+      Array[Byte](0x78, 0x2A) ++                          // field 15, varint
+      Array[Byte](0x31) ++ Array.fill[Byte](8)(7) ++      // field 6, fixed64
+      Array[Byte](0x3D) ++ Array.fill[Byte](4)(7)         // field 7, fixed32
+    val out = KplCodec.deaggregate(KplCodec.frame(first ++ unknown ++ rest))
+    assert(out.map(_._1) == (0 until 2000).map(i => bigKeys(i % 40)))
+    assert(out.map(_._2.toSeq) == (0 until 2000).map(i => bigChild(i).toSeq))
+  }
+
+  test("aggregate's bytes are pinned: 1,000 children, sha256") {
+    val children = (0 until 1000).map { i =>
+      (if (i % 97 == 0) s"schlüssel-$i" else f"pk-${i % 40}%05d") -> bigChild(i)
+    }
+    val sha = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(KplCodec.aggregate(children)).map(x => f"${x & 0xFF}%02x").mkString
+    // recorded from the ByteArrayOutputStream encoder this one replaced
+    assert(sha == "51f9a07373ea63bbee135f115e661ebed1744ad96c92d2a7fb394f0c9973f480")
+  }
+
   // ---- property: round trip over arbitrary keys and binary payloads
   test("property: deaggregate(aggregate(children)) == children") {
     val genChild = for {

@@ -117,6 +117,69 @@ class ShardSpoolSourceSpec extends SparkSpec {
     assert(batch.count() == 3)
   }
 
+  /** One hot shard (12 records) and three cold ones (2 each). */
+  private def skewed(dir: String): Unit = {
+    (1 to 12).foreach(i => put(dir, "s1", "shard-0", i, s"k$i", s"hot-$i"))
+    for (sh <- 1 to 3; i <- 1 to 2) put(dir, "s1", s"shard-$sh", 100 * sh + i, s"c$sh$i", s"cold-$sh-$i")
+  }
+
+  /** (shardId, sequenceNumber) of a `consoleVerbose` line. */
+  private def shardSeq(line: String): (String, Long) = {
+    val f = line.split(" ") // date, time, stream, shardId, sequenceNumber, message
+    (f(3), f(4).toLong)
+  }
+
+  /** Drains `s1` with AvailableNow and limitPerTrigger 10 through
+    * `consoleVerbose`: per micro-batch with rows, each input partition's
+    * lines in partition order.
+    */
+  private def drainPartitions(dir: String): Seq[Seq[Seq[String]]] = {
+    val batches = scala.collection.mutable.ArrayBuffer.empty[Seq[Seq[String]]]
+    val sink: (DataFrame, Long) => Unit = (b, _) => {
+      val parts = b.rdd.glom().collect().map(_.map(_.getString(0)).toSeq).toSeq
+      if (parts.exists(_.nonEmpty)) batches += parts
+    }
+    val q = operators.RecordPipeline.consoleVerbose(reader(dir,
+        "iterator" -> "TRIM_HORIZON", "limitPerTrigger" -> "10"))
+      .writeStream.trigger(Trigger.AvailableNow()).foreachBatch(sink).start()
+    assert(q.awaitTermination(60000), "the drain did not finish within 60 s")
+    batches.toSeq
+  }
+
+  test("skewed spool: same rows as one partition per shard, each shard in sequence order") {
+    val dir = tmp(); skewed(dir)
+    val (name, _) = runAll(operators.RecordPipeline.consoleVerbose(reader(dir,
+      "iterator" -> "TRIM_HORIZON", "limitPerTrigger" -> "10")))
+    val drained = spark.table(name).collect().map(_.getString(0)).toSeq
+    val batch = spark.read.format("graft-shards").option("path", dir).option("stream", "s1").load()
+    assert(batch.rdd.getNumPartitions == 4)
+    val perShard = operators.RecordPipeline.consoleVerbose(batch).collect().map(_.getString(0)).toSeq
+    assert(drained.sorted == perShard.sorted)
+    for ((shard, seqs) <- drained.map(shardSeq).groupBy(_._1))
+      assert(seqs.map(_._2) == seqs.map(_._2).sorted, s"$shard out of sequence order: $seqs")
+  }
+
+  test("skewed trigger splits the hot shard into contiguous pieces") {
+    val dir = tmp(); skewed(dir)
+    val batches = drainPartitions(dir)
+    assert(batches.size == 2, batches.toString)
+    val first = batches.head.filter(_.nonEmpty)
+    assert(first.forall(p => p.map(l => shardSeq(l)._1).distinct.size == 1), first.toString)
+    val hot = first.filter(p => shardSeq(p.head)._1 == "shard-0")
+    // 16 frames on 4 cores: pieces of at most 4 frames
+    assert(hot.size > 1 && hot.forall(_.size <= 4), hot.toString)
+    assert(hot.flatten.map(l => shardSeq(l)._2) == (1L to 10L))
+  }
+
+  test("even slices plan one partition per shard") {
+    val dir = tmp()
+    for (sh <- 0 to 3; i <- 1 to 2) put(dir, "s1", s"shard-$sh", 10 * sh + i, s"k$sh$i", s"r$sh$i")
+    val batches = drainPartitions(dir)
+    assert(batches.size == 1)
+    assert(batches.head.map(_.map(l => shardSeq(l)._1).distinct) ==
+      (0 to 3).map(sh => Seq(s"shard-$sh")))
+  }
+
   test("checkpoint resume continues from committed shard offsets") {
     val dir = tmp(); seed(dir)
     val ckpt = s"$dir/_ckpt"; val out = s"$dir/_out"
